@@ -16,12 +16,15 @@ Pipelines + truths:
 - EYAGapAnalysis          -> waterfall closes exactly on the OA AEP,
                              fed by the OTHER pipelines' outputs
 
-Marked slow: builds ~420k SCADA rows and runs six pipelines (~ a few
-minutes); deselect with `-m "not slow"`.
+The six-pipeline test is marked slow: it builds ~420k SCADA rows and
+runs six pipelines (~ a few minutes); deselect with `-m "not slow"`.
+The yaw power-bin filter pin reuses the same plant in the quick tier.
 """
 
 import numpy as np
+import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from openoa_spark.analysis.aep import MonteCarloAEP
 from openoa_spark.analysis.electrical_losses import electrical_losses
@@ -29,6 +32,7 @@ from openoa_spark.analysis.eya import EYAEstimate, EYAGapAnalysis, OAResults
 from openoa_spark.analysis.tie import TurbineLongTermGrossEnergy
 from openoa_spark.analysis.wake_losses import WakeLosses
 from openoa_spark.analysis.yaw import StaticYawMisalignment
+from openoa_spark.operators import filters
 from openoa_spark.plant import PlantData
 from tests.windfixtures import make_end_to_end_plant
 
@@ -152,3 +156,47 @@ def test_end_to_end_six_pipelines(spark, plant, tables):
     assert data[0] == pytest.approx(eya.aep)
     assert sum(data) == pytest.approx(oa.aep)
     assert gap.waterfall[-1] == pytest.approx(oa.aep)
+
+
+def test_yaw_power_bin_filter_matches_bin_filter(plant):
+    """The yaw filter's one-pass sorted median/MAD keeps exactly the rows
+    that the general bounded-memory ``filters.bin_filter`` keeps, on
+    groups larger than the bracket median's whole-group cap (5000
+    rows), for two (max_power_filter, mad) draws batched as two sims."""
+    yaw = StaticYawMisalignment(plant)
+    pairs = [(0.95, 7.0), (0.92, 4.0)]
+    base = yaw._base(spread=False)
+    biggest = (
+        yaw._power_binned(base, [m for m, _ in pairs])
+        .where(F.col("_pbin").isNotNull())
+        .groupBy("_mpf", "asset_id", "_pbin").count()
+        .agg(F.max("count")).first()[0]
+    )
+    assert biggest > 5000
+    kept = yaw._kept([
+        {"sim": i, "mpf": m, "mad": d, "bseed": None}
+        for i, (m, d) in enumerate(pairs)
+    ])
+    n_base = base.count()
+    cap = F.col("rated_power")
+    for i, (mpf, mad) in enumerate(pairs):
+        bin_width_frac = (mpf - yaw.min_power_filter) / yaw.num_power_bins
+        old = filters.bin_filter(
+            base.withColumn(
+                "_p_norm",
+                (F.col("WTUR_W") - F.lit(yaw.min_power_filter) * cap)
+                / (F.lit(bin_width_frac) * cap),
+            ),
+            bin_col="_p_norm", value_col="WMET_HorWdSpd", bin_width=1.0,
+            threshold=mad, center_type="median", threshold_type="mad",
+            direction="all", keys=["asset_id"],
+            bin_min_col=F.lit(0.0), bin_max_col=F.lit(float(yaw.num_power_bins)),
+            flag_col="_flag",
+        ).where(~F.col("_flag")).select("asset_id", "time").toPandas()
+        new = kept.where(F.col("sim") == i).select("asset_id", "time").toPandas()
+        assert 0 < len(old) < n_base, (mpf, mad)
+        key = ["asset_id", "time"]
+        pd.testing.assert_frame_equal(
+            new.sort_values(key, ignore_index=True),
+            old.sort_values(key, ignore_index=True),
+        )

@@ -4,6 +4,7 @@
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql.types import IntegerType
 
 from openoa_spark.analysis.eya import EYAEstimate, EYAGapAnalysis, OAResults
 from openoa_spark.analysis.yaw import StaticYawMisalignment
@@ -112,6 +113,34 @@ def test_batched_equals_per_sim(plant):
     c2 = b[b["sim"] == 2].set_index(["asset_id", "ws_bin", "vane_bin"])
     joined = c0.join(c2, lsuffix="_0", rsuffix="_2", how="inner")
     assert (joined["n_0"] != joined["n_2"]).any()
+
+
+def test_bootstrap_seed_stays_int(plant):
+    """The bootstrap weight hashes the sim's seed with xxhash64, which
+    hashes an int differently from a bigint; the sim fan-out keeps the
+    seed int so the weights (and every bootstrapped cell) stay the
+    same."""
+    kept = StaticYawMisalignment(plant)._kept(
+        [{"sim": 0, "mpf": 0.95, "mad": 7.0, "bseed": 12345}]
+    )
+    assert kept.schema["bseed"].dataType == IntegerType()
+    assert kept.schema["sim"].dataType == IntegerType()
+
+
+@pytest.mark.parametrize(
+    "kw, name",
+    [
+        ({}, "max_power_filter"),
+        ({"max_power_filter": (0.92, 0.98)}, "power_bin_mad_thresh"),
+    ],
+)
+def test_uq_needs_ranges(kw, name):
+    """UQ draws each filter parameter from a (low, high) range; a scalar
+    is rejected up front, naming the parameter."""
+    with pytest.raises(ValueError, match=rf"{name} as a \(low, high\) range"):
+        StaticYawMisalignment(None, turbine_ids=["T01"], UQ=True, **kw)
+    # the scalar defaults stay valid without UQ
+    StaticYawMisalignment(None, turbine_ids=["T01"], **kw)
 
 
 def test_eya_gap_waterfall():
