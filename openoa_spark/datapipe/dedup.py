@@ -9,6 +9,7 @@ from equi-joins on (band, bucket-hash) — never an all-pairs crossJoin.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
@@ -804,37 +805,8 @@ def near_dedup_keep_best(
     members = scored.join(comp, scored[id_col] == F.col("_cid")).select(
         "component", F.col(id_col).alias("_id"), "_score"
     )
-    import os as _os
-
-    if _os.environ.get("NDKB_SHAPE") == "1":
-        # A/B branch (r12): the pre-r12 assembly — anti-join for the
-        # unpaired docs UNION semi-join for the winners, i.e. TWO full
-        # scans + shuffles of the corpus table.
-        winners = (
-            members.groupBy("component")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("_score").alias("s"), (-F.col("_id")).alias("n")
-                    )
-                ).alias("w")
-            )
-            .select((-F.col("w.n")).alias("_win_id"))
-        )
-        unpaired = df.join(comp, df[id_col] == F.col("_cid"), "left_anti")
-        kept_winners = df.join(
-            winners, df[id_col] == F.col("_win_id"), "left_semi"
-        )
-        return unpaired.unionByName(kept_winners)
-    # r12 (§2.2/§2.4 — one pass instead of two): kept = unpaired ∪
-    # winners = df \ losers, with losers = clustered ids that are not
-    # their component's argmax. The loser set is computed entirely on
-    # the id-grain members table (never text), then removed with ONE
-    # anti-join — the old anti(comp) ∪ semi(winners) assembly scanned
-    # AND shuffled the corpus table twice (plans/r12/
-    # near_dedup_keep_best_docs_{before,after}.txt: 2 SMJ legs over
-    # documents → 1). Row-identical: winners ⊆ clustered, branches
-    # were disjoint, and each df row appears at most once either way.
+    # kept = df \ losers: one anti-join, one corpus scan (1978776;
+    # plans/r12/near_dedup_keep_best_docs_{before,after}.txt)
     winners = (
         members.groupBy("component")
         .agg(
@@ -1093,42 +1065,17 @@ def chunk_dedup(
     own kept positions — O(chunks-per-doc) per chunk, bounded by
     document length, never by corpus size. The chunk table feeds both
     the ownership path and the reassembly join and is lineage-cut
-    once with a SERIALIZED lazy checkpoint (r12 — supersedes the r9
-    "recompute per consumer" receipt, which was measured with the
-    deserialized default storage level: the compact serialized level
-    flips the A/B, ~2× at the factor-48 probe and neutral-to-better
-    at sf0.1; see the inline comment for numbers). Broadcast of
-    kept_sets was measured and LOSES (1.54 s vs 1.11 s at sf0.1, r9)
-    because the reassembly aggregate then cannot reuse the join's
-    hash partitioning.
+    once with a SERIALIZED lazy checkpoint. Broadcast of kept_sets
+    loses: the reassembly aggregate then cannot reuse the join's hash
+    partitioning (receipts: OPTIMIZATION_r12.md).
     """
-    from openoa_spark.datapipe.text import tokens
     chunks = _chunk_table(df, text_col, id_col, chunk_tokens)
-    import os as _os
-
-    if _os.environ.get("CHUNK_CKPT") != "0":
-        # r12: SERIALIZED lazy checkpoint of the chunk table — the
-        # two consumers (ownership + reassembly) previously recomputed
-        # the tokenize/slice/explode chain from parquet per the r9
-        # receipt ("recompute 1.11 s vs checkpoint 1.26 s"), but that
-        # receipt used the DESERIALIZED default level. With the
-        # compact serialized level (StorageLevel.MEMORY_AND_DISK in
-        # PySpark) the r12 interleaved A/B flips it: factor-48 probe
-        # 3/3 pairs, ~2× (medians 6.16 → 2.94 s); sf0.1 4/7 pairs,
-        # medians 1.10 → 0.99 s. CHUNK_CKPT=0 restores the recompute
-        # shape for re-measurement.
-        from pyspark import StorageLevel
-
-        chunks = chunks.localCheckpoint(
-            eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
-        )
+    # serialized level: two consumers, ~2x at ×48 (receipts: OPTIMIZATION_r12.md)
+    chunks = chunks.localCheckpoint(
+        eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
+    )
     hashed = _chunk_fingerprints(chunks)
-    # r11 negative result: replacing min(struct) with a packed
-    # DECIMAL(38,0) min (id·2³¹ + pos) to turn the Sort+SortAggregate
-    # pair into a HashAggregate was measured interleaved at sf0.1 and
-    # LOST 5/5 pairs (median 1.04 s → 1.49 s): per-row decimal-38
-    # multiply/add under ANSI costs more than the per-partition sort
-    # of fixed-width fingerprint tuples it removes.
+    # packed-decimal min instead of min(struct) lost 5/5 (OPTIMIZATION_r11.md)
     owner = hashed.groupBy("_h1", "_h2").agg(
         F.min(F.struct("_id", "pos")).alias("_o")
     )
@@ -1147,11 +1094,10 @@ def _chunk_table(
     n_chunks >= 1 and sequence() never sees stop < start (which would
     COUNT DOWN); null text -> null array -> posexplode drops the row.
 
-    ``checkpoint=False`` (the corpus-scale default) lets each consumer
-    recompute the map-only chunk pipeline from the source scan — see
-    chunk_dedup's docstring for the measured tradeoff. Pass True when
-    the input is NOT a cheap re-scannable source (e.g. the incremental
-    path's already-transformed micro-batch)."""
+    ``checkpoint=True`` lineage-cuts the table at the default storage
+    level, for inputs that are NOT a cheap re-scannable source (e.g.
+    the incremental path's already-transformed micro-batch);
+    chunk_dedup takes its own serialized cut instead."""
     from openoa_spark.datapipe.text import tokens
     from openoa_spark.session import spread_small_input
 

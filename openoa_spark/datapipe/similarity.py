@@ -26,26 +26,22 @@ def dot(a: Column, b: Column, dim: int | None = None) -> Column:
     instead of the fold. This is the fold's EXACT computation sequence
     — same association, same leading 0.0 (so even the sign of an
     all-negative-zero sum matches) — but as plain codegen arithmetic
-    with ZERO allocations, where the fold allocates a dim-element
-    zip_with array per evaluation. In the quadratic pair joins that
-    allocation happens per PAIR (~5.8e9 times in the ×48 ann_recall
-    leg), and removing it is a further ~2× after the norm hoist
-    (receipts in SEMDEDUP48_r12.json). CONTRACT: pass ``dim`` only
-    when every vector has exactly ``dim`` elements — for a shorter
-    array the fold yields a partial sum while ``element_at`` past the
-    end yields NULL (and a longer array's tail would be ignored); all
-    embedding tables here are fixed-width so the sites below pass the
-    plane/centroid width. DOT_UNROLL=0 restores the fold everywhere
-    for A/B re-measurement.
+    with no per-evaluation zip_with array (receipts in
+    SEMDEDUP48_r12.json). CONTRACT: pass ``dim`` only when every
+    vector has exactly ``dim`` elements. On a length mismatch the two
+    paths differ: the fold pads the shorter array with NULL, so the
+    product and the whole sum are NULL; the unroll ignores a longer
+    array's tail, and for a shorter array ``element_at`` past the end
+    RAISES ``INVALID_ARRAY_INDEX_IN_ELEMENT_AT`` under ANSI mode (the
+    Spark 4.1 default) and yields NULL only with ANSI off. All
+    embedding tables here are fixed-width, so the sites below pass the
+    plane/centroid width.
     """
     if dim is not None:
-        import os as _os
-
-        if _os.environ.get("DOT_UNROLL") != "0":
-            expr = F.lit(0.0)
-            for i in range(1, dim + 1):
-                expr = expr + F.element_at(a, i) * F.element_at(b, i)
-            return expr
+        expr = F.lit(0.0)
+        for i in range(1, dim + 1):
+            expr = expr + F.element_at(a, i) * F.element_at(b, i)
+        return expr
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
@@ -1211,24 +1207,8 @@ def kmeans_fit(
     base = df.select(
         F.col(id_col).alias("_id"), _micros_vec(vec_col).alias("_mic")
     )
-    import os as _os
-
-    if _os.environ.get("KMEANS_MAT") in ("0", "1"):
-        # interleaved A/B hook (tools/ab_query.py) — overrides the
-        # caller's choice so one registry query can time both shapes
-        materialize = _os.environ["KMEANS_MAT"] == "1"
     if materialize:
-        # r12 (VERDICT item 3): Lloyd's loop is iters+1 actions over
-        # `base` (seed collect, iters-1 stats collects, the final
-        # assignment the caller consumes) and each one re-evaluates
-        # the upstream lineage — for a parquet source that is iters+1
-        # scans + micros conversions. The lazy cut materializes base
-        # ONCE (the seed collect's action); every later pass reads
-        # the stored (id, mic) blocks. OPT-IN because the barrier
-        # pins an input-sized table in executor storage and breaks
-        # scan pipelining — the q2-class receipt shows that losing
-        # for cheap single-pass lineages — so only multi-pass callers
-        # whose interleaved A/B won (registry kmeans family) set it.
+        # one lazy cut for iters+1 passes (receipts: OPTIMIZATION_r12.md)
         base = base.localCheckpoint(eager=False)
     seed_rows = base.orderBy("_id").limit(k).collect()
     if not seed_rows:
@@ -1315,7 +1295,7 @@ def semantic_dedup(
     k: int = 8,
     iters: int = 3,
     threshold: float = 0.25,
-    salt: int | None = None,
+    salt: int = 16,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): k-means-cluster the embeddings,
     then treat each CLUSTER as the candidate bucket — exact cosine is
@@ -1348,7 +1328,7 @@ def _semantic_pairs(
     k: int,
     iters: int,
     threshold: float,
-    salt: int | None,
+    salt: int = 16,
 ) -> DataFrame:
     """The within-cluster cosine pair join of :func:`semantic_dedup`,
     exposed so its plan (the norm hoist + salted keys) can be
@@ -1357,7 +1337,8 @@ def _semantic_pairs(
     # (driver-side, k x dim) give the static vector width the unrolled
     # dot needs — same fit, zero extra work
     asg, _cents = kmeans_fit(df, vec_col, id_col, k=k, iters=iters)
-    _dim = len(_cents[0])
+    # empty input -> no centroids; dim=None falls back to the fold
+    _dim = len(_cents[0]) if _cents else None
     # norm hoisted per ROW (see norm() note): with k fixed, expected
     # cluster size is n/k, so the within-cluster pair count — and with
     # it the per-pair cosine cost — grows quadratically with corpus
@@ -1374,27 +1355,7 @@ def _semantic_pairs(
         F.col("_id").alias("id_b"), F.col("_v").alias("_vb"),
         F.col("_n").alias("_nb"), "cluster",
     )
-    # Deterministic hot-key salt (guide §2.5): the join has only k
-    # distinct keys, so at most k reduce tasks ever do pair work and
-    # the biggest cluster IS the stage's wall-clock (measured at ×48:
-    # two straggler tasks held the stage for ~30 of its 54 min; AQE
-    # skew-split cannot engage because each cluster's INPUT partition
-    # is far under skewedPartitionThresholdInBytes — the blowup is in
-    # the join OUTPUT, which AQE cannot see). a-rows take salt =
-    # pmod(xxhash64(id), S) — deterministic, so retries are safe
-    # (§2.5's rand() warning) — and b-rows are replicated to every
-    # salt, so each (a, b) pair meets exactly once, at (cluster,
-    # salt(a)): the pair set, and everything downstream, is identical.
-    # Cost: b-side shuffle bytes ×S — the payload is one vector per
-    # row, so this trades bounded network for k·S-way parallelism.
-    # SEMDEDUP_SALT=0 restores the unsalted join for re-measurement
-    # ("1" selects the salted default — the ab_query experimental-flag
-    # convention; any other integer sets S directly).
-    if salt is None:
-        import os as _os
-
-        v = _os.environ.get("SEMDEDUP_SALT")
-        salt = 16 if v in (None, "1") else int(v)
+    # hot-key salt, same pair set (e22c0b1; receipts: SEMDEDUP48_r12.json)
     if salt > 1:
         a = a.withColumn(
             "_salt", F.pmod(F.xxhash64("id_a"), F.lit(salt)).cast("int")
@@ -1867,14 +1828,8 @@ def pq_fit(
     base = df.select(
         F.col(id_col).alias("_id"), _micros_vec(vec_col).alias("_mic")
     )
-    import os as _os
-
-    if _os.environ.get("KMEANS_MAT") in ("0", "1"):
-        # shared A/B hook with kmeans_fit (tools/ab_query.py)
-        materialize = _os.environ["KMEANS_MAT"] == "1"
     if materialize:
-        # r12: same iters+1-actions shape as kmeans_fit — see its
-        # materialize= note; opt-in for the same reasons
+        # same lazy cut as kmeans_fit (receipts: OPTIMIZATION_r12.md)
         base = base.localCheckpoint(eager=False)
     seed_rows = base.orderBy("_id").limit(k).collect()
     if not seed_rows:

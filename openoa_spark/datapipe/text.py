@@ -505,13 +505,13 @@ def char_bigram_lm_scores(
     templated/repetitive documents score low, character soup scores
     high, and outliers on either tail are curation candidates.
 
-    Scale shape: one explode to (id, bigram) and ONE aggregate to
-    per-doc bigram counts (map-side combined; the shuffle is bounded
-    by docs x observed-alphabet², not corpus chars). The global model
-    is a second tiny aggregate over that table — bounded by alphabet²
-    rows — broadcast back for the scoring join. The counts table
-    feeds both consumers, so it is lineage-cut once (lazy
-    localCheckpoint) rather than recomputing the explode.
+    Scale shape: per-doc bigram counts are computed inside the row
+    (sort the doc's packed-bigint bigram array, run-length encode it),
+    so the counts are a map-only lineage with no corpus-grain
+    exchange. The doc-grain run arrays are lineage-cut once (lazy
+    localCheckpoint) and feed both consumers: the global model, a tiny
+    aggregate bounded by alphabet² rows, broadcast back for the
+    scoring join.
 
     Determinism: per-bigram log2 probabilities are rounded to 6
     decimals and fixed as DECIMAL(18,6); per-doc totals are exact
@@ -537,249 +537,84 @@ def char_bigram_lm_scores(
     c = F.col(text_col)
     ch = char_array(c)
     n_ch = F.size(ch)
-    import os as _os
-
-    if _os.environ.get("LM_BIGRAM_STR") == "1":
-        # A/B branch: the pre-r12 STRING bigram key (2-char concat).
-        grams = F.when(
-            F.length(c) >= 2,
-            F.zip_with(
-                F.slice(ch, 1, n_ch - 1),
-                F.slice(ch, 2, n_ch - 1),
-                lambda x, y: F.concat(x, y),
+    # packed-bigint bigram key cp1·2²¹ + cp2 (code points ≤ 0x10FFFF < 2²¹,
+    # a bijection with the 2-char string; receipts: OPTIMIZATION_r12.md)
+    cps = F.transform(ch, lambda x: F.ascii(x).cast("bigint"))
+    grams = F.when(
+        F.length(c) >= 2,
+        F.zip_with(
+            F.slice(cps, 1, n_ch - 1),
+            F.slice(cps, 2, n_ch - 1),
+            lambda x, y: x * F.lit(2097152).cast("bigint") + y,
+        ),
+    ).otherwise(F.array().cast("array<bigint>"))
+    # Per-doc counts by in-row RLE of the sorted bigram array (f8f3a1b;
+    # receipts: OPTIMIZATION_r12.md). Each intermediate gets its own
+    # projection so the lambdas below reference bound columns: a subtree
+    # inside a lambda is re-evaluated per element.
+    sorted_df = df.select(
+        F.col(id_col).alias("_id"), F.array_sort(grams).alias("_s")
+    )
+    s = F.col("_s")
+    n = F.size(s)
+    # 1-based end position of every run: i is an end iff i == n or
+    # s[i] != s[i+1] (try_element_at(s, n+1) is NULL; the OR's first
+    # operand is true exactly there). n == 0 (short/NULL text):
+    # sequence(1, 0) would COUNT DOWN ([1, 0]) — guard to NULL, which
+    # explode drops.
+    ends_df = sorted_df.select(
+        "_id",
+        "_s",
+        F.when(
+            n > 0,
+            F.filter(
+                F.sequence(F.lit(1), n),
+                lambda i: (i == n)
+                | (F.element_at(s, i) != F.try_element_at(s, i + 1)),
             ),
-        ).otherwise(F.array().cast("array<string>"))
-    else:
-        # Packed-bigint bigram key (r12, guide §2.3 narrower types /
-        # §8 shuffle keys not payloads): cp1·2²¹ + cp2 over full code
-        # points (ascii() returns the code point, ≤ 0x10FFFF < 2²¹,
-        # including non-BMP — verified 𝄞→119070), a BIJECTION with
-        # the 2-char concat string, so the (id, bigram) groups — and
-        # therefore every count, probability and per-doc score — are
-        # bit-identical. What changes is the physical row: the
-        # corpus-grain explode/aggregate/shuffle/checkpoint carries a
-        # fixed-width long instead of a var-length UTF8String (16+ B
-        # pointer+payload per row), hash/compare on the agg key is
-        # integer not bytes, and the factor-48 leg that OOM'd
-        # unrolling string rows fits comfortably. The model join key
-        # narrows the same way. r12 interleaved A/B: sf0.1 a wash
-        # inside a noisy window (medians 3.00 packed vs 2.83 string,
-        # 2/7 pairs — the extra per-char ascii() pass offsets the
-        # narrower row while everything fits in cache); factor-48
-        # medians 40.8 packed vs 48.4 string (clean pairs 2/3, the
-        # third a 531 s GC outlier) — the win is at scale, where the
-        # shuffled/cached bytes dominate.
-        cps = F.transform(ch, lambda x: F.ascii(x).cast("bigint"))
-        grams = F.when(
-            F.length(c) >= 2,
-            F.zip_with(
-                F.slice(cps, 1, n_ch - 1),
-                F.slice(cps, 2, n_ch - 1),
-                lambda x, y: x * F.lit(2097152).cast("bigint") + y,
+        ).alias("_ends"),
+    )
+    e_col = F.col("_ends")
+    # lagged ends (0-prefixed) -> run length = end - previous end
+    _lagged = F.concat(
+        F.array(F.lit(0)),
+        F.slice(e_col, 1, F.greatest(F.size(e_col) - 1, F.lit(0))),
+    )
+    rle_df = ends_df.select(
+        "_id",
+        F.zip_with(
+            e_col,
+            _lagged,
+            lambda e, p: F.struct(
+                F.element_at(s, e).alias("bigram"),
+                (e - p).cast("bigint").alias("c"),
             ),
-        ).otherwise(F.array().cast("array<bigint>"))
-    if _os.environ.get("LM_DC_RLE") != "0":
-        # DEFAULT shape (r12, guide §2.4 remove-shuffles / §1.2
-        # fix-the-algorithm): per-doc bigram counts computed INSIDE
-        # the row — sort the doc's bigram array, run-length encode
-        # it with higher-order functions, explode the (bigram, c)
-        # runs. The (id, bigram) groups are identical to the
-        # explode+groupBy shape (a doc's count of bigram b = length
-        # of b's run in the sorted array), so everything downstream
-        # is bit-identical — but dc becomes a MAP-ONLY lineage: the
-        # corpus-char-grain Exchange and both HashAggregates (whose
-        # partial-agg hash maps overflow and fall back to sorting at
-        # scale) disappear from the plan, and the lineage cut stores
-        # doc-grain run arrays instead of ~10² more exploded object
-        # rows. The per-row cost is one cache-local array_sort (~KBs)
-        # + three O(len) passes. Receipts (r12, factor-48 probe dir,
-        # LM_DC_RLE=0 restores the agg shape): identical fresh-session
-        # core_probe protocol (warmup + median of 3, noop sink) —
-        # agg 28.3 s @32c / 34.3 s @8c (core-scaling 1.21, the
-        # under-parallel stage VERDICT item 7 hunted); RLE 6.26 s
-        # @32c / 13.5 s @8c (scaling 2.15). Interleaved ab_query at
-        # ×48: medians 7.20 vs 7.29 (wash) but agg's reps are bimodal
-        # (6.1–7.2 s fast, 14.7/18.1 s GC-spike) while RLE is flat
-        # 7.1–7.6 s. At sf0.1 RLE pays the sort without the scale
-        # benefit: medians 1.06 (agg) vs 1.20 (RLE), 1/7 pairs — a
-        # ~0.14 s local floor cost accepted for the 4.5× scale win
-        # and restored core scaling (100 TB is the target, and the
-        # agg shape's concurrent partial-agg maps were the OOM/
-        # fallback hazard the string-key leg already demonstrated).
-        # Each intermediate lands in its OWN projection so lambda
-        # bodies below reference CHEAP bound columns: a non-trivial
-        # subtree referenced inside a higher-order-function lambda is
-        # re-evaluated per ELEMENT (array_sort inlined into the
-        # filter predicate ran once per sequence element — O(n² log
-        # n) per row, measured as a runaway first A/B), and
-        # CollapseProject keeps multi-referenced non-cheap aliases in
-        # their own Project instead of re-inlining them.
-        sorted_df = df.select(
-            F.col(id_col).alias("_id"), F.array_sort(grams).alias("_s")
-        )
-        s = F.col("_s")
-        n = F.size(s)
-        # 1-based end position of every run: i is an end iff i == n
-        # or s[i] != s[i+1] (try_element_at(s, n+1) is NULL; the
-        # OR's first operand is true exactly there, so the NULL
-        # comparison never decides). n == 0 (short/NULL text):
-        # sequence(1, 0) would COUNT DOWN ([1, 0]) and index an
-        # empty array — guard to NULL; explode drops the row exactly
-        # like the old explode-of-empty-grams did.
-        ends_df = sorted_df.select(
-            "_id",
-            "_s",
-            F.when(
-                n > 0,
-                F.filter(
-                    F.sequence(F.lit(1), n),
-                    lambda i: (i == n)
-                    | (F.element_at(s, i) != F.try_element_at(s, i + 1)),
-                ),
-            ).alias("_ends"),
-        )
-        e_col = F.col("_ends")
-        # lagged ends (0-prefixed) -> run length = end - previous end
-        _lagged = F.concat(
-            F.array(F.lit(0)),
-            F.slice(e_col, 1, F.greatest(F.size(e_col) - 1, F.lit(0))),
-        )
-        if _os.environ.get("LM_RLE_PRIM") == "1":
-            # A/B branch, measured and NOT adopted (r12 close): runs
-            # as TWO PRIMITIVE arrays instead of one array<struct>,
-            # struct re-formed transiently at explode time via
-            # arrays_zip. Hypothesis was per-element object pressure
-            # in the checkpoint; interleaved ×48 A/B says WASH — 32c
-            # medians 6.38 (struct) vs 6.27 (prim), 4/7 pairs; 8c
-            # 18.56 vs 18.76, 2/5 — because localCheckpoint stores
-            # UnsafeRows, where an array<struct<bigint,bigint>> is
-            # already ONE compact binary region per row, not
-            # per-element objects; there is nothing for the primitive
-            # layout to save. Kept as a hook for re-measurement.
-            # Bit-identical outputs verified at sf0.001 (lm_score and
-            # ccnet buckets).
-            rle_df = ends_df.select(
-                "_id",
-                F.transform(e_col, lambda e: F.element_at(s, e)).alias(
-                    "_bg"
-                ),
-                F.zip_with(
-                    e_col, _lagged, lambda e, p: (e - p).cast("bigint")
-                ).alias("_ct"),
-            )
-        else:
-            rle_df = ends_df.select(
-                "_id",
-                F.zip_with(
-                    e_col,
-                    _lagged,
-                    lambda e, p: F.struct(
-                        F.element_at(s, e).alias("bigram"),
-                        (e - p).cast("bigint").alias("c"),
-                    ),
-                ).alias("_rle"),
-            )
-        # Lineage-cut BEFORE the explode, for two reasons. (1) The
-        # optimizer infers `isnotnull(_rle) AND size(_rle) > 0` under
-        # the Generate and predicate pushdown substitutes the alias —
-        # the full sort+RLE tree — into that filter and pushes it
-        # below the repartition: every row then pays the pipeline
-        # twice, with `_s` re-inlined INSIDE the filter's lambdas
-        # (per-element re-sort — the quadratic blowup the projection
-        # split above exists to avoid). The checkpoint is a barrier
-        # pushdown cannot cross; the inferred filter lands on the
-        # stored column, a cheap reference. (2) The stored rows are
-        # doc-grain (one run array per doc), not exploded bigram
-        # rows — far fewer objects pinned than checkpointing dc
-        # itself. Both consumers (model rollup, scoring join) explode
-        # the stored arrays, which is a trivial generator over
-        # in-memory rows.
-        if _os.environ.get("LM_RLE_SER") == "1":
-            # A/B branch, measured and REJECTED (r12 close): a
-            # SERIALIZED level for the doc-grain run-array cut LOST
-            # the interleaved ×48 A/B ~2× (medians 9.24 default vs
-            # 17.26 serialized) — the cut is read twice (model rollup
-            # + scoring join) and pays per-read deserialization, the
-            # same failure mode as the dc-grain serialized receipt
-            # below. The default level's rows are UnsafeRows (compact
-            # binary), so the serialized level saves little memory to
-            # begin with at doc grain.
-            from pyspark import StorageLevel
-
-            rle_df = rle_df.localCheckpoint(
-                eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
-            )
-        else:
-            rle_df = rle_df.localCheckpoint(eager=False)
-        if _os.environ.get("LM_RLE_PRIM") == "1":
-            dc = rle_df.select(
-                "_id", F.explode(F.arrays_zip("_bg", "_ct")).alias("_rc")
-            ).select(
-                "_id",
-                F.col("_rc._bg").alias("bigram"),
-                F.col("_rc._ct").alias("c"),
-            )
-        else:
-            dc = rle_df.select(
-                "_id", F.explode("_rle").alias("_rc")
-            ).select(
-                "_id",
-                F.col("_rc.bigram").alias("bigram"),
-                F.col("_rc.c").alias("c"),
-            )
-    else:
-        dc = df.select(
-            F.col(id_col).alias("_id"), F.explode(grams).alias("bigram")
-        ).groupBy("_id", "bigram").agg(F.count(F.lit(1)).alias("c"))
-        # Checkpoint level receipt (r12, guide §5): with the old
-        # STRING bigram keys the deserialized default unroll was
-        # OOM-fatal at factor-48 data in an 8 GB local heap (32
-        # concurrent unrolls of object-heavy rows killed the whole
-        # leg). A serialized level
-        # (localCheckpoint(storageLevel=MEMORY_AND_DISK)) fixes the
-        # OOM but was A/B'd at factor 48 and LOST 3/3 pairs (~2×
-        # slower — dc is read twice, paying deserialization each
-        # time). The packed bigint keys above shrink the deserialized
-        # rows enough that the default level fits the 8 GB heap at
-        # factor 48 (spot-verified), so the default level stays.
-        # (The RLE branch checkpoints the doc-grain run arrays above
-        # instead — dc itself is a cheap explode over stored rows.)
-        dc = dc.localCheckpoint(eager=False)
+        ).alias("_rle"),
+    )
+    # Lineage cut before the explode: a barrier the inferred
+    # size(_rle) > 0 filter cannot push the sort+RLE tree below, and
+    # doc-grain rows for both consumers (receipts: OPTIMIZATION_r12.md).
+    rle_df = rle_df.localCheckpoint(eager=False)
+    dc = rle_df.select(
+        "_id", F.explode("_rle").alias("_rc")
+    ).select(
+        "_id",
+        F.col("_rc.bigram").alias("bigram"),
+        F.col("_rc.c").alias("c"),
+    )
     g = dc.groupBy("bigram").agg(F.sum("c").alias("gc"))
-    # The corpus total is a plain sum over the alphabet²-bounded model
-    # table: computing it as an unpartitioned window over g (one
-    # single-task frame over ≤ alphabet² rows — bounded by the model
-    # grain, never the corpus) instead of the old separate
-    # agg + broadcast + crossJoin removes a second aggregation of dc
-    # from the plan AND the serial broadcast-total build job that
-    # gated the lp broadcast (2 Exchanges + 1 job fewer; r11 measured
-    # interleaved at sf0.1: 2.01 s → 1.85 s median, 5/5 pairs). The
-    # division sees the identical exact integer total, so lp is
-    # bit-unchanged.
-    import os as _os
-
-    if _os.environ.get("LM_TOTAL_SHAPE") == "1":
-        # A/B branch (r12, VERDICT item 1): the pre-r11 total shape —
-        # separate agg + broadcast + crossJoin. Identical exact
-        # integer total, so lp is bit-unchanged either way.
-        total = g.agg(F.sum("gc").alias("_t"))
-        lp = g.crossJoin(F.broadcast(total)).select(
-            "bigram",
-            F.round(F.log2(F.col("gc").cast("double") / F.col("_t")), 6)
-            .cast("decimal(18,6)")
-            .alias("lp"),
+    # corpus total as a window over the alphabet²-bounded model table, not
+    # agg + broadcast + crossJoin (920806e; receipts: OPTIMIZATION_r11.md)
+    w_all = Window.partitionBy()
+    lp = g.select(
+        "bigram",
+        F.round(
+            F.log2(F.col("gc").cast("double") / F.sum("gc").over(w_all)),
+            6,
         )
-    else:
-        w_all = Window.partitionBy()
-        lp = g.select(
-            "bigram",
-            F.round(
-                F.log2(F.col("gc").cast("double") / F.sum("gc").over(w_all)),
-                6,
-            )
-            .cast("decimal(18,6)")
-            .alias("lp"),
-        )
+        .cast("decimal(18,6)")
+        .alias("lp"),
+    )
     return (
         dc.join(F.broadcast(lp), "bigram")
         .groupBy("_id")

@@ -705,13 +705,17 @@ def test_char_bigram_lm_scores_orders_anomalies(spark):
     assert s[100] < norm_avg < s[101]
 
 
-def test_char_bigram_rle_dc_matches_agg_shape(spark, monkeypatch):
-    """The r12 RLE dc shape (per-row sort + run-length encode, no
-    corpus-grain aggregate) must be row-identical to the explode +
-    groupBy shape it replaced, across the edge cases the RLE guards
-    handle explicitly: NULL text, empty text, single char (no
-    bigram), all-one-run, multi-run, and non-BMP code points (packed
-    key stays bijective past the BMP)."""
+def test_char_bigram_lm_scores_matches_python_oracle(spark):
+    """The per-row RLE counts (sort + run-length encode, no
+    corpus-grain aggregate) against a plain-Python model, across the
+    edge cases the RLE guards handle explicitly: NULL text, empty
+    text, single char (no bigram), all-one-run, multi-run, and
+    non-BMP code points (packed key stays bijective past the BMP).
+    Documents with no bigram get no output row."""
+    import math
+    from collections import Counter
+    from decimal import ROUND_HALF_UP, Decimal
+
     from openoa_spark.datapipe.text import char_bigram_lm_scores
 
     rows = [
@@ -726,42 +730,29 @@ def test_char_bigram_rle_dc_matches_agg_shape(spark, monkeypatch):
          for i in range(8)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
-    def run(flag):
-        monkeypatch.setenv("LM_DC_RLE", flag)
-        return sorted(
-            map(tuple, char_bigram_lm_scores(df, "text", "doc_id").collect())
-        )
+    def round6(x):
+        # Spark round(double, 6): HALF_UP on the double's decimal string
+        return Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP)
 
-    assert run("1") == run("0")
+    # Python str iteration is by code point, like char_array
+    doc_counts = {
+        i: Counter(zip(t, t[1:])) for i, t in rows if t and len(t) >= 2
+    }
+    model = sum(doc_counts.values(), Counter())
+    total = sum(model.values())
+    lp = {bg: round6(math.log2(c / total)) for bg, c in model.items()}
+    want = {}
+    for i, counts in doc_counts.items():
+        n = sum(counts.values())
+        bits = float(-sum(c * lp[bg] for bg, c in counts.items())) / n
+        want[i] = (n, float(round6(bits)))
 
-
-def test_char_bigram_rle_prim_layout_matches_struct(spark, monkeypatch):
-    """The LM_RLE_PRIM measurement hook (runs stored as two primitive
-    arrays, struct re-formed at explode time) must be row-identical
-    to the default array<struct> layout on the same edge cases as the
-    RLE-vs-agg pin. The hook was a WASH in the ×48 A/B (receipt at
-    the site) and stays off; this pin keeps it honest if re-measured."""
-    from openoa_spark.datapipe.text import char_bigram_lm_scores
-
-    rows = [
-        (1, None),
-        (2, ""),
-        (3, "x"),
-        (4, "aaaa"),
-        (5, "ababab"),
-        (6, "the quick brown fox jumps over the lazy dog"),
-        (7, "\U0001D11E\U0001D11Ez"),
-    ] + [(100 + i, f"filler text number {i} with shared bigrams")
-         for i in range(8)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-
-    def run(flag):
-        monkeypatch.setenv("LM_RLE_PRIM", flag)
-        return sorted(
-            map(tuple, char_bigram_lm_scores(df, "text", "doc_id").collect())
-        )
-
-    assert run("1") == run("0")
+    got = {
+        r["doc_id"]: (r["n_bigrams"], r["bits_per_bigram"])
+        for r in char_bigram_lm_scores(df, "text", "doc_id").collect()
+    }
+    assert set(want) == {4, 5, 6, 7} | {100 + i for i in range(8)}
+    assert got == want
 
 
 def test_incremental_chunk_dedup_across_batches(spark, tmp_path):
@@ -1481,6 +1472,15 @@ def test_semantic_dedup_keeps_lowest_id_per_group(spark):
         ).collect()
     )
     assert kept == [0, 10, 20]
+
+
+def test_semantic_dedup_empty_input(spark):
+    # zero rows -> no centroids, so the pair join has no static width
+    # for the unrolled dot; it must fall back to the fold, not raise
+    df = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    out = similarity.semantic_dedup(df, "embedding", "vec_id", k=3, iters=2)
+    assert out.schema == df.schema
+    assert out.collect() == []
 
 
 def test_semantic_dedup_salted_join_matches_unsalted(spark):

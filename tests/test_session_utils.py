@@ -291,3 +291,53 @@ def test_registry_table_cache_invalidation(spark, tmp_path):
     n_before = len(registry._T_CACHE)
     assert registry.invalidate_tables() == n_before
     assert not registry._T_CACHE
+
+
+def test_library_reads_only_deployment_env_vars():
+    """The only environment reads under openoa_spark/ are session.py's
+    two deployment settings: an operator picks its physical plan from
+    its arguments, never from an env flag."""
+    import ast
+    import pathlib
+
+    import openoa_spark
+
+    pkg = pathlib.Path(openoa_spark.__file__).parent
+    found = set()
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        parents = {
+            child: node
+            for node in ast.walk(tree)
+            for child in ast.iter_child_nodes(node)
+        }
+        rel = path.relative_to(pkg).as_posix()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.module == "os":
+                for alias in node.names:
+                    if alias.name in ("environ", "getenv", "getenvb"):
+                        found.add((rel, f"from os import {alias.name}"))
+            if not (
+                isinstance(node, ast.Attribute)
+                and node.attr in ("environ", "getenv", "getenvb")
+            ):
+                continue
+            # the variable name: os.environ.get("X"), os.environ["X"],
+            # os.getenv("X"); anything else (a write, a wholesale copy,
+            # a computed name) reports as None and fails the pin
+            key = None
+            up = parents.get(node)
+            if isinstance(up, ast.Attribute) and up.attr == "get":
+                up = parents.get(up)
+            if isinstance(up, ast.Call) and up.args:
+                arg = up.args[0]
+                key = arg.value if isinstance(arg, ast.Constant) else None
+            elif isinstance(up, ast.Subscript) and isinstance(
+                up.slice, ast.Constant
+            ):
+                key = up.slice.value
+            found.add((rel, key))
+    assert found == {
+        ("session.py", "SPARK_GRAFT_CPUS"),
+        ("session.py", "SPARK_GRAFT_DRIVER_MEM"),
+    }
