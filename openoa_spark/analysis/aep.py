@@ -7,18 +7,21 @@ Spark-first split (survey §3.2): the heavy dataflow — meter/curtail
 calendar resampling, gross-energy computation, density-corrected
 reanalysis means over the full-month long-term window, joins — runs
 as ONE lazy Spark DAG producing a tiny aggregate table (≤240 rows
-monthly, ≤7.3k daily). The Monte-Carlo loop then runs driver-side in
-NumPy over the collected aggregate with the reference's memoization
-(per-product outlier filtering and long-term window reuse,
-aep.py:736-741/1110-1115): at any data scale the per-sim work is
-arithmetic on the aggregate, so distributing the sims would only
-re-shuffle kilobytes. The 100-TB path is the Spark prep; sims remain
-O(aggregate) regardless of input size.
+monthly, ≤7.3k daily). The Monte-Carlo loop then runs in NumPy over
+the collected aggregate with the reference's memoization (per-product
+outlier filtering and long-term window reuse,
+aep.py:736-741/1110-1115): the filtered POR arrays and each long-term
+window with its calendar codes are built once per run, and a sim is
+one bootstrap regression plus ``bincount`` calendar sums, about
+0.25 ms on the one-year benchmark plant whatever the raw data size.
+The 100-TB path is the Spark prep. Distributing the sims pays only
+for long runs: see ``MonteCarloAEP.run``.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -31,6 +34,7 @@ from openoa_spark.plant import PlantData
 
 _RESAMPLE = {"MS": "MS", "ME": "MS", "D": "D", "h": "h"}
 _CALENDAR_SAMPLES = {"MS": 12, "D": 365, "h": 365 * 24}
+_CALENDAR_KEYS = {"MS": 1, "D": 2, "h": 3}
 _RESAMPLE_HOURS = {"MS": 30 * 24, "D": 24, "h": 1}
 # long-term mean days per calendar month (aep.py:185-188)
 NUM_DAYS_LT = np.array([31, 28.25, 31, 30, 31, 30, 31, 31, 30, 31, 30, 31])
@@ -268,12 +272,8 @@ class MonteCarloAEP:
     def _groupby_time_res(self, obj):
         """Calendar grouping by month / (month, day) / (month, day,
         hour) (aep.py:394-412)."""
-        ix = obj.index
-        if self._monthly:
-            return obj.groupby(ix.month).mean()
-        if self.time_resolution == "D":
-            return obj.groupby([ix.month, ix.day]).mean()
-        return obj.groupby([ix.month, ix.day, ix.hour]).mean()
+        parts = self._calendar_parts(obj.index)
+        return obj.groupby(parts if len(parts) > 1 else parts[0]).mean()
 
     def _calculate_long_term_losses(self) -> tuple[pd.Series, pd.Series]:
         """Calendar-mean availability/curtailment pct (aep.py:655-682)."""
@@ -301,11 +301,16 @@ class MonteCarloAEP:
     ) -> MonteCarloAEPResult:
         """Run the Monte-Carlo simulations.
 
-        ``distributed=True`` fans the sims out over the cluster (every
-        per-sim input is a driver-collected calendar-grain aggregate,
-        so each task ships <1 MB and returns 8 floats per sim — the
-        embarrassingly-parallel shape the serial pandas reference
-        can't exploit). Results are bit-identical to the serial path:
+        ``distributed=True`` runs the sims in one Python task per core
+        (``partitions`` sets another count). Each task ships the
+        driver-collected aggregates (<1 MB) and returns 8 floats per
+        sim. A sim costs about 0.25 ms, a Python task 0.2-0.3 s of
+        worker CPU even when it does nothing, so distributing pays only
+        for long runs. On the one-year benchmark plant with 4 cores
+        (SCALING.md): serial wins at 500 sims (0.17 s against 0.45 s
+        wall), the two tie near 2,000 (0.58 s against 0.52-0.69 s), and
+        distributed wins at 20,000 (4.9 s against 2.0 s wall, for about
+        1.4x the CPU). Results are bit-identical to the serial path:
         all random draws are made up-front on the driver, bootstrap
         indices come from a per-sim seeded generator, and nonlinear
         hyper-parameters are fixed per product before the loop.
@@ -348,9 +353,7 @@ class MonteCarloAEP:
                 if self.outlier_detection else 1.0
             )
             for product in sorted(set(str(p) for p in draws["products"])):
-                valid = self._filter_outliers(
-                    product, nominal_loss, nominal_out, {}
-                )
+                valid = self._filter_outliers(product, nominal_loss, nominal_out)
                 gross = (
                     valid["energy_gwh"].to_numpy()
                     + valid["availability_gwh"].to_numpy()
@@ -369,7 +372,7 @@ class MonteCarloAEP:
             spark = self.plant.spark
             ship_package(spark)
             sc = spark.sparkContext
-            n_parts = partitions or min(sc.defaultParallelism * 2, num)
+            n_parts = partitions or min(sc.defaultParallelism, num)
             chunks = [c.tolist() for c in np.array_split(np.arange(num), n_parts)]
             analysis = self  # __getstate__ drops the Spark-side plant
             parts = (
@@ -395,47 +398,42 @@ class MonteCarloAEP:
     def _simulate_batch(
         self, draws: dict, indices: np.ndarray
     ) -> dict[str, np.ndarray]:
-        """Per-sim math for a batch of simulation indices — pure
-        pandas/NumPy over the prepared aggregates, no Spark handle, so
-        the same code runs on the driver (serial) or inside executor
-        tasks (distributed). Bootstrap rows come from a generator
-        seeded per sim index, making results independent of how sims
-        are batched."""
-        filter_memo: dict = {}
-        lt_memo: dict = {}
+        """Per-sim math for a batch of simulation indices — plain NumPy
+        over the prepared aggregates, no Spark handle, so the same code
+        runs on the driver (serial) or inside executor tasks
+        (distributed). What depends only on a draw's product,
+        thresholds or window length is built once per batch; each sim
+        is one bootstrap regression plus ``bincount`` calendar sums.
+        Bootstrap rows come from a generator seeded per sim index,
+        making results independent of how sims are batched."""
+        valid_memo: dict = {}
+        window_memo: dict = {}
+        por_memo: dict = {}
         out = {k: np.empty(len(indices)) for k in _SIM_OUTPUTS}
 
         for j, n in enumerate(indices):
             product = str(draws["products"][n])
             loss_frac_n = draws["loss_frac"][n]
             wind_years_n = int(draws["wind_years"][n])
-            valid = self._filter_outliers(
-                product, draws["loss_thresh"][n], draws["out_thresh"][n],
-                filter_memo,
+            energy, losses, days, X = _memoized(
+                valid_memo,
+                (product, draws["loss_thresh"][n], draws["out_thresh"][n]),
+                self._valid_arrays,
             )
+            lt = _memoized(window_memo, (product, wind_years_n), self._long_term_window)
+            X_por, por_cal, por_count = _memoized(por_memo, (product,), self._por_inputs)
             # MC-sampled gross energy, 30-day normalized (aep.py:842-895)
-            mc_gross = (
-                valid["energy_gwh"].to_numpy() * draws["meter_frac"][n]
-                + (valid["availability_gwh"].to_numpy()
-                   + valid["curtailment_gwh"].to_numpy()) * loss_frac_n
-            )
-            if self._monthly:
-                mc_norm = mc_gross * 30.0 / valid["num_days_expected"].to_numpy()
-            else:
-                mc_norm = mc_gross
-            X = self._features(valid, product)
+            mc_gross = energy * draws["meter_frac"][n] + losses * loss_frac_n
+            mc_norm = mc_gross * 30.0 / days if self._monthly else mc_gross
             # bootstrap rows (aep.py:914-916), per-sim seeded
             idx = np.random.default_rng((self.seed, 100_000 + int(n))).integers(
                 0, len(X), len(X)
             )
-            lt = self._sample_long_term(product, wind_years_n, lt_memo)
             if self.reg_model == "lin":
                 coef, intercept = reg.ols_fit(X[idx], mc_norm[idx])
                 yhat = reg.ols_predict(X[idx], coef, intercept)
-                gross_lt = reg.ols_predict(self._features(lt, product), coef, intercept)
-                gross_por = reg.ols_predict(
-                    self._features(self.reanalysis_por, product), coef, intercept
-                )
+                gross_lt = reg.ols_predict(lt.X, coef, intercept)
+                gross_por = reg.ols_predict(X_por, coef, intercept)
             else:
                 # nonlinear path (reference aep.py:897-959): per-product
                 # hyper-params fixed before the loop; per-sim refit on
@@ -446,22 +444,25 @@ class MonteCarloAEP:
                 )
                 model.fit(X[idx], mc_norm[idx])
                 yhat = model.predict(X[idx])
-                gross_lt = model.predict(self._features(lt, product))
-                gross_por = model.predict(self._features(self.reanalysis_por, product))
+                gross_lt = model.predict(lt.X)
+                gross_por = model.predict(X_por)
             out["r2"][j] = reg.r2_score(mc_norm[idx], yhat)
             out["mse"][j] = reg.mse_score(mc_norm[idx], yhat)
             out["n_points"][j] = len(X)
-            gross_por = pd.Series(gross_por, index=self.reanalysis_por.index)
-            gross_por_cal = self._groupby_time_res(gross_por)
+            gross_por_cal = np.bincount(por_cal, gross_por) / por_count
             if self._monthly:  # undo 30-day normalization (aep.py:1040-1049)
-                last_month = self._reanalysis_aggregate.index[-1].month
-                roll = np.roll(NUM_DAYS_LT, 12 - last_month)
-                gross_lt = gross_lt * np.tile(roll, wind_years_n) / 30.0
-                gross_por_cal = gross_por_cal.to_numpy() * NUM_DAYS_LT / 30.0
+                gross_lt = gross_lt * lt.month_days / 30.0
+                gross_por_cal = gross_por_cal * NUM_DAYS_LT / 30.0
 
-            gross_lt_s = pd.Series(gross_lt, index=lt.index)
-            annual = self._annual_values(gross_lt_s)
-            avail_lt, curt_lt = self._sample_long_term_losses(gross_lt_s, loss_frac_n)
+            annual = np.bincount(lt.year, gross_lt)
+            # gross-energy-weighted calendar losses (aep.py:1167-1193):
+            # a calendar group the POR losses lack weighs in the
+            # denominator only, as pandas' index alignment has it
+            gross_cal = np.bincount(lt.cal, gross_lt) / lt.cal_count
+            gross_cal_total = gross_cal.sum()
+            gross_cal = gross_cal[lt.present]
+            avail_lt = float((gross_cal * (lt.avail * loss_frac_n)).sum() / gross_cal_total)
+            curt_lt = float((gross_cal * (lt.curt * loss_frac_n)).sum() / gross_cal_total)
 
             out["aep_GWh"][j] = gross_lt.sum() / wind_years_n * (1.0 - avail_lt)
             out["iav"][j] = annual.std(ddof=1) / annual.mean() if len(annual) > 1 else 0.0
@@ -483,12 +484,23 @@ class MonteCarloAEP:
             cols.extend([np.sin(wd), np.cos(wd)])
         return np.column_stack(cols)
 
-    def _filter_outliers(self, product, loss_threshold, outlier_threshold, memo):
-        """Range + window + (Huber | bin) outlier filtering, memoized
-        per (product, thresholds) (aep.py:718-840)."""
-        key = (product, loss_threshold, outlier_threshold)
-        if key in memo:
-            return memo[key]
+    def _calendar_parts(self, ix: pd.DatetimeIndex) -> list:
+        """Calendar group keys: month / (month, day) / (month, day,
+        hour) (aep.py:394-412)."""
+        return [ix.month, ix.day, ix.hour][: _CALENDAR_KEYS[self.time_resolution]]
+
+    def _calendar_groups(self, ix: pd.DatetimeIndex):
+        """Sorted calendar codes of ``ix``, each row's group number and
+        the group sizes: ``np.bincount(group, v) / count`` is
+        ``_groupby_time_res`` without pandas."""
+        return np.unique(
+            _calendar_codes(self._calendar_parts(ix)),
+            return_inverse=True, return_counts=True,
+        )
+
+    def _filter_outliers(self, product, loss_threshold, outlier_threshold):
+        """Range + window + (Huber | bin) outlier filtering
+        (aep.py:718-840)."""
         df = self.aggregate
         sub = df[
             ((df["availability_pct"] + df["curtailment_pct"]) < loss_threshold)
@@ -518,38 +530,81 @@ class MonteCarloAEP:
                     ),
                     index=sub.index,
                 )
-        valid = sub[~flag]
-        memo[key] = valid
-        return valid
+        return sub[~flag]
 
-    def _sample_long_term(self, product, years, memo) -> pd.DataFrame:
-        key = (product, years)
-        if key in memo:
-            return memo[key]
+    def _valid_arrays(self, product, loss_threshold, outlier_threshold):
+        """The filtered POR rows as the per-sim regression reads them:
+        net energy, availability + curtailment energy, days per month
+        (monthly only) and the feature matrix."""
+        valid = self._filter_outliers(product, loss_threshold, outlier_threshold)
+        return (
+            valid["energy_gwh"].to_numpy(),
+            valid["availability_gwh"].to_numpy() + valid["curtailment_gwh"].to_numpy(),
+            valid["num_days_expected"].to_numpy() if self._monthly else None,
+            self._features(valid, product),
+        )
+
+    def _long_term_window(self, product, years) -> _LongTermWindow:
+        """The last ``years`` of the product's reanalysis, with its
+        calendar groups matched against the long-term losses'."""
         ra = self._reanalysis_aggregate.dropna(subset=[product])
         freq = ra.index.freq or pd.tseries.frequencies.to_offset(self._freq)
         cutoff = ra.index[-1] + freq - pd.offsets.DateOffset(years=years)
         lt = ra.loc[ra.index >= cutoff]
-        memo[key] = lt
-        return lt
-
-    def _annual_values(self, s: pd.Series) -> np.ndarray:
-        """Year-sums anchored at the series start (aep.py:40-59)."""
-        months_from_start = (
-            (s.index.year - s.index[0].year) * 12 + (s.index.month - s.index[0].month)
+        ix = lt.index
+        codes, cal, cal_count = self._calendar_groups(ix)
+        losses_ix = self.long_term_losses[0].index
+        loss_codes = _calendar_codes(
+            [losses_ix.get_level_values(i) for i in range(losses_ix.nlevels)]
         )
+        pos = np.minimum(np.searchsorted(loss_codes, codes), len(loss_codes) - 1)
+        present = loss_codes[pos] == codes
+        pos = pos[present]
+        # year-sums anchored at the window start (aep.py:40-59)
         if self._monthly:
-            year_bucket = months_from_start // 12
+            bucket = ((ix.year - ix[0].year) * 12 + (ix.month - ix[0].month)) // 12
+            last_month = self._reanalysis_aggregate.index[-1].month
+            month_days = np.tile(np.roll(NUM_DAYS_LT, 12 - last_month), years)
         else:
-            days = (s.index - s.index[0]).days
-            year_bucket = days // 365
-        return s.groupby(year_bucket).sum().to_numpy()
+            bucket = (ix - ix[0]).days // 365
+            month_days = None
+        return _LongTermWindow(
+            X=self._features(lt, product),
+            cal=cal,
+            cal_count=cal_count,
+            present=present,
+            avail=self.long_term_losses[0].to_numpy()[pos],
+            curt=self.long_term_losses[1].to_numpy()[pos],
+            year=np.unique(np.asarray(bucket), return_inverse=True)[1],
+            month_days=month_days,
+        )
 
-    def _sample_long_term_losses(self, gross_lt: pd.Series, loss_fraction: float):
-        """Gross-energy-weighted calendar losses (aep.py:1167-1193)."""
-        mc_avail = self.long_term_losses[0] * loss_fraction
-        mc_curt = self.long_term_losses[1] * loss_fraction
-        gross_cal = self._groupby_time_res(gross_lt)
-        avail_lt = float((gross_cal * mc_avail).sum() / gross_cal.sum())
-        curt_lt = float((gross_cal * mc_curt).sum() / gross_cal.sum())
-        return avail_lt, curt_lt
+    def _por_inputs(self, product):
+        """POR reanalysis features, calendar group per row, group sizes."""
+        _, cal, cal_count = self._calendar_groups(self.reanalysis_por.index)
+        return self._features(self.reanalysis_por, product), cal, cal_count
+
+
+class _LongTermWindow(NamedTuple):
+    X: np.ndarray  # features, one row per reanalysis period
+    cal: np.ndarray  # calendar group of each row
+    cal_count: np.ndarray  # rows per calendar group
+    present: np.ndarray  # calendar groups the long-term losses have
+    avail: np.ndarray  # availability loss of each present group
+    curt: np.ndarray  # curtailment loss of each present group
+    year: np.ndarray  # year bucket of each row, anchored at the window start
+    month_days: np.ndarray | None  # monthly: long-term days of each row's month
+
+
+def _calendar_codes(parts) -> np.ndarray:
+    """One sortable int per calendar key: month, month*100 + day, ..."""
+    code = np.zeros(len(parts[0]), dtype=np.int64)
+    for p in parts:
+        code = code * 100 + np.asarray(p, dtype=np.int64)
+    return code
+
+
+def _memoized(memo: dict, key: tuple, build):
+    if key not in memo:
+        memo[key] = build(*key)
+    return memo[key]

@@ -27,21 +27,19 @@ def dot(a: Column, b: Column, dim: int | None = None) -> Column:
     — same association, same leading 0.0 (so even the sign of an
     all-negative-zero sum matches) — but as plain codegen arithmetic
     with no per-evaluation zip_with array (receipts in
-    SEMDEDUP48_r12.json). CONTRACT: pass ``dim`` only when every
-    vector has exactly ``dim`` elements. On a length mismatch the two
-    paths differ: the fold pads the shorter array with NULL, so the
-    product and the whole sum are NULL; the unroll ignores a longer
-    array's tail, and for a shorter array ``element_at`` past the end
-    RAISES ``INVALID_ARRAY_INDEX_IN_ELEMENT_AT`` under ANSI mode (the
-    Spark 4.1 default) and yields NULL only with ANSI off. All
-    embedding tables here are fixed-width, so the sites below pass the
+    SEMDEDUP48_r12.json). CONTRACT: with ``dim``, the result is NULL
+    unless both vectors have exactly ``dim`` elements, with ANSI mode
+    on or off; a NULL, short, long or empty vector never raises. That
+    matches the fold whenever a vector's length differs from the
+    other's (the fold pads the shorter array with NULL). All embedding
+    tables here are fixed-width, so the sites below pass the
     plane/centroid width.
     """
     if dim is not None:
         expr = F.lit(0.0)
         for i in range(1, dim + 1):
             expr = expr + F.element_at(a, i) * F.element_at(b, i)
-        return expr
+        return F.when((F.size(a) == dim) & (F.size(b) == dim), expr)
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )

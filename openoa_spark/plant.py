@@ -217,7 +217,11 @@ class PlantData:
             return []
         if kind is not None and "type" in df.columns:
             df = df.where(F.col("type") == kind)
-        return [r["asset_id"] for r in df.select("asset_id").distinct().orderBy("asset_id").collect()]
+        # one collect of a dimension-sized column, deduped and sorted
+        # here: Spark's ascending order (NULL first, UTF-8 bytes, i.e.
+        # code points) without distinct/orderBy's extra jobs
+        ids = {r["asset_id"] for r in df.select("asset_id").collect()}
+        return [None] * (None in ids) + sorted(ids - {None})
 
     @property
     def asset_ids(self) -> list[str]:

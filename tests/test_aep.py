@@ -7,7 +7,8 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from openoa_spark.analysis.aep import MonteCarloAEP
+from openoa_spark.analysis.aep import NUM_DAYS_LT, MonteCarloAEP
+from openoa_spark.functions import regression as reg
 from openoa_spark.plant import PlantData
 from tests.windfixtures import ELEC_LOSS, make_aep_tables
 
@@ -159,8 +160,9 @@ def test_distributed_run_matches_serial_exactly(analysis):
     serial one: draws are made up-front, bootstraps are per-sim
     seeded, so batching across executors cannot change results."""
     serial = analysis.run(num_sim=12)
-    dist = analysis.run(num_sim=12, distributed=True)
-    pd.testing.assert_frame_equal(serial.results, dist.results)
+    for partitions in (1, 3, None):
+        dist = analysis.run(num_sim=12, distributed=True, partitions=partitions)
+        pd.testing.assert_frame_equal(serial.results, dist.results)
 
 
 def test_distributed_run_matches_serial_nonlinear(analysis):
@@ -171,3 +173,130 @@ def test_distributed_run_matches_serial_nonlinear(analysis):
     serial = mc.run(num_sim=4)
     dist = mc.run(num_sim=4, distributed=True)
     pd.testing.assert_frame_equal(serial.results, dist.results)
+
+
+# ------------------------------------------------- per-sim pandas oracle
+
+
+def _pandas_sim(mc, draws, n):
+    """One linear-regression sim in pandas: Series, calendar groupbys
+    and index alignment, the shape of the reference's per-sim body.
+    The oracle ``_simulate_batch`` must match."""
+    monthly = mc.time_resolution == "MS"
+
+    def calendar_mean(s):
+        ix = s.index
+        if monthly:
+            return s.groupby(ix.month).mean()
+        if mc.time_resolution == "D":
+            return s.groupby([ix.month, ix.day]).mean()
+        return s.groupby([ix.month, ix.day, ix.hour]).mean()
+
+    product = str(draws["products"][n])
+    loss_frac = draws["loss_frac"][n]
+    years = int(draws["wind_years"][n])
+    valid = mc._filter_outliers(product, draws["loss_thresh"][n], draws["out_thresh"][n])
+    mc_gross = (
+        valid["energy_gwh"].to_numpy() * draws["meter_frac"][n]
+        + (valid["availability_gwh"].to_numpy()
+           + valid["curtailment_gwh"].to_numpy()) * loss_frac
+    )
+    y = mc_gross * 30.0 / valid["num_days_expected"].to_numpy() if monthly else mc_gross
+    X = mc._features(valid, product)
+    idx = np.random.default_rng((mc.seed, 100_000 + int(n))).integers(0, len(X), len(X))
+
+    ra = mc._reanalysis_aggregate.dropna(subset=[product])
+    freq = ra.index.freq or pd.tseries.frequencies.to_offset(mc._freq)
+    lt = ra.loc[ra.index >= ra.index[-1] + freq - pd.offsets.DateOffset(years=years)]
+    por = mc.reanalysis_por
+
+    coef, intercept = reg.ols_fit(X[idx], y[idx])
+    yhat = reg.ols_predict(X[idx], coef, intercept)
+    gross_lt = reg.ols_predict(mc._features(lt, product), coef, intercept)
+    gross_por = pd.Series(
+        reg.ols_predict(mc._features(por, product), coef, intercept), index=por.index
+    )
+    gross_por_cal = calendar_mean(gross_por)
+    if monthly:
+        roll = np.roll(NUM_DAYS_LT, 12 - mc._reanalysis_aggregate.index[-1].month)
+        gross_lt = gross_lt * np.tile(roll, years) / 30.0
+        gross_por_cal = gross_por_cal.to_numpy() * NUM_DAYS_LT / 30.0
+
+    s = pd.Series(gross_lt, index=lt.index)
+    ix = s.index
+    if monthly:
+        bucket = ((ix.year - ix[0].year) * 12 + (ix.month - ix[0].month)) // 12
+    else:
+        bucket = (ix - ix[0]).days // 365
+    annual = s.groupby(bucket).sum().to_numpy()
+    avail_loss, curt_loss = mc.long_term_losses
+    # align on the calendar key alone: the losses' levels carry the
+    # aggregate's index name, and pandas refuses to join unequal
+    # MultiIndexes with no level name in common
+    gross_cal = calendar_mean(s).rename_axis(avail_loss.index.names)
+    avail_lt = float((gross_cal * (avail_loss * loss_frac)).sum() / gross_cal.sum())
+    curt_lt = float((gross_cal * (curt_loss * loss_frac)).sum() / gross_cal.sum())
+    lt_mean = gross_lt.sum() / years
+    return {
+        "aep_GWh": lt_mean * (1.0 - avail_lt),
+        "avail_pct": avail_lt,
+        "curt_pct": curt_lt,
+        "lt_por_ratio": lt_mean / np.sum(gross_por_cal),
+        "r2": reg.r2_score(y[idx], yhat),
+        "mse": reg.mse_score(y[idx], yhat),
+        "n_points": len(X),
+        "iav": annual.std(ddof=1) / annual.mean() if len(annual) > 1 else 0.0,
+    }
+
+
+def _draws(mc, num=12, seed=3):
+    rng = np.random.default_rng(seed)
+    return {
+        "products": np.array(mc.reanalysis_products * num)[:num],
+        "meter_frac": rng.normal(1.0, 0.005, num),
+        "loss_frac": rng.normal(1.0, 0.05, num),
+        "wind_years": rng.integers(1, 3, num),
+        "loss_thresh": rng.integers(10, 21, num) / 100.0,
+        "out_thresh": (
+            rng.integers(10, 31, num) / 10.0 if mc.outlier_detection else np.ones(num)
+        ),
+    }
+
+
+def _assert_matches_pandas_oracle(mc):
+    draws = _draws(mc)
+    sims = np.array([0, 1, 7, 11])
+    got = mc._simulate_batch(draws, sims)
+    for j, n in enumerate(sims):
+        want = _pandas_sim(mc, draws, n)
+        for k, v in want.items():
+            np.testing.assert_allclose(got[k][j], v, rtol=1e-12, err_msg=f"sim {n} {k}")
+
+
+def test_sims_match_pandas_oracle_monthly(analysis):
+    _assert_matches_pandas_oracle(analysis)
+
+
+def test_sims_match_pandas_oracle_outlier_detection(analysis):
+    mc = MonteCarloAEP(
+        analysis.plant, uncertainty_windiness=(1, 2), outlier_detection=True
+    )
+    mc.prepare()
+    _assert_matches_pandas_oracle(mc)
+
+
+def test_sims_match_pandas_oracle_daily_feb29(spark):
+    # a non-leap POR year, so the long-term losses have no 29 February,
+    # while every 1-2 year window back from 2020-03-31 has one
+    tables = make_aep_tables(por_start="2018-03-01", por_end="2019-03-15")
+    plant = PlantData(
+        spark, META, analysis_type=["MonteCarloAEP"],
+        meter=spark.createDataFrame(tables["meter"]),
+        curtail=spark.createDataFrame(tables["curtail"]),
+        reanalysis={"era5": spark.createDataFrame(tables["reanalysis"])},
+    )
+    mc = MonteCarloAEP(plant, time_resolution="D", uncertainty_windiness=(1, 2))
+    mc.prepare()
+    avail_loss = mc.long_term_losses[0]
+    assert len(avail_loss) == 365 and (2, 29) not in avail_loss.index
+    _assert_matches_pandas_oracle(mc)

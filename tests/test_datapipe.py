@@ -1483,6 +1483,40 @@ def test_semantic_dedup_empty_input(spark):
     assert out.collect() == []
 
 
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_dot_dim_is_null_on_length_mismatch(spark, ansi):
+    # dot(dim=) against a dim-long vector: NULL, never an ANSI
+    # INVALID_ARRAY_INDEX error, whenever the other side is not dim
+    # long -- the fold's answer for every such pair
+    rows = [
+        (1, [0.5, -1.0, 2.0]),
+        (2, [1.0, 2.0]),
+        (3, [1.0, 2.0, 3.0, 4.0]),
+        (4, None),
+        (5, []),
+    ]
+    df = spark.createDataFrame(rows, "id int, v array<double>")
+    q = F.array(*[F.lit(x) for x in (1.0, 2.0, 3.0)])
+    v = F.col("v")
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        got = {
+            r["id"]: (r["fold"], r["unrolled"], r["unrolled_rev"])
+            for r in df.select(
+                "id",
+                similarity.dot(v, q).alias("fold"),
+                similarity.dot(v, q, dim=3).alias("unrolled"),
+                similarity.dot(q, v, dim=3).alias("unrolled_rev"),
+            ).collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert got[1] == (4.5, 4.5, 4.5)
+    for i in (2, 3, 4, 5):
+        assert got[i] == (None, None, None), (i, got[i])
+
+
 def test_semantic_dedup_salted_join_matches_unsalted(spark):
     # the r12 hot-key salt (a-side pmod(xxhash64) salt, b-side
     # replicated to every salt) must produce the IDENTICAL pair set —

@@ -112,6 +112,34 @@ def test_ids_and_slices(plant):
     assert plant.turbine_df("T02").select("asset_id").distinct().count() == 1
 
 
+def test_asset_ids_keep_spark_order_in_one_job(spark):
+    # NULL, repeats, and non-ASCII ids whose UTF-16 order differs from
+    # their UTF-8 byte order (U+FF5A sorts after U+1D538 in UTF-16)
+    ids = ["T02", None, "Tø1", "T01", "é", "T02", "\U0001d538", "ｚ", "a", None]
+    asset = spark.createDataFrame(
+        [(i, "turbine") for i in ids] + [("MT1", "tower")],
+        "asset_id string, type string",
+    )
+    plant = PlantData(spark, META, analysis_type=None, asset=asset)
+    turbines = asset.where(F.col("type") == "turbine")
+    expected = [
+        r["asset_id"]
+        for r in turbines.select("asset_id").distinct().orderBy("asset_id").collect()
+    ]
+    assert expected[0] is None and len(expected) == 8
+
+    sc = spark.sparkContext
+    sc.setJobGroup("test_asset_ids", "test_asset_ids")
+    try:
+        got = plant.turbine_ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got == expected
+    assert len(sc.statusTracker().getJobIdsForGroup("test_asset_ids")) <= 1
+    assert plant.asset_ids == [None] + sorted(set(ids + ["MT1"]) - {None})
+
+
 def test_geometry_and_freestream(plant):
     # west wind (270°): the westernmost turbine T01 is freestream;
     # T02..T04 each have an upwind neighbor to their west.
