@@ -41,24 +41,23 @@ class Rule:
     params: dict = field(default_factory=dict)
 
 
-def _violation_expr(rule: Rule) -> Column:
-    """Count of violating rows for one rule (unique handled apart)."""
+def violation(rule: Rule) -> Column:
+    """Row predicate: True where a row breaks ``rule``. Row-level kinds
+    only — ``unique`` is a table property that run_checks counts apart.
+    Raises ValueError on an unknown kind."""
     c = F.col(rule.col)
     if rule.kind == "not_null":
-        bad = c.isNull()
-    elif rule.kind == "in_set":
-        bad = ~c.isin(*rule.params["values"]) | c.isNull()
-    elif rule.kind == "in_range":
+        return c.isNull()
+    if rule.kind == "in_set":
+        return ~c.isin(*rule.params["values"]) | c.isNull()
+    if rule.kind == "in_range":
         lo, hi = rule.params["lo"], rule.params["hi"]
-        bad = ~c.between(lo, hi) | c.isNull()
-    elif rule.kind == "matches":
-        bad = ~c.rlike(rule.params["pattern"]) | c.isNull()
-    elif rule.kind == "custom":
-        ok = rule.params["predicate"]
-        bad = ~F.coalesce(ok, F.lit(False))
-    else:
-        raise ValueError(f"unknown rule kind: {rule.kind!r}")
-    return F.sum(F.when(bad, 1).otherwise(0)).cast("long")
+        return ~c.between(lo, hi) | c.isNull()
+    if rule.kind == "matches":
+        return ~c.rlike(rule.params["pattern"]) | c.isNull()
+    if rule.kind == "custom":
+        return ~F.coalesce(rule.params["predicate"], F.lit(False))
+    raise ValueError(f"unknown rule kind: {rule.kind!r}")
 
 
 def run_checks(df: DataFrame, rules: list[Rule]) -> DataFrame:
@@ -85,7 +84,10 @@ def run_checks(df: DataFrame, rules: list[Rule]) -> DataFrame:
                 ).cast("long").alias(f"_v_{i}")
             )
         else:
-            aggs.append(_violation_expr(r).alias(f"_v_{i}"))
+            aggs.append(
+                F.sum(F.when(violation(r), 1).otherwise(0))
+                .cast("long").alias(f"_v_{i}")
+            )
     one = df.agg(*aggs)
 
     # unpivot the 1-row aggregate to (rule, violations, total) via

@@ -571,7 +571,6 @@ def refresh_time_rollup(
     freq: str,
     aggs: dict[str, Column],
     keys: list[str] | None = None,
-    day_col: str | None = None,
 ) -> DataFrame:
     """Continuous-aggregate maintenance (the TimescaleDB/Druid
     "hypertable rollup with invalidation" pattern): keep a persistent
@@ -584,10 +583,8 @@ def refresh_time_rollup(
     byte-identical partitions, with none of the double-count hazards
     of merging partial aggregates into state. Cost tracks the DELTA'S
     bucket span, not table history: the invalidated-bucket set (tiny
-    — distinct truncated timestamps of the delta) broadcast
-    semi-joins against raw, so Catalyst prunes the recompute scan to
-    the affected buckets; with the raw table date-partitioned the
-    pruning reaches the file listing.
+    — distinct truncated timestamps of the delta) filters raw, so the
+    recompute scan reads only the affected buckets.
 
     ``aggs``: output-column -> aggregate Column over the raw rows.
     The rollup parquet is partitioned by ``_bucket_day`` (one
@@ -602,22 +599,6 @@ def refresh_time_rollup(
     hours 00-05). Day-grain invalidation costs one extra bucket-worth
     of recompute per touched day and keeps the refresh aligned with
     the partition layout.
-
-    ``day_col`` (r12, VERDICT item 4): name of a PARTITION column on
-    ``raw`` that holds each row's bucket-day — i.e. the raw table was
-    written ``partitionBy(day_col, ...)`` with ``day_col =
-    to_date(date_trunc(freq, time_col))`` (what
-    stream_time_rollup(partition_raw_by_day=True) lands). The
-    invalidated-day ``isin`` then applies directly to the partition
-    column, so pruning happens at the FILE LISTING (PartitionFilters
-    in the scan node) instead of parquet row-group stats — the
-    refresh never even lists history files. The contract is on the
-    caller: a ``day_col`` computed with a DIFFERENT freq than this
-    refresh would prune wrongly; the exact bucket-day membership
-    filter stays in place either way, so under the contract the
-    output is identical to the unpartitioned path (checksum-pinned in
-    tests). The >10k-day fallback ignores ``day_col`` (no literal
-    list to prune with).
     """
     import datetime as _dt
 
@@ -657,13 +638,6 @@ def refresh_time_rollup(
     if len(day_rows) <= 10_000:
         if not days:
             raw = raw.where(F.lit(False))
-        elif day_col is not None and day_col in raw.columns:
-            # partition-column prune: exact membership on the layout's
-            # own day column reaches the FILE LISTING; the derived
-            # bucket-day isin below stays as the semantic filter (a
-            # no-op under the day_col contract)
-            raw = raw.where(F.col(day_col).isin(days))
-            raw = raw.where(F.to_date(bucket).isin(days))
         else:
             slack = _slack_days.get(freq.lower())
             if slack is not None:

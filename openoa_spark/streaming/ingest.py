@@ -8,11 +8,25 @@ aggregation with watermarks (late data bounded by ``late_threshold``).
 A stream resampled at "10min" with a 30-min watermark produces exactly
 the batch ``resample`` result once all late data has arrived — the
 unifying contract batch/streaming share.
+
+Every writer here (``stream_to_parquet`` and the ``foreachBatch``
+family) shares one contract: the query runs with the availableNow
+trigger — it processes everything the source holds, then stops; call
+``awaitTermination()`` on the returned handle — and keeps its offsets
+and commits in ``checkpoint``. Each table a ``foreachBatch`` writer
+lands goes through ``_land``: partitioned by the micro-batch id
+(``_batch_id``; ``batch_id`` for the metrics reports) with dynamic
+partition overwrite, so a batch replayed after a crash overwrites its
+own partition instead of appending twice — exactly-once composed with
+the checkpoint. The per-operator docstrings say only what differs,
+such as how a writer orders its output against state appends.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
+
+from openoa_spark.sources.sinks import overwrite_partitions
 
 
 def stream_resample(
@@ -244,35 +258,42 @@ def stream_running_total(
     )
 
 
-def stream_to_parquet(
-    df: DataFrame,
-    path: str,
-    checkpoint: str,
-    available_now: bool = True,
-    partition_cols: list[str] | None = None,
-):
+def _land(
+    df: DataFrame, path: str, batch_id: int, col: str = "_batch_id"
+) -> None:
+    """Land one micro-batch's rows under their own ``col=batch_id``
+    partition with dynamic overwrite: a batch replayed after a crash
+    replaces exactly the partition it wrote before."""
+    overwrite_partitions(df.withColumn(col, F.lit(batch_id)), path, [col])
+
+
+def _each_batch(stream: DataFrame, process, checkpoint: str):
+    """Start ``process(batch, batch_id)`` on every micro-batch of
+    ``stream``: availableNow trigger, offsets and commits in
+    ``checkpoint``. Returns the StreamingQuery handle."""
+    return (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def stream_to_parquet(df: DataFrame, path: str, checkpoint: str):
     """Exactly-once parquet sink: append mode + a checkpoint directory
     holding the WAL/offset log, so a crashed or restarted query
     resumes from the last committed batch without duplicating output
     (the file sink records committed files in ``_spark_metadata``;
     readers that go through Spark see exactly-once results).
-
-    ``available_now=True`` processes everything currently in the
-    source then stops — the batch-like backfill trigger; pass False
-    for a continuously-running micro-batch query. Returns the
-    StreamingQuery handle (call ``awaitTermination()``).
     """
-    w = (
+    return (
         df.writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
 
 
 def stream_quality_gate(
@@ -282,57 +303,40 @@ def stream_quality_gate(
     quarantine_path: str,
     checkpoint: str,
     metrics_path: str | None = None,
-    available_now: bool = True,
 ):
     """Per-micro-batch data-quality gate: rows satisfying EVERY
-    row-level rule append to ``good_path``, violators (tagged with the
-    names of the rules they broke) to ``quarantine_path``, and the
+    row-level rule land at ``good_path``, violators (tagged with the
+    names of the rules they broke) at ``quarantine_path``, and the
     per-batch rule report (operators/checks.run_checks — one
     aggregation pass per batch) optionally lands at a parquet
-    ``metrics_path``, partitioned by ``batch_id`` and written with
-    dynamic partition overwrite — so a micro-batch replayed after a
-    crash overwrites its own report instead of appending a duplicate,
-    the same idempotence contract as the row sinks. (A path, not a
+    ``metrics_path`` under a ``batch_id`` partition. (A path, not a
     managed table: no metastore dependency, and re-registering after
     a restart cannot collide with a leftover warehouse location.)
 
     foreachBatch is the right primitive here: a batch can fan out to
-    two sinks and a metrics collector atomically per micro-batch
-    while keeping the stream's checkpointed exactly-once offsets
-    (each sink write is idempotent per batch id via overwrite-by-
-    batch partitioning). Table-level rules (``unique``) are reported
-    in metrics but do NOT route rows — cross-batch uniqueness is the
-    job of stream_dedup/watermarks, not a per-batch gate.
+    two sinks and a metrics collector per micro-batch while keeping
+    the stream's checkpointed exactly-once offsets. Table-level rules
+    (``unique``) are reported in metrics but do NOT route rows —
+    cross-batch uniqueness is the job of stream_dedup/watermarks, not
+    a per-batch gate. An empty rule list, duplicate rule names or an
+    unknown kind raise ValueError here, before the query starts.
     """
-    from openoa_spark.operators.checks import run_checks
+    from openoa_spark.operators.checks import run_checks, violation
 
-    row_rules = [r for r in rules if r.kind != "unique"]
-
-    def _bad_flag(rule) -> Column:
-        # reuse the rule compiler's predicate logic at row grain
-        c = F.col(rule.col)
-        if rule.kind == "not_null":
-            return c.isNull()
-        if rule.kind == "in_set":
-            return ~c.isin(*rule.params["values"]) | c.isNull()
-        if rule.kind == "in_range":
-            lo, hi = rule.params["lo"], rule.params["hi"]
-            return ~c.between(lo, hi) | c.isNull()
-        if rule.kind == "matches":
-            return ~c.rlike(rule.params["pattern"]) | c.isNull()
-        if rule.kind == "custom":
-            return ~F.coalesce(rule.params["predicate"], F.lit(False))
-        raise ValueError(f"unknown rule kind: {rule.kind!r}")
+    rules = list(rules)
+    # validates the rule list; lazy, so no job runs on the stream
+    run_checks(df, rules)
+    broken = F.array_compact(
+        F.array(
+            *[
+                F.when(violation(r), F.lit(r.name))
+                for r in rules
+                if r.kind != "unique"
+            ]
+        )
+    )
 
     def _process(batch: DataFrame, batch_id: int) -> None:
-        broken = F.array_compact(
-            F.array(
-                *[
-                    F.when(_bad_flag(r), F.lit(r.name))
-                    for r in row_rules
-                ]
-            )
-        )
         # the batch feeds three consumers (good sink, quarantine sink,
         # metrics aggregate) — persist once so expensive upstream
         # transforms run a single time per micro-batch
@@ -344,39 +348,15 @@ def stream_quality_gate(
             bad = tagged.where(F.size("_broken_rules") > 0).withColumn(
                 "_broken_rules", F.array_join("_broken_rules", ",")
             )
-            # partition by batch id → re-running a batch after a crash
-            # overwrites its own partition only (idempotent,
-            # exactly-once composed with the stream checkpoint); the
-            # metrics report gets the SAME treatment so a replayed
-            # batch cannot append its rule report twice
-            for out, path in ((good, good_path), (bad, quarantine_path)):
-                (
-                    out.withColumn("_batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("_batch_id")
-                    .parquet(path)
-                )
+            _land(good, good_path, batch_id)
+            _land(bad, quarantine_path, batch_id)
             if metrics_path is not None:
-                report = run_checks(
-                    tagged.drop("_broken_rules"), list(rules)
-                ).withColumn("batch_id", F.lit(batch_id))
-                (
-                    report.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .parquet(metrics_path)
-                )
+                report = run_checks(tagged.drop("_broken_rules"), rules)
+                _land(report, metrics_path, batch_id, "batch_id")
         finally:
             tagged.unpersist()
 
-    w = (
-        df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _each_batch(df, _process, checkpoint)
 
 
 def stream_near_dedup(
@@ -386,7 +366,6 @@ def stream_near_dedup(
     out_path: str,
     state_path: str,
     checkpoint: str,
-    available_now: bool = True,
     num_hashes: int = 64,
     bands: int = 16,
     shingle_n: int = 3,
@@ -398,7 +377,7 @@ def stream_near_dedup(
     datapipe.dedup.incremental_near_dedup against the persistent LSH
     state at ``state_path`` (history wins; within-batch components
     collapse to their min-id representative) and accepted rows land at
-    ``out_path`` partitioned by batch id with dynamic overwrite.
+    ``out_path``.
 
     Crash-safety ordering: the output write runs as the dedup's
     ``sink`` — BEFORE any state append — so whichever side a crash
@@ -417,28 +396,14 @@ def stream_near_dedup(
     from openoa_spark.datapipe.dedup import incremental_near_dedup
 
     def _process(batch: DataFrame, batch_id: int) -> None:
-        def _sink(accepted: DataFrame) -> None:
-            (
-                accepted.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(out_path)
-            )
-
         incremental_near_dedup(
             batch.sparkSession, batch, text_col, id_col, state_path,
             num_hashes, bands, shingle_n, jaccard_threshold, hash_fn,
-            sink=_sink, max_band_bucket=max_band_bucket,
+            sink=lambda accepted: _land(accepted, out_path, batch_id),
+            max_band_bucket=max_band_bucket,
         )
 
-    w = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _each_batch(stream, _process, checkpoint)
 
 
 def stream_time_rollup(
@@ -450,69 +415,34 @@ def stream_time_rollup(
     aggs: dict[str, Column],
     checkpoint: str,
     keys: list[str] | None = None,
-    available_now: bool = True,
-    partition_raw_by_day: bool = False,
 ):
     """Streaming lakehouse pattern: land each micro-batch in the raw
     table AND keep a time-bucketed continuous aggregate fresh — the
     foreachBatch composition of the two idempotent writers.
 
-    Per batch: (1) raw rows land partitioned by batch id with dynamic
-    overwrite (a replayed batch overwrites its own partition — no
-    double-landing); (2) operators.timeseries.refresh_time_rollup
-    recomputes exactly the buckets this batch touches FROM the raw
-    table (which now includes the batch) and dynamically overwrites
-    those rollup partitions. Both steps are idempotent, so any crash
-    point replays to the same raw + rollup state — the rollup is
-    always a pure function of raw, never a merge of partials.
-
-    ``partition_raw_by_day`` (r12, VERDICT item 4 — OPT-IN because the
-    raw layout is an output contract readers see): lands raw
-    partitioned by ``("_day", "_batch_id")`` where ``_day =
-    to_date(date_trunc(freq, time_col))`` (the refresh's own
-    invalidation grain). The refresh then prunes history at the FILE
-    LISTING — its invalidated-day isin applies to the ``_day``
-    partition column (PartitionFilters in the scan) instead of
-    row-group time stats, so a recent-days delta never lists
-    month-old files. Replay idempotency is unchanged: a replayed
-    batch rewrites exactly its own (_day, _batch_id) leaf partitions.
-    Default-off keeps the long-standing ``_batch_id``-only layout
-    byte-compatible for existing readers.
+    Per batch: (1) raw rows land under the batch's own partition;
+    (2) operators.timeseries.refresh_time_rollup recomputes exactly
+    the buckets this batch touches FROM the raw table (which now
+    includes the batch) and dynamically overwrites those rollup
+    partitions. Both steps are idempotent, so any crash point replays
+    to the same raw + rollup state — the rollup is always a pure
+    function of raw, never a merge of partials.
     """
     from openoa_spark.operators.timeseries import refresh_time_rollup
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         batch.persist()
         try:
-            landed = batch.withColumn("_batch_id", F.lit(batch_id))
-            part_cols = ["_batch_id"]
-            if partition_raw_by_day:
-                landed = landed.withColumn(
-                    "_day", F.to_date(F.date_trunc(freq, F.col(time_col)))
-                )
-                part_cols = ["_day", "_batch_id"]
-            (
-                landed.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*part_cols)
-                .parquet(raw_path)
-            )
+            _land(batch, raw_path, batch_id)
             spark = batch.sparkSession
             raw = spark.read.parquet(raw_path).drop("_batch_id")
             refresh_time_rollup(
-                raw, batch, time_col, rollup_path, freq, aggs, keys,
-                day_col="_day" if partition_raw_by_day else None,
+                raw, batch, time_col, rollup_path, freq, aggs, keys
             )
         finally:
             batch.unpersist()
 
-    w = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _each_batch(stream, _process, checkpoint)
 
 
 def stream_chunk_dedup(
@@ -522,7 +452,6 @@ def stream_chunk_dedup(
     out_path: str,
     state_path: str,
     checkpoint: str,
-    available_now: bool = True,
     chunk_tokens: int = 10,
 ):
     """Streaming CHUNK-level dedup (the C4/RefinedWeb "line dedup"
@@ -530,8 +459,7 @@ def stream_chunk_dedup(
     datapipe.dedup.incremental_chunk_dedup against the persistent
     128-bit fingerprint table at ``state_path`` — a chunk survives
     only on its first corpus-lifetime occurrence, documents reassemble
-    from surviving chunks — and the cleaned rows land at ``out_path``
-    partitioned by batch id with dynamic overwrite.
+    from surviving chunks — and the cleaned rows land at ``out_path``.
 
     Crash-safety ordering is inherited from the batch operator: the
     output write runs as the dedup's ``sink`` BEFORE the fingerprint
@@ -545,27 +473,13 @@ def stream_chunk_dedup(
     from openoa_spark.datapipe.dedup import incremental_chunk_dedup
 
     def _process(batch: DataFrame, batch_id: int) -> None:
-        def _sink(accepted: DataFrame) -> None:
-            (
-                accepted.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(out_path)
-            )
-
         incremental_chunk_dedup(
             batch.sparkSession, batch, text_col, id_col, state_path,
-            chunk_tokens=chunk_tokens, sink=_sink,
+            chunk_tokens=chunk_tokens,
+            sink=lambda accepted: _land(accepted, out_path, batch_id),
         )
 
-    w = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _each_batch(stream, _process, checkpoint)
 
 
 def stream_embedding_dedup(
@@ -577,44 +491,29 @@ def stream_embedding_dedup(
     checkpoint: str,
     planes: list,
     threshold: float,
-    available_now: bool = True,
     round_digits: int | None = 6,
 ):
     """Streaming embedding (semantic) near-duplicate removal: each
     micro-batch runs datapipe.similarity.incremental_embedding_dedup
     against the persistent (id, bucket, vec) state — history wins,
     within-batch components collapse to their min-id representative —
-    and accepted rows land at ``out_path`` partitioned by batch id
-    with dynamic overwrite. Output-before-state-append crash ordering
-    and the bucket-equi-join scale shape are the batch operator's;
-    like every near-dup state, vectors cannot be watermark-evicted (a
-    paraphrase embedded a month later is still a duplicate), so state
-    is the append-only parquet table, not the streaming state store.
+    and accepted rows land at ``out_path``. Output-before-state-append
+    crash ordering and the bucket-equi-join scale shape are the batch
+    operator's; like every near-dup state, vectors cannot be
+    watermark-evicted (a paraphrase embedded a month later is still a
+    duplicate), so state is the append-only parquet table, not the
+    streaming state store.
     """
     from openoa_spark.datapipe.similarity import incremental_embedding_dedup
 
     def _process(batch: DataFrame, batch_id: int) -> None:
-        def _sink(accepted: DataFrame) -> None:
-            (
-                accepted.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(out_path)
-            )
-
         incremental_embedding_dedup(
             batch.sparkSession, batch, vec_col, id_col, state_path,
-            planes, threshold, round_digits=round_digits, sink=_sink,
+            planes, threshold, round_digits=round_digits,
+            sink=lambda accepted: _land(accepted, out_path, batch_id),
         )
 
-    w = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _each_batch(stream, _process, checkpoint)
 
 
 def stream_drift_monitor(
@@ -624,7 +523,6 @@ def stream_drift_monitor(
     metrics_path: str,
     checkpoint: str,
     n_buckets: int = 10,
-    available_now: bool = True,
     round_digits: int = 6,
 ):
     """Continuous distribution-drift monitoring: the REFERENCE
@@ -633,10 +531,9 @@ def stream_drift_monitor(
     snapshot — recompute by restarting the monitor), then every
     micro-batch reduces to ONE conditional-count aggregate over the
     frozen edges and a driver-side PSI fold (same regularization as
-    operators/qa.population_stability_index). One (batch_id, psi,
-    n_current, n_reference) row lands per batch at ``metrics_path``,
-    partitioned by batch id with dynamic overwrite — a replayed batch
-    overwrites its own report, never appends a duplicate.
+    operators/qa.population_stability_index). One (psi, n_current,
+    n_reference) row lands per batch at ``metrics_path`` under a
+    ``batch_id`` partition.
 
     This is the PSI gate of qa.population_stability_index made
     incremental: per-batch cost is a single map-side-combined
@@ -644,8 +541,6 @@ def stream_drift_monitor(
     the broadcast-sized edge list captured in the closure).
     """
     import math
-
-    from openoa_spark.operators.qa import population_stability_index  # noqa: F401  (semantics twin)
 
     qs = [i / n_buckets for i in range(1, n_buckets)]
     ref_nn = reference.where(F.col(value_col).isNotNull())
@@ -694,25 +589,13 @@ def stream_drift_monitor(
                 (cur_counts.get(i, 0) / n_cur) if n_cur else 0.0, floor
             )
             psi += (p_cur - p_ref[i]) * math.log(p_cur / p_ref[i])
-        spark = batch.sparkSession
-        (
-            spark.createDataFrame(
-                [(batch_id, round(psi, round_digits), n_cur, n_ref)],
-                "batch_id long, psi double, n_current bigint, n_reference bigint",
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(metrics_path)
+        row = batch.sparkSession.createDataFrame(
+            [(round(psi, round_digits), n_cur, n_ref)],
+            "psi double, n_current bigint, n_reference bigint",
         )
+        _land(row, metrics_path, batch_id, "batch_id")
 
-    w = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _each_batch(stream, _process, checkpoint)
 
 
 def stream_distinct_rollup(
@@ -721,16 +604,14 @@ def stream_distinct_rollup(
     grain_cols: list,
     state_path: str,
     checkpoint: str,
-    available_now: bool = True,
     lg_config_k: int = 12,
 ):
     """Streaming distinct-count maintenance via MERGEABLE sketches:
     each micro-batch reduces to one Datasketches-HLL row per grain
-    group (datapipe.sketches.hll_rollup) and lands under a
-    ``_batch_id`` partition with dynamic overwrite — the idempotent
-    per-batch-sink pattern — so the persisted state is (batch, grain,
-    sketch), bounded by batches × groups, never raw values. The
-    current estimate at ANY grain is a sketch union over the state
+    group (datapipe.sketches.hll_rollup) and lands under its batch
+    partition, so the persisted state is (batch, grain, sketch),
+    bounded by batches × groups, never raw values. The current
+    estimate at ANY grain is a sketch union over the state
     (read_distinct_rollup), so answering "distinct users this month"
     never rescans the stream's history; a replayed batch overwrites
     its own partition and the union is unchanged.
@@ -738,22 +619,12 @@ def stream_distinct_rollup(
     from openoa_spark.datapipe.sketches import hll_rollup
 
     def _process(batch: DataFrame, batch_id: int) -> None:
-        (
-            hll_rollup(batch, value_col, grain_cols, lg_config_k)
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(state_path)
+        _land(
+            hll_rollup(batch, value_col, grain_cols, lg_config_k),
+            state_path, batch_id,
         )
 
-    w = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _each_batch(stream, _process, checkpoint)
 
 
 def read_distinct_rollup(
@@ -879,7 +750,6 @@ def stream_cdc_apply(
     checkpoint: str,
     op_col: str = "_op",
     order_col: str | None = None,
-    available_now: bool = True,
 ):
     """Streaming CDC maintenance: each micro-batch of change rows
     (upserts + deletes) applies to the parquet table via the
@@ -898,13 +768,7 @@ def stream_cdc_apply(
             op_col=op_col, order_col=order_col,
         )
 
-    w = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _each_batch(stream, _process, checkpoint)
 
 
 def stream_media_metadata(
@@ -914,7 +778,6 @@ def stream_media_metadata(
     kind: str = "image",
     quarantine_path: str | None = None,
     id_col: str = "media_id",
-    available_now: bool = True,
 ):
     """Streaming decode stage for multimodal ingestion — the streaming
     member of the multimodal family (every other datapipe family has
@@ -927,10 +790,7 @@ def stream_media_metadata(
     Scale shape: payloads never reach a shuffle or the metadata table
     (decode once, persist scalars, drop bytes — the only tractable
     pattern for a 100 TB media corpus); the quarantine reroute is a
-    batch-local semi-join on the id. Batch-id dynamic-overwrite
-    partitioning makes a crash-replayed epoch rewrite its own output
-    partition instead of appending twice — the family-wide
-    idempotence contract (same as stream_quality_gate/stream_cdc).
+    batch-local semi-join on the id.
 
     Behavior change (round 7): with NO quarantine configured, rows the
     decoder rejects are KEPT in the metadata table as NULL-metadata
@@ -966,35 +826,17 @@ def stream_media_metadata(
                 if quarantine_path is not None
                 else meta
             )
-            (
-                good.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(metadata_path)
-            )
+            _land(good, metadata_path, batch_id)
             if quarantine_path is not None:
                 bad_ids = meta.where(F.col(valid_col).isNull()).select(
                     F.col("media_id").alias(id_col)
                 )
                 bad = batch.join(bad_ids, id_col, "left_semi")
-                (
-                    bad.withColumn("_batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("_batch_id")
-                    .parquet(quarantine_path)
-                )
+                _land(bad, quarantine_path, batch_id)
         finally:
             meta.unpersist()
 
-    w = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _each_batch(stream, _process, checkpoint)
 
 
 def stream_cluster_assign(
@@ -1006,7 +848,6 @@ def stream_cluster_assign(
     checkpoint: str,
     k: int = 8,
     iters_first: int = 3,
-    available_now: bool = True,
 ):
     """Streaming corpus clustering: each micro-batch runs
     datapipe.similarity.incremental_kmeans — the first batch fits the
@@ -1016,32 +857,17 @@ def stream_cluster_assign(
     foreachBatch epoch id is the suffstats batch key, so a replayed
     epoch assigns against the pre-append state (bit-identical output)
     and skips the duplicate append — the same crash discipline as the
-    streaming dedup twins. Assignments land at ``out_path``
-    partitioned by batch id with dynamic overwrite. State is k rows
-    per epoch (never vector-grain), so it cannot be the bottleneck at
-    any corpus size.
+    streaming dedup twins. Assignments land at ``out_path``. State is
+    k rows per epoch (never vector-grain), so it cannot be the
+    bottleneck at any corpus size.
     """
     from openoa_spark.datapipe.similarity import incremental_kmeans
 
     def _process(batch: DataFrame, batch_id: int) -> None:
-        def _sink(asg: DataFrame) -> None:
-            (
-                asg.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(out_path)
-            )
-
         incremental_kmeans(
             batch.sparkSession, batch, vec_col, id_col, state_path,
-            k=k, iters_first=iters_first, batch_id=batch_id, sink=_sink,
+            k=k, iters_first=iters_first, batch_id=batch_id,
+            sink=lambda asg: _land(asg, out_path, batch_id),
         )
 
-    w = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _each_batch(stream, _process, checkpoint)

@@ -341,3 +341,20 @@ def test_library_reads_only_deployment_env_vars():
         ("session.py", "SPARK_GRAFT_CPUS"),
         ("session.py", "SPARK_GRAFT_DRIVER_MEM"),
     }
+
+
+def test_only_sinks_owns_dynamic_partition_overwrite():
+    """Dynamic partition overwrite — the replay-idempotence policy of
+    every batch-id and derived-table writer — is spelled out only in
+    sources/sinks.py; other modules write through its helpers."""
+    import pathlib
+
+    import openoa_spark
+
+    pkg = pathlib.Path(openoa_spark.__file__).parent
+    owners = sorted(
+        path.relative_to(pkg).as_posix()
+        for path in pkg.rglob("*.py")
+        if "partitionOverwriteMode" in path.read_text()
+    )
+    assert owners == ["sources/sinks.py"]

@@ -410,6 +410,9 @@ def test_stream_quality_gate_routes_and_reports(spark, tmp_path):
         Rule("cat_not_null", "not_null", "cat"),
         Rule("val_nonneg", "in_range", "val", {"lo": 0, "hi": 100}),
         Rule("id_unique", "unique", "id"),  # table-level: report-only
+        Rule("cat_known", "in_set", "cat", {"values": ["a", "c"]}),
+        Rule("cat_word", "matches", "cat", {"pattern": "^[a-c]$"}),
+        Rule("val_small", "custom", "val", {"predicate": F.col("val") < 6}),
     ]
     metrics_path = str(tmp_path / "metrics")
     q = ingest.stream_quality_gate(
@@ -423,7 +426,8 @@ def test_stream_quality_gate_routes_and_reports(spark, tmp_path):
         for r in spark.read.parquet(metrics_path).collect()
     }
     assert metrics == {
-        "cat_not_null": 1, "val_nonneg": 1, "id_unique": 0
+        "cat_not_null": 1, "val_nonneg": 1, "id_unique": 0,
+        "cat_known": 2, "cat_word": 1, "val_small": 1,
     }
 
     good_ids = sorted(
@@ -434,7 +438,16 @@ def test_stream_quality_gate_routes_and_reports(spark, tmp_path):
         r["id"]: r["_broken_rules"]
         for r in spark.read.parquet(quar).collect()
     }
-    assert bad == {2: "val_nonneg", 3: "cat_not_null"}
+    assert bad == {
+        2: "val_nonneg,cat_known",
+        3: "cat_not_null,cat_known,cat_word,val_small",
+    }
+    # routing and report compile each rule through one predicate: per
+    # row rule, quarantined rows naming it == its reported violations
+    row_rules = [r.name for r in rules if r.kind != "unique"]
+    assert {
+        n: sum(n in b.split(",") for b in bad.values()) for n in row_rules
+    } == {n: metrics[n] for n in row_rules}
 
     # a second micro-batch routes independently and idempotently
     spark.createDataFrame([(5, "c", 1.0), (6, None, -2.0)], schema) \
@@ -446,9 +459,9 @@ def test_stream_quality_gate_routes_and_reports(spark, tmp_path):
     assert sorted(
         r["id"] for r in spark.read.parquet(good).collect()
     ) == [1, 4, 5]
-    assert spark.read.parquet(quar).where(
-        F.col("id") == 6
-    ).first()["_broken_rules"] == "cat_not_null,val_nonneg"
+    assert spark.read.parquet(quar).where(F.col("id") == 6).first()[
+        "_broken_rules"
+    ] == "cat_not_null,val_nonneg,cat_known,cat_word"
 
     # metrics sink idempotence: replaying batch 0 (fresh checkpoint,
     # same source — now 6 rows) OVERWRITES the batch-0 report instead
@@ -459,10 +472,51 @@ def test_stream_quality_gate_routes_and_reports(spark, tmp_path):
     )
     q3.awaitTermination(120)
     replayed = spark.read.parquet(metrics_path).collect()
-    assert len(replayed) == 3  # not 6: batch-0 partition overwritten
+    assert len(replayed) == 6  # not 12: batch-0 partition overwritten
     assert {r["rule"]: r["violations"] for r in replayed} == {
-        "cat_not_null": 2, "val_nonneg": 2, "id_unique": 0
+        "cat_not_null": 2, "val_nonneg": 2, "id_unique": 0,
+        "cat_known": 3, "cat_word": 2, "val_small": 1,
     }
+
+
+@pytest.mark.parametrize(
+    "case", ["unknown_kind", "duplicate_names", "empty"]
+)
+def test_stream_quality_gate_rejects_bad_rules_before_start(
+    spark, tmp_path, case
+):
+    """A malformed rule list fails at the call, before the query
+    starts: no micro-batch lands rows it cannot commit, and no
+    checkpoint is left behind for a restart to replay into the same
+    failure."""
+    import os
+
+    import pyspark.sql.types as T
+
+    from openoa_spark.operators.checks import Rule
+
+    src = str(tmp_path / "src")
+    good = str(tmp_path / "good")
+    quar = str(tmp_path / "quarantine")
+    ckpt = str(tmp_path / "ckpt")
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("cat", T.StringType())]
+    )
+    spark.createDataFrame([(1, "a"), (2, None)], schema).write.parquet(src)
+    rules = {
+        "unknown_kind": [Rule("cat_ok", "not_a_kind", "cat")],
+        "duplicate_names": [
+            Rule("cat_ok", "not_null", "cat"),
+            Rule("cat_ok", "in_set", "cat", {"values": ["a"]}),
+        ],
+        "empty": [],
+    }[case]
+    with pytest.raises(ValueError):
+        ingest.stream_quality_gate(
+            ingest.file_stream(spark, src, schema), rules, good, quar, ckpt,
+            metrics_path=str(tmp_path / "metrics"),
+        )
+    assert not any(os.path.exists(p) for p in (good, quar, ckpt))
 
 
 def test_stream_near_dedup_across_batches(spark, tmp_path):
@@ -1236,62 +1290,53 @@ def test_stream_cluster_assign_kill_mid_batch_replay(spark, tmp_path):
     assert snapshot() == before
 
 
-def test_stream_time_rollup_day_partitioned_layout(spark, tmp_path):
-    """r12 (VERDICT item 4): partition_raw_by_day=True lands raw as
-    _day=<bucket-day>/_batch_id=<n> leaves, the rollup still equals a
-    full recompute of raw, and replaying the maintenance (crash
-    replay) changes nothing — same invariants as the default layout,
-    plus the layout contract itself."""
-    import glob
-    import os
+@pytest.mark.parametrize("writer", ["quality_gate", "time_rollup"])
+def test_batch_id_sinks_kill_mid_batch_replay(spark, tmp_path, writer):
+    """Crash-mid-batch replay for the quality gate and the time
+    rollup: after two clean batches, epoch 1's commit is deleted and
+    the restarted query re-executes it with the same batch id. Every
+    table it lands (good, quarantine and metrics for the gate; raw and
+    rollup for the time rollup) must be unchanged row for row."""
+    from openoa_spark.operators.checks import Rule
 
-    src = str(tmp_path / "in")
-    raw = str(tmp_path / "raw")
-    roll = str(tmp_path / "roll")
-    ck = str(tmp_path / "ck")
-
-    _rows(spark, 40).write.parquet(src)
-    stream = ingest.file_stream(spark, src, SCHEMA)
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    metrics = str(tmp_path / "metrics")
+    rules = [
+        Rule("val_small", "in_range", "value", {"lo": 0, "hi": 15}),
+        Rule("seq_unique", "unique", "seq"),
+    ]
     aggs = {"sum_v": F.sum("value"), "n": F.count(F.lit(1))}
-    q = ingest.stream_time_rollup(
-        stream, raw, roll, "time", "hour", aggs, ck, keys=["asset_id"],
-        partition_raw_by_day=True,
-    )
-    q.processAllAvailable()
-    q.stop()
 
-    # layout contract: day-grain directories above batch-id leaves
-    day_dirs = sorted(glob.glob(os.path.join(raw, "_day=*")))
-    assert day_dirs, os.listdir(raw)
-    assert all(
-        glob.glob(os.path.join(d, "_batch_id=*")) for d in day_dirs
-    )
+    def run():
+        stream = ingest.file_stream(spark, src, SCHEMA)
+        if writer == "quality_gate":
+            q = ingest.stream_quality_gate(
+                stream, rules, a, b, ckpt, metrics_path=metrics
+            )
+        else:
+            q = ingest.stream_time_rollup(
+                stream, a, b, "time", "hour", aggs, ckpt, keys=["asset_id"]
+            )
+        assert q.awaitTermination(600)
 
-    raw_df = spark.read.parquet(raw).drop("_batch_id")
-    assert raw_df.count() == 40
-    got = {
-        (r["_bucket_day"], str(r["_bucket"]), r["asset_id"]): (r["sum_v"], r["n"])
-        for r in spark.read.parquet(roll).collect()
-    }
-    want = {
-        (r["_bucket_day"], str(r["_bucket"]), r["asset_id"]): (r["sum_v"], r["n"])
-        for r in raw_df.withColumn("_bucket", F.date_trunc("hour", "time"))
-        .groupBy("_bucket", "asset_id")
-        .agg(F.sum("value").alias("sum_v"), F.count(F.lit(1)).alias("n"))
-        .withColumn("_bucket_day", F.to_date("_bucket"))
-        .collect()
-    }
-    assert got == want
+    def snapshot():
+        paths = [a, b] + ([metrics] if writer == "quality_gate" else [])
+        return [
+            sorted((tuple(r) for r in spark.read.parquet(p).collect()), key=str)
+            for p in paths
+        ]
 
-    # crash replay of the maintenance with the partition-aware prune
-    from openoa_spark.operators.timeseries import refresh_time_rollup
+    # both batches share the 00:00 hour, so epoch 1's rollup refresh
+    # recomputes a bucket epoch 0 already wrote
+    _rows(spark, 40).write.mode("append").parquet(src)
+    run()
+    _rows(spark, 20, start_min=40).write.mode("append").parquet(src)
+    run()
+    before = snapshot()
+    assert all(before)
 
-    refresh_time_rollup(
-        raw_df, raw_df, "time", roll, "hour", aggs, ["asset_id"],
-        day_col="_day",
-    )
-    again = {
-        (r["_bucket_day"], str(r["_bucket"]), r["asset_id"]): (r["sum_v"], r["n"])
-        for r in spark.read.parquet(roll).collect()
-    }
-    assert again == got
+    _kill_mid_batch(ckpt, 1)
+    run()
+    assert snapshot() == before

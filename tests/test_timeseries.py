@@ -356,68 +356,3 @@ def test_asof_right_order_cols_null_valued_winner_is_skipped(spark):
     ).collect()
     assert len(out) == 1
     assert out[0]["x"] == 10.0
-
-
-def test_refresh_time_rollup_day_col_prunes_at_file_listing(spark, tmp_path):
-    """r12 (VERDICT item 4): with a day-partitioned raw table and
-    day_col set, the refresh's invalidation filter applies to the
-    PARTITION column — the recomputed slice's scan carries
-    PartitionFilters on _day (file-listing pruning, not just
-    row-group stats) — and the maintained table is identical to the
-    unpartitioned refresh path."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from openoa_spark.operators.timeseries import refresh_time_rollup
-
-    rows = [
-        (dt.datetime(2024, 3, d, h, 0), float(d * 100 + h))
-        for d in (1, 2, 3)
-        for h in range(6)
-    ]
-    raw = spark.createDataFrame(rows, "ts timestamp, v double")
-    raw_day = raw.withColumn("_day", F.to_date(F.date_trunc("day", "ts")))
-    raw_day.write.partitionBy("_day").parquet(str(tmp_path / "raw"))
-    raw_back = spark.read.parquet(str(tmp_path / "raw"))
-
-    aggs = {"sum_v": F.sum("v"), "n": F.count(F.lit(1))}
-    late = spark.createDataFrame(
-        [(dt.datetime(2024, 3, 2, 7, 0), 9.0)], "ts timestamp, v double"
-    )
-    raw2 = raw.unionByName(late)
-    raw2_day = raw2.withColumn("_day", F.to_date(F.date_trunc("day", "ts")))
-    raw2_day.write.mode("overwrite").partitionBy("_day").parquet(
-        str(tmp_path / "raw2")
-    )
-    raw2_back = spark.read.parquet(str(tmp_path / "raw2"))
-
-    # seed both rollups with the full table, then refresh day 2 only
-    p_part = str(tmp_path / "roll_part")
-    p_plain = str(tmp_path / "roll_plain")
-    refresh_time_rollup(raw_back, raw, "ts", p_part, "day", aggs,
-                        day_col="_day")
-    refresh_time_rollup(raw, raw, "ts", p_plain, "day", aggs)
-    slice_part = refresh_time_rollup(
-        raw2_back, late, "ts", p_part, "day", aggs, day_col="_day"
-    )
-    refresh_time_rollup(raw2, late, "ts", p_plain, "day", aggs)
-
-    # the delta slice's raw scan prunes on the partition column: the
-    # PartitionFilters clause itself must reference _day
-    import re
-
-    plan = slice_part._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"PartitionFilters: \[[^\]]*\]", plan)
-    assert m and "_day" in m.group(0), plan
-
-    got_part = {
-        r["_bucket_day"]: (r["sum_v"], r["n"])
-        for r in spark.read.parquet(p_part).collect()
-    }
-    got_plain = {
-        r["_bucket_day"]: (r["sum_v"], r["n"])
-        for r in spark.read.parquet(p_plain).collect()
-    }
-    assert got_part == got_plain
-    assert got_part[dt.date(2024, 3, 2)] == (200.0 * 6 + sum(range(6)) + 9.0, 7)
