@@ -3,7 +3,8 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-
-insensitive value-hash → CORRECTNESS_r{N}.json).
+insensitive value-hash; past rounds' results: git show
+9378dbf:CORRECTNESS_r12.json).
 
 The real registry lives in ``openoa_spark.registry``; this module is a
 thin adapter.

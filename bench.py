@@ -66,11 +66,14 @@ BENCH_QUERIES = [
 REPS = 3
 
 
-def _duck_connection(sf_dir: str):
+def _duck_connection(sf_dir: str, threads: int):
+    """DuckDB views over the parquet tables, on as many threads as the
+    Spark session has cores, so neither side of a pair oversubscribes
+    the host."""
     import duckdb
 
     con = duckdb.connect()
-    con.execute("SET threads TO 32")
+    con.execute(f"SET threads TO {threads}")
     for t in ("region nation customer supplier part orders lineitem "
               "events documents embeddings").split():
         p = f"{sf_dir}/{t}.parquet"
@@ -85,13 +88,13 @@ def _duck_connection(sf_dir: str):
     return con
 
 
-def time_oracles(sf_dir: str) -> dict[str, float]:
+def time_oracles(sf_dir: str, threads: int) -> dict[str, float]:
     """--oracle mode: time each bench query's DuckDB SQL twin on the
-    same parquet at the same SF (32 threads, median of 3 runs) —
+    same parquet at the same SF (median of 3 runs) —
     the transparent same-machine baseline for the 'within 2x of
     DuckDB' target. Printed as a SEPARATE JSON line; the primary
     contract line stays unchanged."""
-    con = _duck_connection(sf_dir)
+    con = _duck_connection(sf_dir, threads)
     osql = registry.oracle_sql()
     out = {}
     for name in BENCH_QUERIES:
@@ -113,7 +116,8 @@ def main():
     except ValueError:
         sf = -1.0
     if "--oracle" in sys.argv:
-        o = time_oracles(sf_dir)
+        # the core count get_session gives the engine (SPARK_GRAFT_CPUS or all)
+        o = time_oracles(sf_dir, int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count())))
         print(json.dumps({
             "metric": "duckdb_oracle_total_wall",
             "value": round(sum(o.values()), 4),
@@ -125,7 +129,8 @@ def main():
     spark = get_session("openoa-spark-bench")
     qs = registry.queries()
     with_oracle = "--no-oracle" not in sys.argv
-    con = _duck_connection(sf_dir) if with_oracle else None
+    con = (_duck_connection(sf_dir, spark.sparkContext.defaultParallelism)
+           if with_oracle else None)
     osql = registry.oracle_sql() if with_oracle else {}
 
     # JVM/codegen warmup AT THE BENCH SF so per-query numbers measure

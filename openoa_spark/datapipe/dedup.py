@@ -805,8 +805,8 @@ def near_dedup_keep_best(
     members = scored.join(comp, scored[id_col] == F.col("_cid")).select(
         "component", F.col(id_col).alias("_id"), "_score"
     )
-    # kept = df \ losers: one anti-join, one corpus scan (1978776;
-    # plans/r12/near_dedup_keep_best_docs_{before,after}.txt)
+    # kept = df \ losers: one anti-join, one corpus scan (1978776; plans:
+    # git show 9378dbf:plans/r12/near_dedup_keep_best_docs_{before,after}.txt)
     winners = (
         members.groupBy("component")
         .agg(

@@ -26,14 +26,14 @@ def dot(a: Column, b: Column, dim: int | None = None) -> Column:
     instead of the fold. This is the fold's EXACT computation sequence
     — same association, same leading 0.0 (so even the sign of an
     all-negative-zero sum matches) — but as plain codegen arithmetic
-    with no per-evaluation zip_with array (receipts in
-    SEMDEDUP48_r12.json). CONTRACT: with ``dim``, the result is NULL
-    unless both vectors have exactly ``dim`` elements, with ANSI mode
-    on or off; a NULL, short, long or empty vector never raises. That
-    matches the fold whenever a vector's length differs from the
-    other's (the fold pads the shorter array with NULL). All embedding
-    tables here are fixed-width, so the sites below pass the
-    plane/centroid width.
+    with no per-evaluation zip_with array (receipts:
+    ``git show 9378dbf:SEMDEDUP48_r12.json``). CONTRACT: with ``dim``,
+    the result is NULL unless both vectors have exactly ``dim``
+    elements, with ANSI mode on or off; a NULL, short, long or empty
+    vector never raises. That matches the fold whenever a vector's
+    length differs from the other's (the fold pads the shorter array
+    with NULL). All embedding tables here are fixed-width, so the sites
+    below pass the plane/centroid width.
     """
     if dim is not None:
         expr = F.lit(0.0)
@@ -1353,7 +1353,8 @@ def _semantic_pairs(
         F.col("_id").alias("id_b"), F.col("_v").alias("_vb"),
         F.col("_n").alias("_nb"), "cluster",
     )
-    # hot-key salt, same pair set (e22c0b1; receipts: SEMDEDUP48_r12.json)
+    # hot-key salt, same pair set (e22c0b1; receipts:
+    # git show 9378dbf:SEMDEDUP48_r12.json)
     if salt > 1:
         a = a.withColumn(
             "_salt", F.pmod(F.xxhash64("id_a"), F.lit(salt)).cast("int")

@@ -32,10 +32,6 @@ def bpe_ish_token_count(col: Column | str) -> Column:
     return F.regexp_count(_c(col), F.lit(r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"))
 
 
-def char_count(col: Column | str) -> Column:
-    return F.length(_c(col))
-
-
 def char_array(col: Column | str) -> Column:
     """Code-point array of the text in O(len): ``split('')`` on the
     pure-ASCII fast path (byte length == char length), one-code-point

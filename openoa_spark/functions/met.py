@@ -47,16 +47,6 @@ def circular_mean_agg(angle_deg: Column | str) -> Column:
     return (mean + 360) % 360
 
 
-def circular_mean_rowwise(*angles: Column | str) -> Column:
-    """Row-wise circular mean across N angle columns (degrees)."""
-    sins = sum((F.sin(F.radians(_c(a))) for a in angles[1:]),
-               F.sin(F.radians(_c(angles[0]))))
-    coss = sum((F.cos(F.radians(_c(a))) for a in angles[1:]),
-               F.cos(F.radians(_c(angles[0]))))
-    n = F.lit(float(len(angles)))
-    return (F.degrees(F.atan2(sins / n, coss / n)) + 360) % 360
-
-
 def compute_wind_direction(u: Column | str, v: Column | str) -> Column:
     """Wind direction [deg, 0-360) from u (east) and v (north)
     components; 180 + atan2(u, v), with 360 mapped to 0.

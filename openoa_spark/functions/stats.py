@@ -41,15 +41,6 @@ from pyspark.sql import Column, functions as F
 _EXACT_SUMS = True
 
 
-def exact_sums_enabled() -> bool:
-    return _EXACT_SUMS
-
-
-def set_exact_sums(flag: bool) -> None:
-    global _EXACT_SUMS
-    _EXACT_SUMS = bool(flag)
-
-
 @contextmanager
 def fast_sums():
     """Build queries with plain double aggregation (deploy fast path).

@@ -9378,9 +9378,10 @@ _PRIORITY_R6 = [
 _PRIORITY_R5 = [
     # Round 5: the complete never-driver-checked set (29 queries) —
     # after rounds 1-4, these are the ONLY registry entries without an
-    # all-green CORRECTNESS_r*.json row. With all 29 in the 50-name
-    # gate window, every one of the 176 registry queries will have
-    # been driver-verified at least once.
+    # all-green row in a round's correctness receipt (git show
+    # 9378dbf:CORRECTNESS_r04.json and the rounds before it). With all
+    # 29 in the 50-name gate window, every one of the 176 registry
+    # queries will have been driver-verified at least once.
     "asof_tolerance_hourly_value", "extrapolated_windspeed",
     "uv_components", "veer_values", "feet_to_meter_part",
     "logistic5_capped_power_values", "describe_quantity_by_flag",
@@ -9436,7 +9437,8 @@ _PRIORITY_R5 = [
 # the r6 window. From r6 on the window policy is:
 # (1) any query whose PLAN changed this round, (2) any brand-new
 # query, (3) fill remaining slots with the longest-unchecked queries
-# (check the CORRECTNESS_r*.json history for staleness).
+# (check the correctness receipts for staleness: git show
+# 9378dbf:CORRECTNESS_r12.json and the rounds before it).
 
 def _reorder() -> None:
     assert not (set(_PRIORITY) - set(_REGISTRY)), sorted(

@@ -46,24 +46,6 @@ def read_table(
     return df
 
 
-def validate_columns(df: DataFrame, required: list[str]) -> list[str]:
-    """Missing-column check (plant.py:217-237): metadata only."""
-    return [c for c in required if c not in df.columns]
-
-
-def cast_failure_counts(df: DataFrame, casts: dict[str, str]) -> dict[str, int]:
-    """Per-column count of values that fail a cast (plant.py:240-267):
-    one aggregate pass with try_cast."""
-    aggs = [
-        F.count(
-            F.when(F.col(c).isNotNull() & F.try_cast(F.col(c), t).isNull(), 1)
-        ).alias(c)
-        for c, t in casts.items()
-    ]
-    row = df.agg(*aggs).first()
-    return {c: int(row[c]) for c in casts}
-
-
 def load_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load the driver's TPC-H-ish test tables and register temp views."""
     out = {}

@@ -5,8 +5,8 @@ spans), captured at the bench scale factor.
 
 Usage: python tools/dump_plans.py [sf_dir] [out_md] [query ...]
 
-With no query names it dumps the bench headline queries (the
-PLANS_r{N}.md round artifact). For a before/after plan diff, run the
+With no query names it dumps the bench headline queries (the round's
+plan artifact). For a before/after plan diff, run the
 same names on both trees, each in a fresh process, and diff the files.
 """
 

@@ -5,7 +5,7 @@ cartesian/NLJ joins, and whether a filtered scan pushes predicates.
 
 tests/test_plans.py asserts the hard properties mechanically on every
 CI run; this tool makes the same evidence VISIBLE as an artifact
-(PLANAUDIT_r{N}.md) so plan regressions are reviewable, not just
+(the round's plan audit) so plan regressions are reviewable, not just
 gating.
 
 Usage: python tools/plan_audit.py [sf_dir] [out_md]

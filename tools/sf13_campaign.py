@@ -4,7 +4,7 @@ The r10 campaign ran 23 heavy queries at 13× sf0.1 and caught a real
 cross-engine decimal→double divergence invisible at sf0.1 (VERDICT r10
 — the class of bug only at-scale verification finds). This runner
 extends it to EVERY registry query: build the 13×-inflated probe
-layout once (tools/scale_probe.build_probe_dir — key-offset copies,
+layout once (tools/probe.build_probe_dir — key-offset copies,
 time-shifted events, rotation-varied embeddings), then drive
 tools/check_correctness.py over the whole registry in small fresh-
 process batches so one pathological DuckDB twin cannot poison the
@@ -14,7 +14,7 @@ to one resumable artifact.
 Resumable: names already PASS/ROWS in the artifact are skipped, so a
 re-run after a fix only re-checks failures and unvisited names.
 
-Usage: python tools/sf13_campaign.py [factor] [artifact_path]
+Usage: python tools/sf13_campaign.py [factor] [artifact, default spark-warehouse/sf13_campaign.txt]
 """
 
 from __future__ import annotations
@@ -30,7 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 BASE = "/root/testdata/sf0.1"
 PROBE = os.path.abspath("spark-warehouse/sf13_campaign")
 
-# Twins/engines measured slow at 13× (r10 artifact + sf1_bench): run
+# Twins/engines measured slow at 13× (r10 campaign + sf1 paired bench): run
 # solo with a long budget so a straggler can't time out a whole batch.
 SLOW_SOLO = {
     # quadratic-within-cluster twin (r10 DNF at 600 s batch budget)
@@ -66,7 +66,7 @@ def build_probe(factor: int) -> None:
         print(f"probe dir {PROBE} exists, reusing")
         return
     from openoa_spark.session import get_session
-    from tools.scale_probe import build_probe_dir
+    from tools.probe import build_probe_dir
 
     spark = get_session("sf13-campaign-build")
     t0 = time.time()
@@ -127,7 +127,7 @@ def run_batch(names: list[str], timeout: int, artifact: str) -> list[str]:
 
 def main() -> None:
     factor = int(sys.argv[1]) if len(sys.argv) > 1 else 13
-    artifact = sys.argv[2] if len(sys.argv) > 2 else "CORRECTNESS_sf13_r11.txt"
+    artifact = sys.argv[2] if len(sys.argv) > 2 else PROBE + ".txt"
     build_probe(factor)
 
     from openoa_spark import registry

@@ -3,7 +3,7 @@ correctness pinning (micro-batch == batch parity, crash-replay tests)
 but no scale measurement until now (r9 verdict item 6).
 
 Inflates the events table x``factor`` (time-shifted copies — the long-
-running-plant growth pattern of tools/scale_probe.py), lands it as a
+running-plant growth pattern of tools/probe.py), lands it as a
 range-partitioned multi-file parquet source so availableNow splits it
 into real micro-batches in event-time order, then drives each
 streaming operator end-to-end and records PER MICRO-BATCH: input
