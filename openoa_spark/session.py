@@ -29,6 +29,23 @@ def get_session(
     small-scale runs don't pay 200-task scheduling overhead, while a
     cluster deployment overrides via ``extra_conf`` (at 100 TB you want
     shuffle partitions sized so each task holds ~128-256 MB).
+
+    Two defaults remove JVM work the event log cannot see; both were
+    counted per pass of the ``stream_ingest`` benchmark (SCALING.md,
+    "Forks and recompiles"), and ``extra_conf`` overrides either:
+
+    - Local masters checkpoint streams through the FileSystem-based
+      checkpoint manager. Without libhadoop, every rename of the
+      default FileContext manager runs ``FileUtil.readLink``, which
+      forks a ``readlink`` process (720 per pass); the FileSystem
+      manager renames with ``File.renameTo``. The checkpoint layout
+      and its ``.crc`` checksums stay the same. Other masters keep
+      the default, since on HDFS only FileContext renames atomically
+      with overwrite.
+    - The generated-code cache holds 1000 classes, not 100. It is a
+      Guava LRU in 4 segments, so at 100 each segment evicts above 25
+      entries, and every warm pass recompiled byte-identical classes
+      (40 per ``stream_ingest`` pass, 20-26 per ``plant_mc`` pass).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or f"local[{cpus}]"
@@ -37,6 +54,7 @@ def get_session(
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -47,6 +65,12 @@ def get_session(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
+    if master.startswith("local"):
+        builder = builder.config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

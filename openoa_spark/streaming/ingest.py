@@ -435,7 +435,12 @@ def stream_time_rollup(
         try:
             _land(batch, raw_path, batch_id)
             spark = batch.sparkSession
-            raw = spark.read.parquet(raw_path).drop("_batch_id")
+            # the batch's schema spares a footer-inference job per batch;
+            # _batch_id still comes back as the partition column
+            raw = (
+                spark.read.schema(batch.schema).parquet(raw_path)
+                .drop("_batch_id")
+            )
             refresh_time_rollup(
                 raw, batch, time_col, rollup_path, freq, aggs, keys
             )

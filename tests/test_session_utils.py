@@ -358,3 +358,41 @@ def test_only_sinks_owns_dynamic_partition_overwrite():
         if "partitionOverwriteMode" in path.read_text()
     )
     assert owners == ["sources/sinks.py"]
+
+
+def test_local_sessions_checkpoint_through_filesystem_manager(spark, tmp_path):
+    """A local session's streaming checkpoints rename through the
+    Hadoop FileSystem (``File.renameTo``), not through FileContext,
+    whose renames fork a ``readlink`` process each when libhadoop is
+    absent."""
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getName() == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+
+def test_codegen_cache_keeps_a_pass_worth_of_classes(spark):
+    """Re-running 120 distinct queries compiles no generated class
+    again: the cache must hold more than the 100 classes at which
+    Spark's default cache (4 LRU segments of 25) starts evicting."""
+    compiles = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    one_row = spark.range(0, 1, 1, 1)
+
+    def run_all():
+        # the literal is inlined in the generated source: one class
+        # each, compiled on the driver when the plan becomes an RDD
+        for i in range(120):
+            one_row.selectExpr(f"id * {i} + {i + 1} AS x")._jdf.queryExecution().toRdd()
+
+    run_all()
+    first = compiles.getCount()
+    run_all()
+    assert compiles.getCount() == first

@@ -576,20 +576,27 @@ def test_stream_time_rollup_maintains_continuous_aggregate(spark, tmp_path):
     """Raw + rollup stay consistent across micro-batches: after the
     stream drains, the rollup equals a full recompute of the raw
     table, and re-running the maintenance for the last batch (crash
-    replay) changes nothing."""
+    replay) changes nothing. Each micro-batch runs exactly five jobs:
+    the raw landing write and the rollup refresh; re-reading raw
+    without its schema would add a footer-inference job per batch."""
     src = str(tmp_path / "in")
     raw = str(tmp_path / "raw")
     roll = str(tmp_path / "roll")
     ck = str(tmp_path / "ck")
 
-    _rows(spark, 40).write.parquet(src)
-    stream = ingest.file_stream(spark, src, SCHEMA)
+    _rows(spark, 40).repartition(4).write.parquet(src)
+    stream = ingest.file_stream(spark, src, SCHEMA, max_files_per_trigger=2)
     aggs = {"sum_v": F.sum("value"), "n": F.count(F.lit(1))}
     q = ingest.stream_time_rollup(
         stream, raw, roll, "time", "hour", aggs, ck, keys=["asset_id"]
     )
     q.processAllAvailable()
     q.stop()
+    batches = len(q.recentProgress)
+    assert batches == 2
+    # a streaming query's jobs run in the job group of its run id
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) == 5 * batches
 
     raw_df = spark.read.parquet(raw).drop("_batch_id")
     assert raw_df.count() == 40
@@ -1138,10 +1145,11 @@ def _kill_mid_batch(ckpt: str, epoch: int) -> None:
     commit = os.path.join(ckpt, "commits", str(epoch))
     assert os.path.exists(commit), f"no commit log for epoch {epoch}"
     os.remove(commit)
-    # local ChecksumFs writes a .N.crc sidecar next to each commit
-    # entry; a crashed process would have written neither, and an
-    # orphaned sidecar makes the replayed epoch's commit rename fail
-    # ("Rename destination .N.crc already exists" -> STREAM_FAILED)
+    # the local checksummed FileSystem writes a .N.crc sidecar next to
+    # each commit entry; a crashed process would have written neither.
+    # Under the FileContext checkpoint manager (ChecksumFs) an orphaned
+    # sidecar made the replayed epoch's commit rename fail ("Rename
+    # destination .N.crc already exists" -> STREAM_FAILED)
     crc = os.path.join(ckpt, "commits", f".{epoch}.crc")
     if os.path.exists(crc):
         os.remove(crc)

@@ -11,9 +11,13 @@ tables. Per name and size: one warm run, then one in the job group
 built inside ``stats.fast_sums()`` as in ``bench.py``. The JVM then stops
 and ``perfbench.eventlog.fold`` reads the event log. Per name, one JSON
 line: per size ``build_ms`` (a pipeline does its Spark work in the build),
-``catalyst_ms`` (``executedPlan()``), ``wall_s``, ``jobs``, ``tasks``,
-``cpu_s``, ``shuffle_bytes``, ``result_bytes``; then ``cpu_ratio``,
-``shuffle_ratio``, ``linear_ok``. A last line has the run-wide ``gc_s``,
+``catalyst_ms`` (``executedPlan()``), ``wall_s``, ``proc_cpu_s``, ``jobs``,
+``tasks``, ``cpu_s``, ``shuffle_bytes``, ``result_bytes``; then ``cpu_ratio``,
+``shuffle_ratio``, ``linear_ok``. ``cpu_s`` is executor task CPU from the
+event log; ``proc_cpu_s`` is ``perfbench.harness.cpu_s()`` around the
+measured run: this process, every JVM thread (JIT and GC too), Python
+workers and reaped children such as forked shell commands. The
+linearity verdict stays on ``cpu_s``. A last line has the run-wide ``gc_s``,
 ``spill_bytes``, ``peak_exec_mem_bytes`` and ``skew_max``, warm runs
 included. Exit status 1 on a failed or superlinear name. Scratch files
 live in ``spark-warehouse/probe/`` until the fold.
@@ -46,7 +50,7 @@ from openoa_spark.datapipe.similarity import semantic_dedup  # noqa: E402
 from openoa_spark.functions import stats  # noqa: E402
 from openoa_spark.plant import PlantData  # noqa: E402
 from perfbench import eventlog  # noqa: E402
-from perfbench.harness import Recorder, spark_session, stop_jvm  # noqa: E402
+from perfbench.harness import Recorder, cpu_s, spark_session, stop_jvm  # noqa: E402
 
 CORES = 4
 WORK = os.path.join(ROOT, "spark-warehouse", "probe")
@@ -310,6 +314,7 @@ PIPELINES = {f.__name__: f for f in (
 def measure(spark, rec: Recorder, span: str, fn, d: str, size: int) -> dict:
     """One warm run, then one measured run in the job group ``span``."""
     fn(spark, d, size).write.format("noop").mode("overwrite").save()
+    c0 = cpu_s()
     with rec.span(span):
         t0 = time.perf_counter()
         df = fn(spark, d, size)
@@ -318,7 +323,7 @@ def measure(spark, rec: Recorder, span: str, fn, d: str, size: int) -> dict:
         t2 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
     return {"build_ms": round((t1 - t0) * 1e3, 1), "catalyst_ms": round((t2 - t1) * 1e3, 1),
-            "wall_s": round(rec.span_wall[span], 3)}
+            "wall_s": round(rec.span_wall[span], 3), "proc_cpu_s": round(cpu_s() - c0, 3)}
 
 
 def report(name: str, runs: dict, fold, factor: int) -> dict:
