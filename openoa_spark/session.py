@@ -11,9 +11,18 @@ everything to UTC).
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
+import zipfile
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+_FS_SOURCE = Path(__file__).parent / "jvm" / "NioLocalFileSystem.java"
+_FS_CLASS = "openoa_spark.jvm.NioLocalFileSystem"
 
 
 def get_session(
@@ -30,9 +39,9 @@ def get_session(
     cluster deployment overrides via ``extra_conf`` (at 100 TB you want
     shuffle partitions sized so each task holds ~128-256 MB).
 
-    Two defaults remove JVM work the event log cannot see; both were
+    Three defaults remove JVM work the event log cannot see; each was
     counted per pass of the ``stream_ingest`` benchmark (SCALING.md,
-    "Forks and recompiles"), and ``extra_conf`` overrides either:
+    "Forks and recompiles"), and ``extra_conf`` overrides any of them:
 
     - Local masters checkpoint streams through the FileSystem-based
       checkpoint manager. Without libhadoop, every rename of the
@@ -46,6 +55,17 @@ def get_session(
       Guava LRU in 4 segments, so at 100 each segment evicts above 25
       entries, and every warm pass recompiled byte-identical classes
       (40 per ``stream_ingest`` pass, 20-26 per ``plant_mc`` pass).
+    - ``local`` and ``local[N]`` masters write ``file://`` paths through
+      ``NioLocalFileSystem`` (``jvm/NioLocalFileSystem.java``, built
+      once by ``local_fs_conf``). Without libhadoop, Hadoop's local
+      file system forks ``chmod`` for every file, ``.crc`` and
+      directory it creates (754 per pass); this one sets the same
+      mode in-process. Files, checksums and modes stay the same.
+      Without ``javac`` the session keeps Hadoop's file system, as
+      ``local-cluster`` does, whose executor JVMs lack the jar.
+
+    ANSI mode is pinned on, as Spark 4.1 defaults it, so a Spark with
+    another default runs the semantics the tests check.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or f"local[{cpus}]"
@@ -54,6 +74,7 @@ def get_session(
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
+        .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
@@ -71,11 +92,76 @@ def get_session(
             "org.apache.spark.sql.execution.streaming.checkpointing."
             "FileSystemBasedCheckpointFileManager",
         )
-    for k, v in (extra_conf or {}).items():
+    fs_conf = {}
+    if master == "local" or master.startswith("local["):
+        fs_conf = local_fs_conf(extra_conf)
+    for k, v in {**(extra_conf or {}), **fs_conf}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_fs_conf(extra_conf: dict | None = None) -> dict:
+    """The confs that make ``file://`` paths use ``NioLocalFileSystem``
+    in a driver-only (local) JVM, merged with the caller's
+    ``extra_conf``: its ``spark.driver.extraClassPath`` is kept ahead
+    of the jar, and its own ``spark.hadoop.fs.file.impl`` wins. Empty
+    when the jar cannot be built or loaded; ``fs.file.impl`` is never
+    set without the jar on the class path."""
+    jar = _local_fs_jar()
+    if jar is None:
+        return {}
+    extra_conf = extra_conf or {}
+    cp = [extra_conf.get("spark.driver.extraClassPath"), str(jar)]
+    conf = {"spark.driver.extraClassPath": os.pathsep.join(filter(None, cp))}
+    if "spark.hadoop.fs.file.impl" not in extra_conf:
+        conf["spark.hadoop.fs.file.impl"] = _FS_CLASS
+    return conf
+
+
+def _local_fs_jar() -> Path | None:
+    """``NioLocalFileSystem`` compiled against the Hadoop jars the
+    driver JVM loads (found by pyspark's own ``SPARK_HOME`` lookup) and
+    cached under ``~/.cache/openoa_spark`` by the SHA-256 of the source
+    and the Hadoop API jar's name. ``javac`` builds it on first use in
+    about a second. None without ``javac``, when the build fails, or
+    when this process already runs a JVM launched without the jar."""
+    from pyspark import SparkContext
+    from pyspark.find_spark_home import _find_spark_home
+
+    javac = shutil.which("javac")
+    jars = Path(_find_spark_home()) / "jars"
+    api = sorted(jars.glob("hadoop-client-api-*.jar"))
+    if javac is None or not api:
+        return None
+    key = hashlib.sha256(_FS_SOURCE.read_bytes() + api[-1].name.encode())
+    try:
+        cache = Path.home() / ".cache" / "openoa_spark"
+        jar = cache / f"NioLocalFileSystem-{key.hexdigest()[:16]}.jar"
+        if not jar.exists():
+            cache.mkdir(parents=True, exist_ok=True)
+            with tempfile.TemporaryDirectory(dir=cache) as tmp:
+                subprocess.run(
+                    [javac, "--release", "17", "-nowarn",
+                     "-cp", str(jars / "*"), "-d", tmp, str(_FS_SOURCE)],
+                    check=True, capture_output=True, timeout=300,
+                )
+                part = Path(tmp) / "part.jar"
+                with zipfile.ZipFile(part, "w") as z:
+                    for cls in sorted(Path(tmp).rglob("*.class")):
+                        z.write(cls, cls.relative_to(tmp).as_posix())
+                # atomic: a concurrent session sees no jar or a whole one
+                os.replace(part, jar)
+    except (OSError, RuntimeError, subprocess.SubprocessError):
+        return None
+    jvm = SparkContext._jvm
+    if jvm is not None:
+        # a running JVM keeps the class path it was launched with
+        launched = jvm.java.lang.System.getProperty("java.class.path")
+        if str(jar) not in launched.split(os.pathsep):
+            return None
+    return jar
 
 
 def ship_package(spark) -> None:
@@ -86,10 +172,6 @@ def ship_package(spark) -> None:
     ``sys.path`` mutations). Idempotent per SparkContext. Needed
     before shipping closures that reference package code (e.g. the
     distributed Monte-Carlo paths)."""
-    import os
-    import tempfile
-    import zipfile
-
     sc = spark.sparkContext
     if getattr(sc, "_openoa_pkg_shipped", False):
         return

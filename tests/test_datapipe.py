@@ -1517,6 +1517,38 @@ def test_dot_dim_is_null_on_length_mismatch(spark, ansi):
         assert got[i] == (None, None, None), (i, got[i])
 
 
+def test_dot_wide_dim_folds_with_the_same_contract(spark):
+    # above the unroll cap, dot(dim=) is the guarded fold: bit-identical
+    # to the plain fold on dim-long pairs, NULL on any other length
+    import random
+
+    rng = random.Random(768)
+    q_vals = [rng.uniform(-1, 1) for _ in range(768)]
+    full = [rng.uniform(-1, 1) for _ in range(768)]
+    rows = [
+        (1, full),
+        (2, [-x for x in full[::-1]]),
+        (3, full[:767]),
+        (4, full + [0.5]),
+        (5, None),
+        (6, []),
+    ]
+    df = spark.createDataFrame(rows, "id int, v array<double>")
+    q = F.array(*[F.lit(x) for x in q_vals])
+    wide = similarity.dot(F.col("v"), q, dim=768)
+    assert "element_at" not in str(wide)
+    got = {
+        r["id"]: (r["fold"], r["wide"])
+        for r in df.select(
+            "id", similarity.dot(F.col("v"), q).alias("fold"), wide.alias("wide")
+        ).collect()
+    }
+    for i in (1, 2):
+        assert got[i][1] is not None and got[i][0] == got[i][1], (i, got[i])
+    for i in (3, 4, 5, 6):
+        assert got[i][1] is None, (i, got[i])
+
+
 def test_semantic_dedup_salted_join_matches_unsalted(spark):
     # the r12 hot-key salt (a-side pmod(xxhash64) salt, b-side
     # replicated to every salt) must produce the IDENTICAL pair set —

@@ -1,5 +1,7 @@
 """Tests for session-level execution helpers."""
 
+import pytest
+
 from openoa_spark.session import spread_small_input
 
 
@@ -396,3 +398,106 @@ def test_codegen_cache_keeps_a_pass_worth_of_classes(spark):
     first = compiles.getCount()
     run_all()
     assert compiles.getCount() == first
+
+
+def test_session_pins_ansi_mode(spark):
+    """The tests check ANSI semantics; the session sets them rather
+    than rely on Spark's default."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+
+
+def test_nio_local_fs_sets_modes_as_chmod_does(spark, tmp_path):
+    """The local session's raw file system is ``NioLocalFileSystem$Raw``
+    and its in-process ``setPermission`` leaves exactly the modes that
+    Hadoop's forked ``chmod`` leaves, setuid/setgid and sticky bits
+    included."""
+    import os
+    import shutil
+
+    if shutil.which("javac") is None:
+        pytest.skip("no javac: the session keeps Hadoop's local file system")
+    jvm = spark._jvm
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    nio = jvm.org.apache.hadoop.fs.FileSystem.getLocal(hconf).getRawFileSystem()
+    assert nio.getClass().getName() == "openoa_spark.jvm.NioLocalFileSystem$Raw"
+    stock = jvm.org.apache.hadoop.fs.RawLocalFileSystem()
+    stock.initialize(jvm.java.net.URI("file:///"), hconf)
+
+    def hpath(p):
+        return jvm.org.apache.hadoop.fs.Path(str(p))
+
+    def perm(mode):
+        return jvm.org.apache.hadoop.fs.permission.FsPermission(mode)
+
+    def twins(name):
+        return [tmp_path / side / name for side in ("stock", "nio")]
+
+    for side in ("stock", "nio"):
+        (tmp_path / side).mkdir()
+    cases = [("f644", False, 0o644), ("f640", False, 0o640),
+             ("d755", True, 0o755), ("f1777", False, 0o1777)]
+    for name, is_dir, mode in cases:
+        paths = twins(name)
+        for fs, p in zip((stock, nio), paths):
+            if is_dir:
+                p.mkdir(mode=0o700)
+            else:
+                p.write_bytes(b"x")
+                os.chmod(p, 0o600)
+            fs.setPermission(hpath(p), perm(mode))
+        got = [os.stat(p).st_mode for p in paths]
+        assert got[0] == got[1], (name, [oct(m) for m in got])
+        assert got[1] & 0o7777 == mode, (name, oct(got[1]))
+
+    # mkdirs under a setgid parent: GNU chmod 0755 keeps the inherited
+    # setgid bit, so the child is 2755 on both sides
+    parents = twins("sgid")
+    for fs, parent in zip((stock, nio), parents):
+        parent.mkdir()
+        os.chmod(parent, 0o2775)
+        assert fs.mkdirs(hpath(parent / "child"), perm(0o755))
+    got = [os.stat(p / "child").st_mode for p in parents]
+    assert got[0] == got[1], [oct(m) for m in got]
+    assert got[1] & 0o7777 == 0o2755, oct(got[1])
+
+
+def test_local_fs_conf_falls_back_and_merges(monkeypatch, tmp_path):
+    """Without ``javac``, or in a JVM launched without the jar, no conf
+    is added, so Hadoop's file system stays; with the jar, a caller's
+    class path is joined and a caller's ``fs.file.impl`` wins."""
+    import os
+    import shutil
+    from types import SimpleNamespace
+
+    from pyspark import SparkContext
+
+    from openoa_spark import session
+
+    # a JVM already up without the jar cannot load the class, so
+    # fs.file.impl would fail every file write in it
+    system = SimpleNamespace(getProperty=lambda key: "spark/jars/*")
+    fake_jvm = SimpleNamespace(java=SimpleNamespace(lang=SimpleNamespace(System=system)))
+    with monkeypatch.context() as m:
+        m.setattr(SparkContext, "_jvm", fake_jvm)
+        assert session.local_fs_conf() == {}
+
+    which = shutil.which
+    monkeypatch.setattr(
+        shutil, "which", lambda name, *a, **k: None if name == "javac" else which(name, *a, **k)
+    )
+    assert session.local_fs_conf() == {}
+    assert session.local_fs_conf({"spark.driver.extraClassPath": "/x.jar"}) == {}
+
+    jar = tmp_path / "fs.jar"
+    monkeypatch.setattr(session, "_local_fs_jar", lambda: jar)
+    assert session.local_fs_conf() == {
+        "spark.driver.extraClassPath": str(jar),
+        "spark.hadoop.fs.file.impl": "openoa_spark.jvm.NioLocalFileSystem",
+    }
+    caller = {
+        "spark.driver.extraClassPath": "lib/a.jar",
+        "spark.hadoop.fs.file.impl": "org.example.MyFileSystem",
+    }
+    assert session.local_fs_conf(caller) == {
+        "spark.driver.extraClassPath": os.pathsep.join(["lib/a.jar", str(jar)]),
+    }
