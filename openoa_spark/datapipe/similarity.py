@@ -17,47 +17,18 @@ def _vec(col: Column | str) -> Column:
     return F.transform(c, lambda x: x.cast("double"))
 
 
-def dot(a: Column, b: Column, dim: int | None = None) -> Column:
+def dot(a: Column, b: Column) -> Column:
     """Sequential-fold dot product of two array columns (deterministic
     summation order — same result on any partitioning).
 
-    ``dim`` (r12): when the vector length is statically known, emit
-    the unrolled scalar chain ``((0.0 + a[1]·b[1]) + a[2]·b[2]) + …``
-    instead of the fold. This is the fold's EXACT computation sequence
-    — same association, same leading 0.0 (so even the sign of an
-    all-negative-zero sum matches) — but as plain codegen arithmetic
-    with no per-evaluation zip_with array (receipts:
-    ``git show 9378dbf:SEMDEDUP48_r12.json``). CONTRACT: with ``dim``,
-    the result is NULL unless both vectors have exactly ``dim``
-    elements, with ANSI mode on or off; a NULL, short, long or empty
-    vector never raises. That matches the fold whenever a vector's
-    length differs from the other's (the fold pads the shorter array
-    with NULL). All embedding tables here are fixed-width, so the sites
-    below pass the plane/centroid width.
-
-    Above ``_DOT_UNROLL_MAX`` elements the guarded value is the fold:
-    the chain's generated method grows about 340 bytes per element
-    and would pass ``spark.sql.codegen.hugeMethodLimit`` (65535).
+    CONTRACT: NULL when either vector is NULL or the lengths differ,
+    and never an error, with ANSI mode on or off. ``zip_with`` pads
+    the shorter array with NULL, and a NULL product makes the whole
+    fold NULL (so does a NULL element).
     """
-    if dim is not None and dim <= _DOT_UNROLL_MAX:
-        expr = F.lit(0.0)
-        for i in range(1, dim + 1):
-            expr = expr + F.element_at(a, i) * F.element_at(b, i)
-    else:
-        expr = F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-        )
-    if dim is None:
-        return expr
-    return F.when((F.size(a) == dim) & (F.size(b) == dim), expr)
-
-
-# Widest unrolled dot. Measured largest generated method of a
-# whole-stage projection of dot(dim=d) over two array<double> columns:
-# 16 -> 4,161 B, 64 -> 16,259, 128 -> 42,670, 192 -> 64,686, and 224
-# fails to compile ("code grows beyond 64 KB"). 128 leaves a third of
-# the 65535-byte hugeMethodLimit to the rest of the stage.
-_DOT_UNROLL_MAX = 128
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    )
 
 
 def norm(a: Column) -> Column:
@@ -67,7 +38,7 @@ def norm(a: Column) -> Column:
 
 
 # Per-pair norm hoist (r12, guide §1.2/§2.3): every pair-join consumer
-# below computes cosine as dot/(norm(a)*norm(b)). norm() is an O(dim)
+# below computes cosine as _cosine(a, b, na, nb). norm() is an O(dim)
 # array fold + intermediate allocation, and evaluated INSIDE the join
 # output it runs once per PAIR — for the bucket/cluster self-joins the
 # pair count is quadratic in bucket occupancy, so at corpus scale the
@@ -81,6 +52,15 @@ def norm(a: Column) -> Column:
 # (oracle-pinned at two SFs for all nine consumers).
 
 
+def _cosine(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """Cosine of vectors ``a`` and ``b`` whose norms are ``na`` and
+    ``nb``: :func:`dot` under the same contract, and also NULL when a
+    norm is 0 (an all-zero vector has no direction), with ANSI mode
+    on or off. ``try_divide`` divides a nonzero divisor exactly as
+    ``/`` does."""
+    return F.try_divide(dot(a, b), na * nb)
+
+
 def cosine_to_query(
     df: DataFrame, vec_col: str, query: list[float], out_col: str = "cosine"
 ) -> DataFrame:
@@ -89,9 +69,7 @@ def cosine_to_query(
     prunes to (id, vec)."""
     q = F.array(*[F.lit(float(v)) for v in query])
     v = _vec(vec_col)
-    return df.withColumn(
-        out_col, dot(v, q, dim=len(query)) / (norm(v) * norm(q))
-    )
+    return df.withColumn(out_col, _cosine(v, q, norm(v), norm(q)))
 
 
 def brute_force_top_k(
@@ -133,7 +111,7 @@ def all_pairs_top_k(
     pairs = a.crossJoin(b).where(F.col("id_a") != F.col("id_b"))
     scored = pairs.withColumn(
         "cosine",
-        dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")),
+        _cosine(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb")),
     )
     w = Window.partitionBy("id_a").orderBy(F.desc("cosine"), F.asc("id_b"))
     return (
@@ -200,7 +178,7 @@ def lsh_bucket(
     acc = F.lit(0).cast("long")
     for i, p in enumerate(planes):
         q = F.array(*[F.lit(float(x)) for x in p])
-        d = dot(v, q, dim=len(p))
+        d = dot(v, q)
         if round_digits is not None:
             d = F.round(d, round_digits)
         bit = F.when(d > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
@@ -293,8 +271,7 @@ def lsh_recall_at_k(
         .withColumn(
             "cosine6",
             F.round(
-                dot(F.col("_qv"), F.col("_v"), dim=len(planes[0]))
-                / (F.col("_qn") * F.col("_n")),
+                _cosine(F.col("_qv"), F.col("_v"), F.col("_qn"), F.col("_n")),
                 6,
             ),
         )
@@ -335,10 +312,9 @@ def lsh_recall_at_k(
             .select(
                 F.col("a._bid").alias("id_a"),
                 F.col("b._bid").alias("id_b"),
-                (
-                    dot(F.col("a._bv"), F.col("b._bv"),
-                        dim=len(planes[0]))
-                    / (F.col("a._bn") * F.col("b._bn"))
+                _cosine(
+                    F.col("a._bv"), F.col("b._bv"),
+                    F.col("a._bn"), F.col("b._bn"),
                 ).alias("cosine"),
             )
             .dropDuplicates(["id_a", "id_b"])
@@ -411,8 +387,9 @@ def _bucketed_cosine_pairs(
         .select(
             F.col("a._id").alias("id_a"),
             F.col("b._id").alias("id_b"),
-            (dot(F.col("a._v"), F.col("b._v"), dim=len(planes[0]))
-             / (F.col("a._n") * F.col("b._n"))).alias("cosine"),
+            _cosine(
+                F.col("a._v"), F.col("b._v"), F.col("a._n"), F.col("b._n")
+            ).alias("cosine"),
         )
     )
 
@@ -488,8 +465,9 @@ def lsh_multi_probe_neighbors(
         .select(
             F.col("a._id").alias("id_a"),
             F.col("b._id").alias("id_b"),
-            (dot(F.col("a._v"), F.col("b._v"), dim=dim)
-             / (F.col("a._n") * F.col("b._n"))).alias("cosine"),
+            _cosine(
+                F.col("a._v"), F.col("b._v"), F.col("a._n"), F.col("b._n")
+            ).alias("cosine"),
         )
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -557,8 +535,9 @@ def ivf_neighbors(
         .select(
             F.col("a._id").alias("id_a"),
             F.col("b._id").alias("id_b"),
-            (dot(F.col("a._v"), F.col("b._v"), dim=len(centers[0]))
-             / (F.col("a._n") * F.col("b._n"))).alias("cosine"),
+            _cosine(
+                F.col("a._v"), F.col("b._v"), F.col("a._n"), F.col("b._n")
+            ).alias("cosine"),
         )
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -736,9 +715,8 @@ def incremental_embedding_dedup(
             hist, bucketed["_bucket"] == hist["bucket"]
         ).select(
             "_id",
-            (
-                dot(F.col("_v"), F.col("vec"), dim=len(planes[0]))
-                / (F.col("_n") * F.col("_hn"))
+            _cosine(
+                F.col("_v"), F.col("vec"), F.col("_n"), F.col("_hn")
             ).alias("_cos"),
         )
         dup_of_history = (
@@ -767,8 +745,9 @@ def incremental_embedding_dedup(
             F.col("a._id").alias("id_a"),
             F.col("b._id").alias("id_b"),
             F.round(
-                dot(F.col("a._v"), F.col("b._v"), dim=len(planes[0]))
-                / (F.col("a._n") * F.col("b._n")),
+                _cosine(
+                    F.col("a._v"), F.col("b._v"), F.col("a._n"), F.col("b._n")
+                ),
                 6,
             ).alias("cosine"),
         )
@@ -992,10 +971,7 @@ def query_ivf_index(
     qa = F.array(*[F.lit(float(x)) for x in query])
     scored = postings.select(
         "id",
-        (dot(F.col("vec"), qa, dim=len(query))
-         / (norm(F.col("vec")) * norm(qa))).alias(
-            "cosine"
-        ),
+        _cosine(F.col("vec"), qa, norm(F.col("vec")), norm(qa)).alias("cosine"),
     )
     return (
         scored.select("id", F.round("cosine", 6).alias("cosine"))
@@ -1346,12 +1322,7 @@ def _semantic_pairs(
     """The within-cluster cosine pair join of :func:`semantic_dedup`,
     exposed so its plan (the norm hoist + salted keys) can be
     inspected below connected_components' checkpoint boundary."""
-    # kmeans_fit rather than kmeans_assignments: the fitted centroids
-    # (driver-side, k x dim) give the static vector width the unrolled
-    # dot needs — same fit, zero extra work
-    asg, _cents = kmeans_fit(df, vec_col, id_col, k=k, iters=iters)
-    # empty input -> no centroids; dim=None falls back to the fold
-    _dim = len(_cents[0]) if _cents else None
+    asg = kmeans_assignments(df, vec_col, id_col, k=k, iters=iters)
     # norm hoisted per ROW (see norm() note): with k fixed, expected
     # cluster size is n/k, so the within-cluster pair count — and with
     # it the per-pair cosine cost — grows quadratically with corpus
@@ -1390,8 +1361,9 @@ def _semantic_pairs(
             "id_a",
             "id_b",
             F.round(
-                dot(F.col("_va"), F.col("_vb"), dim=_dim)
-                / (F.col("_na") * F.col("_nb")),
+                _cosine(
+                    F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb")
+                ),
                 6,
             ).alias("cosine"),
         )

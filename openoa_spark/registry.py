@@ -8771,7 +8771,7 @@ def embedding_norm_outliers(spark, sf_dir):
     v = similarity._vec("embedding")
     norms = emb.select(
         "vec_id",
-        rounded(F.sqrt(similarity.dot(v, v))).alias("norm"),
+        rounded(similarity.norm(v)).alias("norm"),
     )
     norms = norms.localCheckpoint(eager=False)  # feeds median AND flags
     med = _stats.grouped_exact_median(norms, [], "norm", "m")

@@ -1475,8 +1475,8 @@ def test_semantic_dedup_keeps_lowest_id_per_group(spark):
 
 
 def test_semantic_dedup_empty_input(spark):
-    # zero rows -> no centroids, so the pair join has no static width
-    # for the unrolled dot; it must fall back to the fold, not raise
+    # zero rows -> k-means fits no centroids; the cluster pair join
+    # must still plan and return nothing, not raise
     df = spark.createDataFrame([], "vec_id long, embedding array<double>")
     out = similarity.semantic_dedup(df, "embedding", "vec_id", k=3, iters=2)
     assert out.schema == df.schema
@@ -1484,69 +1484,80 @@ def test_semantic_dedup_empty_input(spark):
 
 
 @pytest.mark.parametrize("ansi", ["true", "false"])
-def test_dot_dim_is_null_on_length_mismatch(spark, ansi):
-    # dot(dim=) against a dim-long vector: NULL, never an ANSI
-    # INVALID_ARRAY_INDEX error, whenever the other side is not dim
-    # long -- the fold's answer for every such pair
+@pytest.mark.parametrize("width", [3, 768])
+def test_dot_and_cosine_null_contract(spark, width, ansi):
+    # dot is the exact sequential fold on equal lengths and NULL, never
+    # an error, on a short, long, NULL, empty or NULL-element vector in
+    # either operand order; a cosine against an all-zero vector is NULL
+    # too, not a DIVIDE_BY_ZERO under ANSI
+    import math
+    import random
+
+    def fold(x, y):
+        acc = 0.0
+        for a, b in zip(x, y):
+            acc += a * b
+        return acc
+
+    rng = random.Random(width)
+    q_vals = [rng.uniform(-1, 1) for _ in range(width)]
+    full = [rng.uniform(-1, 1) for _ in range(width)]
+    flipped = [-x for x in full[::-1]]
+    zero = [0.0] * width
     rows = [
-        (1, [0.5, -1.0, 2.0]),
-        (2, [1.0, 2.0]),
-        (3, [1.0, 2.0, 3.0, 4.0]),
-        (4, None),
-        (5, []),
+        (1, full),
+        (2, flipped),
+        (3, full[:-1]),
+        (4, full + [0.5]),
+        (5, None),
+        (6, []),
+        (7, full[:-1] + [None]),
+        (8, zero),
     ]
     df = spark.createDataFrame(rows, "id int, v array<double>")
-    q = F.array(*[F.lit(x) for x in (1.0, 2.0, 3.0)])
+    q = F.array(*[F.lit(x) for x in q_vals])
     v = F.col("v")
     prev = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", ansi)
     try:
         got = {
-            r["id"]: (r["fold"], r["unrolled"], r["unrolled_rev"])
+            r["id"]: (r["vq"], r["qv"])
             for r in df.select(
                 "id",
-                similarity.dot(v, q).alias("fold"),
-                similarity.dot(v, q, dim=3).alias("unrolled"),
-                similarity.dot(q, v, dim=3).alias("unrolled_rev"),
+                similarity.dot(v, q).alias("vq"),
+                similarity.dot(q, v).alias("qv"),
+            ).collect()
+        }
+        cos = {
+            r["id"]: r["cosine"]
+            for r in similarity.cosine_to_query(df, "v", q_vals).collect()
+        }
+        pairs = {
+            (r["id_a"], r["id_b"]): r["cosine"]
+            for r in similarity.all_pairs_top_k(
+                df.where(F.col("id").isin(1, 2, 8)), "v", "id"
             ).collect()
         }
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev)
-    assert got[1] == (4.5, 4.5, 4.5)
-    for i in (2, 3, 4, 5):
-        assert got[i] == (None, None, None), (i, got[i])
+    for i, vec in ((1, full), (2, flipped), (8, zero)):
+        assert got[i] == (fold(vec, q_vals), fold(q_vals, vec)), (i, got[i])
+    for i in (3, 4, 5, 6, 7):
+        assert got[i] == (None, None), (i, got[i])
 
+    def norm(x):
+        return math.sqrt(fold(x, x))
 
-def test_dot_wide_dim_folds_with_the_same_contract(spark):
-    # above the unroll cap, dot(dim=) is the guarded fold: bit-identical
-    # to the plain fold on dim-long pairs, NULL on any other length
-    import random
-
-    rng = random.Random(768)
-    q_vals = [rng.uniform(-1, 1) for _ in range(768)]
-    full = [rng.uniform(-1, 1) for _ in range(768)]
-    rows = [
-        (1, full),
-        (2, [-x for x in full[::-1]]),
-        (3, full[:767]),
-        (4, full + [0.5]),
-        (5, None),
-        (6, []),
-    ]
-    df = spark.createDataFrame(rows, "id int, v array<double>")
-    q = F.array(*[F.lit(x) for x in q_vals])
-    wide = similarity.dot(F.col("v"), q, dim=768)
-    assert "element_at" not in str(wide)
-    got = {
-        r["id"]: (r["fold"], r["wide"])
-        for r in df.select(
-            "id", similarity.dot(F.col("v"), q).alias("fold"), wide.alias("wide")
-        ).collect()
+    for i, vec in ((1, full), (2, flipped)):
+        assert cos[i] == fold(vec, q_vals) / (norm(vec) * norm(q_vals)), i
+    for i in (3, 4, 5, 6, 7, 8):
+        assert cos[i] is None, (i, cos[i])
+    expect = round(fold(full, flipped) / (norm(full) * norm(flipped)), 6)
+    assert abs(pairs[(1, 2)] - expect) <= 1e-6
+    assert pairs[(2, 1)] == pairs[(1, 2)]
+    assert {p: c for p, c in pairs.items() if 8 in p} == {
+        (1, 8): None, (2, 8): None, (8, 1): None, (8, 2): None,
     }
-    for i in (1, 2):
-        assert got[i][1] is not None and got[i][0] == got[i][1], (i, got[i])
-    for i in (3, 4, 5, 6):
-        assert got[i][1] is None, (i, got[i])
 
 
 def test_semantic_dedup_salted_join_matches_unsalted(spark):

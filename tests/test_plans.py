@@ -300,3 +300,33 @@ def test_quantize_fold_single_scan(spark):
         for r in q.collect()
     }
     assert got == expect
+
+
+def test_generated_methods_fit_the_jit_limit(spark):
+    """HotSpot compiles no method above 8,000 bytes of bytecode (the
+    default -XX:+DontCompileHugeMethods), so a whole-stage subtree
+    whose largest generated method is bigger runs in the bytecode
+    interpreter on every row. Every registry query's subtrees,
+    compiled at sf0.001 with AQE off so that each one is planned up
+    front, must stay within that limit."""
+    import re
+
+    sf = "/root/testdata/sf0.001"
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        sizes = {}
+        for name, fn in registry.queries().items():
+            qe = fn(spark, sf)._jdf.queryExecution()
+            text = spark._jvm.PythonSQLUtils.explainString(qe, "codegen")
+            sizes[name] = [
+                int(b) for b in re.findall(r"maxMethodCodeSize:(\d+)", text)
+            ]
+    finally:
+        spark.conf.set(key, prev)
+    assert sizes["q1_pricing_summary"], "no maxMethodCodeSize parsed"
+    offenders = {n: max(s) for n, s in sizes.items() if s and max(s) > 8000}
+    assert not offenders, (
+        f"generated methods above the 8,000-byte JIT limit: {offenders}"
+    )
