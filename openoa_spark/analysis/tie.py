@@ -13,17 +13,22 @@ Spark-first inversions:
   turbines.
 - The reference ALSO loops Monte-Carlo sims in an outer python loop
   (turbine_long_term_gross_energy.py:310-328, default num_sim=20,000
-  sequential passes). Round 8 batches the sims sim-keyed, like
-  analysis/yaw.py and analysis/wake_losses.py: each ``sim_batch``
-  chunk explodes per-sim (thresholds) structs onto the flagged base
-  table map-side, runs the ENTIRE filter → daily-energy →
-  imputation → fit → long-term chain keyed by (sim, asset_id), and
-  collects one (sim, gross_gwh) row per sim — ~1 Spark job per chunk
-  instead of 2-3 jobs per sim. Every aggregate on the sim-keyed path
-  is order-independent (exact decimal sums; sequential array folds
-  for the correlations; per-group NumPy fits over day-sorted rows),
-  so one batched job and a per-sim loop produce BIT-IDENTICAL results
-  (pinned by tests/test_tie.py::test_batched_equals_per_sim).
+  sequential passes). Here the SCADA rows never fan out by sim: a
+  sim's power-bin filter is only a comparison against
+  statistics every sim shares: the per-(turbine, power bin) median
+  and sample std of wind speed are computed ONCE, and again once per
+  distinct max_power_filter only for the bin its upper edge cuts.
+  Each row then carries, per max_power_filter, its rank: how many of
+  the run's sorted distinct wind-bin thresholds flag it. Exact
+  decimal partial sums per (turbine, day, max_power_filter, rank)
+  give every sim's daily energy as the sum of the partials at or
+  below its own threshold's rank. Only the day-grain chain after
+  that (correction threshold, gap spine, correlation imputation,
+  fit, totals) is keyed by sim. Every aggregate is order-independent
+  (exact decimal sums; sequential array folds for the correlations;
+  per-group NumPy fits over day-sorted rows), so each sim's result
+  equals a one-sim run of the per-stage methods bit for bit (pinned
+  by tests/test_tie.py::test_each_sim_equals_its_one_sim_run).
 - Per-turbine model fitting uses groupBy(sim, asset_id).applyInPandas
   (Arrow-batched); the daily reanalysis table it predicts over is
   bucket-grain (~365×years rows), broadcast through the closure.
@@ -53,7 +58,7 @@ from dataclasses import dataclass, field
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -65,7 +70,7 @@ from pyspark.sql.types import (
 
 from openoa_spark.functions import met
 from openoa_spark.functions.regression import gam_3param_fit
-from openoa_spark.functions.stats import davg, dsum
+from openoa_spark.functions.stats import davg, dsum, grouped_exact_median
 from openoa_spark.operators import filters
 from openoa_spark.operators.imputing import impute_all_assets_by_correlation
 from openoa_spark.operators.timeseries import resample
@@ -87,10 +92,8 @@ class TIEResult:
 class TurbineLongTermGrossEnergy:
     """Parameters mirror turbine_long_term_gross_energy.py:100-130;
     scalar values are used when UQ=False, (min, max) sampling ranges
-    when UQ=True. ``sim_batch`` bounds how many sims share one
-    sim-keyed Spark pass (memory knob: each chunk's working set is
-    sims-in-chunk × the base table); ``extrapolation`` is the GAM
-    edge behavior ("clip" default, "linear" = pygam's)."""
+    when UQ=True. ``extrapolation`` is the GAM edge behavior ("clip"
+    default, "linear" = pygam's)."""
 
     plant: PlantData
     reanalysis_products: list[str] | None = None
@@ -101,13 +104,22 @@ class TurbineLongTermGrossEnergy:
     max_power_filter: float | tuple[float, float] = (0.8, 0.9)
     correction_threshold: float | tuple[float, float] = (0.85, 0.95)
     extrapolation: str = "clip"
-    sim_batch: int = 25
     seed: int = 42
 
     _daily_reanalysis_memo: dict = field(init=False, default_factory=dict)
     _por_memo: dict = field(init=False, default_factory=dict)
 
     def __post_init__(self):
+        if self.UQ:
+            for name in (
+                "wind_bin_threshold", "max_power_filter", "correction_threshold"
+            ):
+                v = getattr(self, name)
+                if np.isscalar(v) or len(v) != 2:
+                    raise ValueError(
+                        f"UQ=True needs {name} as a (low, high) range to "
+                        f"draw from, got {v!r}"
+                    )
         if self.reanalysis_products is None:
             self.reanalysis_products = sorted(self.plant.reanalysis)
         self._freq_s = self.plant.metadata.scada.frequency_seconds or 600.0
@@ -116,12 +128,11 @@ class TurbineLongTermGrossEnergy:
     # ------------------------------------------------------------ stages
 
     def _base_flags(self) -> DataFrame:
-        """The sim-INDEPENDENT part of the filter cascade, computed once
-        per run (turbine_long_term_gross_energy.py:330-388): range flag
-        on ws, derate/curtailment window flag, frozen-sensor flag, and
-        the normalized power-bin coordinate. The expensive ordered
-        window (frozen flag) runs BEFORE the per-sim explode, so it is
-        never multiplied by the sim count."""
+        """The sim-INDEPENDENT part of the filter cascade
+        (turbine_long_term_gross_energy.py:330-388): range flag on ws,
+        derate/curtailment window flag and frozen-sensor flag, OR-ed
+        into ``_flag_base``, plus the normalized power-bin coordinate
+        ``_p_norm``."""
         asset = self.plant.asset.where(F.col("type") == "turbine").select(
             "asset_id", "rated_power"
         )
@@ -146,69 +157,114 @@ class TurbineLongTermGrossEnergy:
         # [round(1% cap), round(max_power_filter·cap)) — normalized so
         # one scalar-width grouped aggregate handles every turbine
         return df.withColumn(
+            "_flag_base",
+            F.col("_flag_range") | F.col("_flag_window") | F.col("_flag_frozen"),
+        ).withColumn(
             "_p_norm",
             (F.col("WTUR_W") - F.round(0.01 * cap)) / (0.06 * cap),
         )
 
-    def _sim_keyed_filtered(self, base: DataFrame, sims: pd.DataFrame) -> DataFrame:
-        """Explode the per-sim parameter structs (sim, wind-bin
-        threshold, max-power filter, correction threshold) onto the
-        base rows map-side — no shuffle, the yaw/wake batching idiom —
-        then run the per-turbine power-bin filter keyed by
-        (sim, asset_id) with per-sim Column thresholds. std via exact
-        decimal sums so the flags are bit-stable whatever the
-        batching."""
-        entries = F.array(*[
-            F.struct(
-                F.lit(int(r.sim)).alias("sim"),
-                F.lit(float(r.wind_bin_thresh)).alias("_wbt"),
-                F.lit(float(r.max_power_filter)).alias("_mpf"),
-                F.lit(float(r.correction_threshold)).alias("_ct"),
-            )
-            for r in sims.itertuples()
+    @staticmethod
+    def _power_bin_stats(binned: DataFrame) -> DataFrame:
+        """(asset_id, _bin) → ``_st``, a map from statistics key ``_v``
+        to the (``_center``, ``_dev``) of wind speed: -1 for the whole
+        bin, v for the part of the bin below max_power_filter v's edge.
+        The median is bin_filter's exact median; the sample std comes
+        from exact decimal sums (n, Σx, Σx²), so neither depends on the
+        row order. ``binned`` rows carry the keys they feed in ``_g``."""
+        keys = ["asset_id", "_v", "_bin"]
+        ws = F.col("WMET_HorWdSpd")
+        rows = binned.select(
+            "asset_id", "_bin", "WMET_HorWdSpd",
+            F.explode(F.array_compact(F.array_distinct("_g"))).alias("_v"),
+        )
+        n, sx, sxx = F.col("_dn"), F.col("_dsx"), F.col("_dsxx")
+        dev = rows.groupBy(*keys).agg(
+            F.count(ws).cast("double").alias("_dn"),
+            F.sum(ws.cast("decimal(38,12)")).cast("double").alias("_dsx"),
+            F.sum((ws * ws).cast("decimal(38,12)")).cast("double").alias("_dsxx"),
+        ).select(
+            *keys,
+            F.when(
+                n >= 2.0,
+                F.sqrt(F.greatest(F.lit(0.0), (n * sxx - sx * sx) / (n * (n - 1.0)))),
+            ).alias("_dev"),
+        )
+        return (
+            grouped_exact_median(rows, keys, "WMET_HorWdSpd", "_center")
+            .join(dev, keys)
+            .groupBy("asset_id", "_bin")
+            .agg(F.map_from_entries(F.collect_list(
+                F.struct("_v", F.struct("_center", "_dev"))
+            )).alias("_st"))
+        )
+
+    def _ranked(
+        self, base: DataFrame, thresholds: list[float], mpfs: list[float]
+    ) -> DataFrame:
+        """``base`` rows with ``_ranks``: for each of the ascending
+        distinct max_power_filter draws ``mpfs``, how many of the
+        ascending distinct wind-bin ``thresholds`` flag the row
+        (turbine_long_term_gross_energy.py:368-378). A sim with
+        thresholds (thresholds[j], mpfs[v]) drops the row iff
+        ``_ranks[v] > j``.
+
+        The filter is bin_filter's std test per turbine: bins [k, k+1)
+        of ``_p_norm`` over [0, hi), flag |ws − median| > t·std, rows
+        outside the domain never flagged. A draw moves only the edge
+        hi, so every bin below the one hi cuts shares one statistic
+        across draws; only the cut bin gets a per-draw statistic."""
+        x, cap = F.col("_p_norm"), F.col("rated_power")
+        groups = []
+        for v, m in enumerate(mpfs):
+            hi = (F.round(F.lit(float(m)) * cap) - F.round(0.01 * cap)) / (0.06 * cap)
+            groups.append(F.when(
+                (x >= 0.0) & (x < hi),
+                F.when(F.floor(x) == F.floor(hi), F.lit(v)).otherwise(F.lit(-1)),
+            ))
+        binned = base.withColumn("_bin", F.floor(x)).withColumn("_g", F.array(*groups))
+        t = F.array(*[F.lit(float(w)) for w in thresholds])
+        steps = F.array(*[
+            F.lit(1 << k) for k in reversed(range(len(thresholds).bit_length()))
         ])
-        df = (
-            base.withColumn("_s", F.explode(entries))
-            .withColumn("sim", F.col("_s.sim"))
-            .withColumn("_wbt", F.col("_s._wbt"))
-            .withColumn("_mpf", F.col("_s._mpf"))
-            .withColumn("_ct", F.col("_s._ct"))
-            .drop("_s")
-        )
-        cap = F.col("rated_power")
-        hi = (F.round(F.col("_mpf") * cap) - F.round(0.01 * cap)) / (0.06 * cap)
-        df = filters.bin_filter(
-            df, bin_col="_p_norm", value_col="WMET_HorWdSpd", bin_width=1.0,
-            threshold=F.col("_wbt"), center_type="median", threshold_type="std",
-            direction="all", keys=["sim", "asset_id"],
-            bin_min_col=F.lit(0.0), bin_max_col=hi, flag_col="_flag_bin",
-            std_strategy="sums",
-        )
-        return df.withColumn(
-            "_flag_final",
-            F.col("_flag_range") | F.col("_flag_window")
-            | F.col("_flag_bin") | F.col("_flag_frozen"),
+
+        def rank(st: Column) -> Column:
+            # flags are monotone in t, so binary-search the count; past
+            # the end F.get is NULL and a NULL comparison flags nothing
+            d = F.abs(F.col("WMET_HorWdSpd") - st["_center"])
+            return F.aggregate(steps, F.lit(0), lambda lo, k: F.when(
+                d > F.get(t, lo + k - 1) * st["_dev"], lo + k
+            ).otherwise(lo))
+
+        st = F.col("_st")
+        return (
+            binned.join(
+                F.broadcast(self._power_bin_stats(binned)), ["asset_id", "_bin"], "left"
+            )
+            .withColumn("_r", rank(st[-1]))
+            .withColumn("_ranks", F.array(*[
+                F.when(F.col("_g")[v] == -1, F.col("_r"))
+                .when(F.col("_g")[v] == v, rank(st[v]))
+                .otherwise(F.lit(0))
+                for v in range(len(mpfs))
+            ]))
+            .drop("_bin", "_g", "_st", "_r")
         )
 
     def filter_turbine_data(
         self, wind_bin_thresh: float, max_power_filter: float
     ) -> DataFrame:
-        """Single-parameter-set flagging (the per-sim surface the tests
-        and per-stage callers use) — one sim through the same sim-keyed
-        path ``run()`` batches, so there is exactly one code path."""
-        sims = pd.DataFrame({
-            "sim": [0],
-            "wind_bin_thresh": [float(wind_bin_thresh)],
-            "max_power_filter": [float(max_power_filter)],
-            "correction_threshold": [float("nan")],
-        })
-        return self._sim_keyed_filtered(self._base_flags(), sims).drop(
-            "sim", "_wbt", "_mpf", "_ct", "_p_norm"
+        """One parameter set's flags ``_flag_final`` through the ranking
+        ``run()`` uses."""
+        ranked = self._ranked(
+            self._base_flags(), [float(wind_bin_thresh)], [float(max_power_filter)]
+        )
+        return ranked.withColumn(
+            "_flag_final", F.col("_flag_base") | (F.col("_ranks")[0] > 0)
         )
 
     def _scada_por(self):
-        """(first day, last day) of the SCADA POR; memoized — one job
-        per run, shared by every chunk's spine."""
+        """(first day, last day) of the SCADA POR; memoized."""
         if "por" not in self._por_memo:
             self._por_memo["por"] = self.plant.scada.agg(
                 F.date_trunc("day", F.min("time")).alias("lo"),
@@ -216,42 +272,56 @@ class TurbineLongTermGrossEnergy:
             ).first()
         return self._por_memo["por"]
 
-    def _daily_valid_energy_keyed(
-        self, filtered: DataFrame, sims: pd.DataFrame
-    ) -> DataFrame:
-        """Daily per-(sim, turbine) sums with missing-data correction;
-        days below the per-sim reported-data threshold dropped, then
+    def _sims_frame(self, rows: list[tuple]) -> DataFrame:
+        """(sim, _v, _j, _ct) rows: each sim's max_power_filter index,
+        its wind-bin threshold's index and its correction threshold."""
+        return self.plant.spark.createDataFrame(
+            rows, "sim int, _v int, _j int, _ct double"
+        )
+
+    def _daily_valid_energy(self, ranked: DataFrame, sims: DataFrame) -> DataFrame:
+        """Daily per-(sim, turbine) energy with missing-data correction;
+        days below the sim's reported-data threshold dropped, then
         gap-spine + cross-turbine correlation imputation keyed by sim
-        (turbine_long_term_gross_energy.py:419-495). Daily sums are
-        exact decimal sums (order-independent across batchings)."""
-        daily = resample(
-            filtered.where(~F.col("_flag_final")),
+        (turbine_long_term_gross_energy.py:419-495).
+
+        Rows group into exact decimal partial sums per (turbine, day,
+        ``_ranks``); a sim's day is the sum of the partials its filter
+        keeps, cast to double once."""
+        partials = resample(
+            ranked.where(~F.col("_flag_base")),
             "time", "D",
             {
-                "_e": dsum("WTUR_SupWh", scale=9, precision=32),
+                "_e": F.sum(F.col("WTUR_SupWh").cast("decimal(32,9)")),
                 "_n": F.count("WTUR_SupWh"),
-                "_ct": F.min("_ct"),  # constant within a sim
             },
-            keys=["sim", "asset_id"], bucket_col="day",
+            keys=["asset_id", "_ranks"], bucket_col="day",
+        ).select(
+            "asset_id", "day", F.posexplode("_ranks").alias("_v", "_r"), "_e", "_n"
+        )
+        daily = (
+            partials.join(F.broadcast(sims), "_v")
+            .where(F.col("_r") <= F.col("_j"))
+            .groupBy("sim", "asset_id", "day", "_ct")
+            .agg(F.sum("_e").cast("double").alias("_e"), F.sum("_n").alias("_n"))
         )
         daily = daily.withColumn(
             "energy_corrected", F.col("_e") * F.lit(self._expected_count) / F.col("_n")
         ).where(F.col("_n") >= F.col("_ct") * F.lit(self._expected_count))
+        # the imputation reads this table in several jobs: checkpoint it
+        # so the ranking and the partial sums run once
+        daily = daily.localCheckpoint(eager=False)
         # full (sim × day × turbine) spine so imputation sees the gaps
         por = self._scada_por()
-        spark = self.plant.spark
-        sims_df = spark.createDataFrame(
-            [(int(s),) for s in sims["sim"]], "sim int"
-        )
         spine = (
-            spark.range(1).select(
+            self.plant.spark.range(1).select(
                 F.explode(
                     F.sequence(F.lit(por["lo"]), F.lit(por["hi"]),
                                F.expr("interval 1 day"))
                 ).alias("day")
             ).crossJoin(
                 self.plant.asset.where(F.col("type") == "turbine").select("asset_id")
-            ).crossJoin(F.broadcast(sims_df))
+            ).crossJoin(F.broadcast(sims.select("sim")))
         )
         gapped = spine.join(
             daily.select("sim", "day", "asset_id", "energy_corrected"),
@@ -263,14 +333,10 @@ class TurbineLongTermGrossEnergy:
         return imputed.dropna(subset=["energy_imputed"])
 
     def daily_valid_energy(self, filtered: DataFrame, correction_threshold: float) -> DataFrame:
-        """Single-parameter-set daily energy (per-sim surface): one sim
-        through the sim-keyed path."""
-        keyed = filtered.withColumn("sim", F.lit(0)).withColumn(
-            "_ct", F.lit(float(correction_threshold))
-        )
-        return self._daily_valid_energy_keyed(
-            keyed, pd.DataFrame({"sim": [0]})
-        ).drop("sim")
+        """One parameter set's daily energy from ``filter_turbine_data``
+        rows, through the daily sum ``run()`` uses."""
+        sims = self._sims_frame([(0, 0, 0, float(correction_threshold))])
+        return self._daily_valid_energy(filtered, sims).drop("sim")
 
     def daily_reanalysis(self, product: str) -> pd.DataFrame:
         """Daily means of u/v/ws/rho with wd recomputed from the daily
@@ -393,7 +459,7 @@ class TurbineLongTermGrossEnergy:
 
     # ------------------------------------------------------------ run
 
-    def run(self, num_sim: int | None = None, sim_batch: int | None = None) -> TIEResult:
+    def run(self, num_sim: int | None = None) -> TIEResult:
         rng = np.random.default_rng(self.seed)
         if self.UQ:
             n = num_sim or self.num_sim
@@ -421,88 +487,34 @@ class TurbineLongTermGrossEnergy:
                 "correction_threshold": _scalar(self.correction_threshold, 0.90),
             })
 
-        n_total = len(inputs)
+        thresholds = sorted(set(inputs["wind_bin_thresh"].astype(float)))
+        mpfs = sorted(set(inputs["max_power_filter"].astype(float)))
+        sims = self._sims_frame([
+            (int(i), mpfs.index(float(r["max_power_filter"])),
+             thresholds.index(float(r["wind_bin_thresh"])),
+             float(r["correction_threshold"]))
+            for i, r in inputs.iterrows()
+        ])
+        lookup = {
+            int(i): (str(r["reanalysis_product"]), float(r["scada_data_fraction"]))
+            for i, r in inputs.iterrows()
+        }
         base = self._base_flags().cache()
-        # memory-adaptive chunk size: the configured sim_batch is a
-        # CAP; at large row counts the chunk shrinks so the rows×sims
-        # fan-out fits the live heap (session.auto_sim_batch — r8
-        # probe OOM'd the fixed default at ×16 rows). count() also
-        # materializes the cache before the sim loop races it.
-        from openoa_spark.session import auto_sim_batch
-
-        batch = auto_sim_batch(
-            base.sparkSession, base.count(), int(sim_batch or self.sim_batch)
-        )
-        gross = np.empty(n_total)
-        lt = None
         try:
-            for lo in range(0, n_total, batch):
-                chunk = inputs.iloc[lo:lo + batch]
-                sims = pd.DataFrame({
-                    "sim": chunk.index.astype(int),
-                    "wind_bin_thresh": chunk["wind_bin_thresh"].astype(float),
-                    "max_power_filter": chunk["max_power_filter"].astype(float),
-                    "correction_threshold": chunk["correction_threshold"].astype(float),
-                })
-                thr_cols = [
-                    "wind_bin_thresh", "max_power_filter",
-                    "correction_threshold",
-                ]
-                combos = (
-                    sims[thr_cols].drop_duplicates().reset_index(drop=True)
-                )
-                if len(combos) < len(sims):
-                    # sims sharing a threshold combo share ONE
-                    # filter/daily-energy/imputation chain (the non-UQ
-                    # case runs len(products) sims with IDENTICAL
-                    # thresholds — round 7's filter_memo collapsed
-                    # those; the sim-keyed chain does the same by
-                    # keying on the distinct combo and expanding the
-                    # day-grain result to member sims through a
-                    # broadcast map). Per-sim results are identical by
-                    # construction: same thresholds → same rows.
-                    combos_g = combos.copy()
-                    combos_g.insert(0, "sim", combos_g.index.astype(int))
-                    filtered = self._sim_keyed_filtered(base, combos_g)
-                    valid_g = self._daily_valid_energy_keyed(
-                        filtered, combos_g
-                    )
-                    gid_map = sims.merge(
-                        combos_g.rename(columns={"sim": "_gid"}),
-                        on=thr_cols,
-                    )[["_gid", "sim"]]
-                    map_df = self.plant.spark.createDataFrame(
-                        gid_map, "_gid long, sim long"
-                    )
-                    valid = (
-                        valid_g.withColumnRenamed("sim", "_gid")
-                        .join(F.broadcast(map_df), "_gid")
-                        .drop("_gid")
-                    )
-                else:
-                    filtered = self._sim_keyed_filtered(base, sims)
-                    valid = self._daily_valid_energy_keyed(filtered, sims)
-                lookup = {
-                    int(i): (str(r["reanalysis_product"]), float(r["scada_data_fraction"]))
-                    for i, r in chunk.iterrows()
-                }
-                preds = self._fit_and_apply_keyed(valid, lookup)
-                last_chunk = lo + batch >= n_total
-                if last_chunk:
-                    preds = preds.cache()  # feeds the totals AND the lt collect
-                totals = {
-                    int(r["sim"]): float(r["gross_gwh"])
-                    for r in self._plant_gross_by_sim(preds).collect()
-                }
-                for i in chunk.index:
-                    gross[i] = totals.get(int(i), 0.0)
-                if last_chunk:
-                    last_sim = int(inputs.index[-1])
-                    lt = (
-                        preds.where(F.col("sim") == last_sim)
-                        .drop("sim").toPandas()
-                    )
-                    preds.unpersist()
+            valid = self._daily_valid_energy(
+                self._ranked(base, thresholds, mpfs), sims
+            )
+            preds = self._fit_and_apply_keyed(valid, lookup).cache()
+            totals = {
+                int(r["sim"]): float(r["gross_gwh"])
+                for r in self._plant_gross_by_sim(preds).collect()
+            }
+            gross = np.array([totals.get(int(i), 0.0) for i in inputs.index])
+            lt = (
+                preds.where(F.col("sim") == int(inputs.index[-1]))
+                .drop("sim").toPandas()
+            )
+            preds.unpersist()
         finally:
             base.unpersist()
         return TIEResult(gross, inputs, lt)

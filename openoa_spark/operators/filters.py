@@ -130,7 +130,6 @@ def bin_filter(
     bin_min_col: Column | None = None,
     bin_max_col: Column | None = None,
     median_strategy: str = "bracket",
-    std_strategy: str = "native",
 ) -> DataFrame:
     """Bin ``bin_col`` into fixed-width bins; per bin compute a center
     (mean|median) and deviation (std|mad|scalar); flag values beyond
@@ -148,15 +147,6 @@ def bin_filter(
     a per-turbine loop — here one grouped aggregate covers all).
     ``bin_min_col``/``bin_max_col`` allow per-row (per-key) domain
     bounds, e.g. fractions of each turbine's rated power.
-
-    ``std_strategy`` picks the per-bin deviation aggregate for
-    threshold_type="std": "native" (default) is F.stddev_samp —
-    fastest, but its float partial-merge order varies with the
-    partitioning; "sums" derives the same sample std from EXACT
-    decimal sums (n, Σx, Σx²), order-independent, so flags are
-    bit-stable whatever the batching — required by sim-batched
-    Monte-Carlo pipelines (analysis/tie.py) that pin
-    batched == per-sim equality.
     """
     from openoa_spark.functions import stats as _stats
 
@@ -199,38 +189,7 @@ def bin_filter(
     else:
         stats = _median_tbl(binned, gb, value_col, "_center")
     if threshold_type == "std":
-        if std_strategy == "native":
-            devs = binned.groupBy(*gb).agg(
-                F.stddev_samp(value_col).alias("_dev")
-            )
-        elif std_strategy == "sums":
-            v = F.col(value_col)
-            devs = (
-                binned.groupBy(*gb)
-                .agg(
-                    F.count(v).cast("double").alias("_dn"),
-                    F.sum(v.cast("decimal(38,12)")).cast("double").alias("_dsx"),
-                    F.sum((v * v).cast("decimal(38,12)")).cast("double").alias("_dsxx"),
-                )
-                .select(
-                    *gb,
-                    F.when(
-                        F.col("_dn") >= 2.0,
-                        F.sqrt(
-                            F.greatest(
-                                F.lit(0.0),
-                                (
-                                    F.col("_dn") * F.col("_dsxx")
-                                    - F.col("_dsx") * F.col("_dsx")
-                                )
-                                / (F.col("_dn") * (F.col("_dn") - 1.0)),
-                            )
-                        ),
-                    ).alias("_dev"),
-                )
-            )
-        else:
-            raise ValueError(f"unknown std_strategy {std_strategy!r}")
+        devs = binned.groupBy(*gb).agg(F.stddev_samp(value_col).alias("_dev"))
         stats = stats.join(devs, gb, "inner")
     elif threshold_type == "mad":
         centered = binned.join(F.broadcast(stats), gb, "left").withColumn(

@@ -434,14 +434,14 @@ def impute_all_assets_by_correlation(
     single grouped aggregate) fill the holes.
 
     ``group_cols`` runs the whole imputation independently per group
-    (per Monte-Carlo sim in the batched TIE pipeline): correlations,
+    (per Monte-Carlo sim in TIE's day-grain chain): correlations,
     best-neighbor choice and fits all key on (group, asset). The
     grouped path defaults to strategy="vector" for the correlations
     and computes the linear fits from EXACT decimal sums — both
-    order-independent, so one batched job and a per-sim loop yield
-    BIT-IDENTICAL fills (pinned by
-    tests/test_tie.py::test_batched_equals_per_sim). The ungrouped
-    path is byte-for-byte the round-7 plan.
+    order-independent, so a group's fills do not depend on which
+    other groups share the job (pinned by
+    tests/test_tie.py::test_each_sim_equals_its_one_sim_run). The
+    ungrouped path is byte-for-byte the round-7 plan.
     """
     g = list(group_cols or [])
     strat = strategy or ("vector" if g else "matrix")

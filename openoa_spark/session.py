@@ -204,9 +204,9 @@ def auto_sim_batch(
     budget_fraction: float = 0.3,
     heap_bytes: int | None = None,
 ) -> int:
-    """Memory-adaptive Monte-Carlo chunk size for the sim-keyed
-    batched pipelines (TIE, wake): how many simulations may share one
-    rows×sims exploded pass without blowing executor memory.
+    """Memory-adaptive Monte-Carlo chunk size for wake's sim-keyed
+    batched pipeline: how many simulations may share one rows×sims
+    exploded pass without blowing executor memory.
 
     The round-8 ×16 scale probe OOM'd the default 8 GiB heap at the
     FIXED default ``sim_batch=25`` — at constant memory, sims-per-

@@ -34,9 +34,9 @@ def spark():
 # MC pipeline regressions, registry-wide sweeps (empty-input
 # survival, oracle type buckets), incremental/streaming replay
 # matrices, and hypothesis differentials. Every product module keeps
-# at least one quick test (test_tie::test_filter_flags is the TIE
-# representative; the plan lints in test_plans stay quick on purpose
-# — they are the per-commit scale guard). When a listed test's module
+# at least one quick test (the whole of test_tie is quick since its
+# run no longer grows with the sim count; the plan lints in test_plans
+# stay quick on purpose — they are the per-commit scale guard). When a listed test's module
 # moves, update the name here; unknown names fail collection loudly.
 
 SLOW_TESTS = {
@@ -78,11 +78,6 @@ SLOW_TESTS = {
     "test_streaming.py::test_stream_cdc_apply_maintains_table",
     "test_streaming.py::test_stream_drift_monitor_matches_batch_psi",
     "test_streaming.py::test_stream_near_dedup_across_batches",
-    "test_tie.py::test_batched_equals_per_sim",
-    "test_tie.py::test_daily_energy_and_imputation",
-    "test_tie.py::test_extrapolation_choice_pinned",
-    "test_tie.py::test_lt_gross_plausible",
-    "test_tie.py::test_uq_mode",
     "test_wake_losses.py::test_batched_sims_equal_per_sim_chunks",
     "test_wake_losses.py::test_uq_mode",
     "test_yaw_eya.py::test_batched_equals_per_sim",

@@ -18,7 +18,8 @@ Pipelines + truths:
 
 The six-pipeline test is marked slow: it builds ~420k SCADA rows and
 runs six pipelines (~ a few minutes); deselect with `-m "not slow"`.
-The yaw power-bin filter pin reuses the same plant in the quick tier.
+The yaw and TIE power-bin filter pins reuse the same plant in the
+quick tier.
 """
 
 import numpy as np
@@ -200,3 +201,39 @@ def test_yaw_power_bin_filter_matches_bin_filter(plant):
             new.sort_values(key, ignore_index=True),
             old.sort_values(key, ignore_index=True),
         )
+
+
+def test_tie_power_bin_filter_matches_bin_filter(plant):
+    """TIE's ranked power-bin filter keeps exactly the rows that
+    ``filters.bin_filter`` keeps, for two (wind_bin_thresh,
+    max_power_filter) draws ranked together, whose domain edges cut
+    different power bins: the cut bin's statistics cover only its rows
+    below the edge."""
+    tie = TurbineLongTermGrossEnergy(plant)
+    pairs = [(1.5, 0.82), (2.5, 0.89)]
+    thresholds = sorted({w for w, _ in pairs})
+    mpfs = sorted({m for _, m in pairs})
+    base = tie._base_flags()
+    ranked = tie._ranked(base, thresholds, mpfs)
+    n_base = base.count()
+    cap = F.col("rated_power")
+    cut_bins = set()
+    for wbt, mpf in pairs:
+        hi = (F.round(F.lit(mpf) * cap) - F.round(0.01 * cap)) / (0.06 * cap)
+        cut_bins |= {r[0] for r in base.select(F.floor(hi)).distinct().collect()}
+        old = filters.bin_filter(
+            base, bin_col="_p_norm", value_col="WMET_HorWdSpd", bin_width=1.0,
+            threshold=wbt, center_type="median", threshold_type="std",
+            direction="all", keys=["asset_id"],
+            bin_min_col=F.lit(0.0), bin_max_col=hi, flag_col="_flag",
+        ).where(~F.col("_flag")).select("asset_id", "time").toPandas()
+        new = ranked.where(
+            F.col("_ranks")[mpfs.index(mpf)] <= thresholds.index(wbt)
+        ).select("asset_id", "time").toPandas()
+        assert 0 < len(old) < n_base, (wbt, mpf)
+        key = ["asset_id", "time"]
+        pd.testing.assert_frame_equal(
+            new.sort_values(key, ignore_index=True),
+            old.sort_values(key, ignore_index=True),
+        )
+    assert len(cut_bins) == 2

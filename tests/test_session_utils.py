@@ -51,20 +51,13 @@ def _canon_row(row):
     return tuple(str(c(v)) for v in row)
 
 
-def test_fast_sums_matches_exact_mode_all_bench_queries(spark):
-    """Deploy (plain-double) aggregation must agree with the
-    oracle-pinned decimal-exact mode on EVERY bench query — the
-    guarantee that lets bench measure fast mode while every
-    correctness surface runs exact. If the modes ever diverge on a
-    query, BENCH would be grading a plan the correctness gate never
-    sees. Agreement pinned at round-6 after canonical row sort."""
+def _assert_fast_sums_match_exact_mode(spark, sf):
     import importlib
 
     from openoa_spark import registry
     from openoa_spark.functions import stats
 
     bench = importlib.import_module("bench")
-    sf = "/root/testdata/sf0.01"
     qs = registry.queries()
     for name in bench.BENCH_QUERIES:
         exact = sorted(_canon_row(r) for r in qs[name](spark, sf).collect())
@@ -72,6 +65,23 @@ def test_fast_sums_matches_exact_mode_all_bench_queries(spark):
             fast_df = qs[name](spark, sf)
         fast = sorted(_canon_row(r) for r in fast_df.collect())
         assert fast == exact, name
+
+
+def test_fast_sums_matches_exact_mode_all_bench_queries(spark):
+    """Deploy (plain-double) aggregation must agree with the
+    oracle-pinned decimal-exact mode on EVERY bench query — the
+    guarantee that lets bench measure fast mode while every
+    correctness surface runs exact. If the modes ever diverge on a
+    query, BENCH would be grading a plan the correctness gate never
+    sees. Agreement pinned at round-6 after canonical row sort."""
+    _assert_fast_sums_match_exact_mode(spark, "/root/testdata/sf0.01")
+
+
+def test_fast_sums_matches_exact_mode_at_sf0001(spark):
+    """The same fast-vs-exact agreement on the smallest scale, cheap
+    enough for the quick tier: a fast-mode plan that answers
+    differently fails here on every commit, not only at round close."""
+    _assert_fast_sums_match_exact_mode(spark, "/root/testdata/sf0.001")
 
 
 def test_grouped_exact_median_matches_f_median(spark):

@@ -94,22 +94,32 @@ def test_uq_mode(plant):
     assert (res.plant_gross_gwh > 10).all() and (res.plant_gross_gwh < 120).all()
 
 
-def test_batched_equals_per_sim(plant):
-    """One sim-keyed batched pass and a per-sim loop (sim_batch=1)
-    must produce BIT-IDENTICAL results: every aggregate on the
-    sim-keyed path is order-independent (exact decimal sums,
-    sequential array folds for the correlations, day-sorted NumPy
-    fits), so the batching grain cannot leak into the numbers —
-    the same guarantee tests/test_yaw_eya.py pins for yaw."""
-    import pandas as pd
+def test_each_sim_equals_its_one_sim_run(plant):
+    """Every UQ sim's gross energy equals, bit for bit, a one-sim run
+    of the per-stage methods with that sim's drawn inputs: sharing the
+    power-bin statistics and ranking rows across sims cannot leak into
+    any one sim's numbers."""
+    res = TurbineLongTermGrossEnergy(plant, UQ=True, num_sim=3, seed=7).run()
+    one = TurbineLongTermGrossEnergy(plant, UQ=True, num_sim=3, seed=7)
+    for i, r in res.inputs.iterrows():
+        filtered = one.filter_turbine_data(r["wind_bin_thresh"], r["max_power_filter"])
+        daily = one.daily_valid_energy(filtered, r["correction_threshold"])
+        preds = one.fit_and_apply(
+            daily, r["reanalysis_product"], r["scada_data_fraction"]
+        )
+        assert one.plant_gross_from_predictions(preds) == res.plant_gross_gwh[i], i
 
-    kw = dict(UQ=True, num_sim=3, seed=7)
-    a = TurbineLongTermGrossEnergy(plant, **kw).run(sim_batch=1)
-    b = TurbineLongTermGrossEnergy(plant, **kw).run(sim_batch=3)
-    assert np.array_equal(a.plant_gross_gwh, b.plant_gross_gwh)
-    lt_a = a.turbine_lt_gross.sort_values(["asset_id", "day"]).reset_index(drop=True)
-    lt_b = b.turbine_lt_gross.sort_values(["asset_id", "day"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(lt_a, lt_b, check_exact=True)
+
+@pytest.mark.parametrize(
+    "name", ["wind_bin_threshold", "max_power_filter", "correction_threshold"]
+)
+def test_uq_needs_ranges(plant, name):
+    """UQ draws each filter parameter from a (low, high) range; a scalar
+    is rejected up front, naming the parameter."""
+    with pytest.raises(ValueError, match=rf"{name} as a \(low, high\) range"):
+        TurbineLongTermGrossEnergy(plant, UQ=True, **{name: 2.0})
+    # a scalar stays valid without UQ
+    TurbineLongTermGrossEnergy(plant, **{name: 2.0})
 
 
 def test_extrapolation_choice_pinned(spark):
