@@ -6,18 +6,29 @@ Parity target (behavior only): openoa/analysis/wake_losses.py:53-1330.
 
 Spark-first inversions:
 - The reference pivots SCADA to a wide (time × [var, turbine]) frame;
-  here data stays LONG (time, asset_id) — every per-turbine step is a
-  grouped/windowed op, so the plan is identical at 4 or 4,000 turbines
-  and never materializes a 2·N-column row.
+  here data stays LONG (time, asset_id) in Spark, and each grouped
+  stage widens only its own group in NumPy.
 - Freestream-turbine sets per wind-direction bin are computed on the
-  driver from the collected pair matrices (dimension-sized), then
-  broadcast-joined as a (sector, asset_id) membership table.
-- The reference's hourly resample + (wd, ws) binning become grouped
-  aggregates; only bin-grain grids (≤ 72×31×N rows) are collected for
-  the final frequency-weighted arithmetic.
+  driver from the collected pair matrices (dimension-sized) and ride
+  into the time-slice stage as (sim, wd bin, member) index arrays.
 - Bootstrap (UQ) uses per-timestamp multiplicity weights (sample the
   time keys with replacement, count) — semantically the reference's
   row resampling without duplicating fact rows.
+
+Monte-Carlo shape: the sims are an array axis inside two grouped
+stages, never extra Spark rows, so no table holds SCADA rows × sims.
+1. Per turbine (``applyInPandas`` by asset): every sim's derating
+   power-bin median and MAD of wind speed over the turbine's full
+   record; each SCADA row leaves with its per-sim derate flags packed
+   into bits. Memory: one turbine's record × sims.
+2. Per day (``cogroup`` of the flagged rows with the per-time
+   reference table): every sim's freestream power and wind speed,
+   Poisson bootstrap weight (``poisson1_weight`` in Spark, one array
+   per timestamp) and hourly means, reduced to partial sums keyed by
+   (sim, bin). Spark sums the partials; the driver fits each sim's OLS
+   map and weights by the long-term frequencies. The stage runs twice
+   over the cached flagged table: the LT-bin sums need the OLS maps
+   that the first pass's sums give. Memory: one day's rows × sims.
 """
 
 from __future__ import annotations
@@ -27,12 +38,15 @@ from dataclasses import dataclass, field
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from openoa_spark.functions import met, regression as reg
 from openoa_spark.functions.stats import poisson1_weight
-from openoa_spark.operators import filters
 from openoa_spark.plant import PlantData
+from openoa_spark.session import ship_package
+
+# partial-sum kinds emitted by the time-slice stage
+_POR, _TURB, _WD, _WS_INT, _GRID, _TGRID = range(6)
 
 
 @dataclass
@@ -46,6 +60,7 @@ class WakeLossesResult:
     wake_losses_por_ws: np.ndarray       # (num_sim, n_ws_bins)
     wake_losses_lt_ws: np.ndarray        # (num_sim, n_ws_bins)
     turbine_ids: list[str] = field(default_factory=list)
+    inputs: pd.DataFrame = field(default_factory=pd.DataFrame)  # per-sim draws
 
     @property
     def wake_losses_por_mean(self) -> float:
@@ -54,6 +69,193 @@ class WakeLossesResult:
     @property
     def wake_losses_lt_mean(self) -> float:
         return float(np.nanmean(self.wake_losses_lt))
+
+
+def _round_half_up(x: np.ndarray) -> np.ndarray:
+    """Spark's ``round`` of a double to an integer: halves away from 0."""
+    a = np.abs(x)
+    f = np.floor(a)
+    return np.copysign(f + (a - f >= 0.5), x) + 0.0
+
+
+def _group_median(g: np.ndarray, v: np.ndarray) -> np.ndarray:
+    """Per row, the median of ``v`` over the rows sharing its small-int
+    ``g`` (even counts: mean of the two middle values, as ``F.median``)."""
+    order = np.argsort(v)
+    order = order[np.argsort(g[order], kind="stable")]  # radix sort
+    gs, vs = g[order], v[order]
+    starts = np.flatnonzero(np.r_[True, gs[1:] != gs[:-1]])
+    counts = np.diff(np.r_[starts, len(gs)])
+    med = (vs[starts + (counts - 1) // 2] + vs[starts + counts // 2]) / 2.0
+    out = np.empty(len(v))
+    out[order] = np.repeat(med, counts)
+    return out
+
+
+def _derate_flags(pdf: pd.DataFrame, cap: float, dws: np.ndarray,
+                  mpf: np.ndarray, mad: np.ndarray) -> np.ndarray:
+    """(sims, rows) derate flags of one turbine's record
+    (wake_losses.py:1057-1096): outside the normal power window above
+    the start wind speed, or above its power bin's wind-speed median by
+    more than ``mad`` MADs (``filters.bin_filter`` with a median center,
+    ``threshold_type="mad"``, ``direction="above"``). Power is binned in
+    25 bins of width 0.04·(mpf − 0.01)·cap from 0.01·cap."""
+    ws = pdf["WMET_HorWdSpd"].to_numpy()
+    pw = pdf["WTUR_W"].to_numpy()
+    flags = (
+        (ws >= dws[:, None]) & (ws <= 40.0)
+        & ~((pw >= 0.01 * cap) & (pw <= 1.2 * cap))
+    )
+    p_norm = (pw - 0.01 * cap) / ((0.04 * (mpf[:, None] - 0.01)) * cap)
+    in_bin = (p_norm >= 0.0) & (p_norm < 25.0)
+    bins = np.where(in_bin, np.floor(p_norm), -1).astype(np.int16)
+    for s in range(len(dws)):
+        center = _group_median(bins[s], ws)
+        dev = _group_median(bins[s], np.abs(ws - center))
+        flags[s] |= in_bin[s] & (ws - center > mad[s] * dev)
+    return flags
+
+
+def _group_sums(kind: int, keys: dict[str, np.ndarray], mask: np.ndarray,
+                vals: list[np.ndarray]) -> pd.DataFrame:
+    """Partial-sum rows of one kind: ``vals`` summed over the entries
+    under ``mask`` that share the keys (sim, turb, k1, k2)."""
+    cols = ("sim", "turb", "k1", "k2")
+    ks = [np.broadcast_to(keys.get(c, 0.0), mask.shape)[mask] + 0.0 for c in cols]
+    code = np.zeros(len(ks[0]), np.int64)
+    for k in ks:
+        u, inv = np.unique(k, return_inverse=True)
+        code = code * len(u) + inv
+    _, first, inv = np.unique(code, return_index=True, return_inverse=True)
+    out = pd.DataFrame({c: k[first] for c, k in zip(cols, ks)})
+    out.insert(0, "kind", kind)
+    for i, v in enumerate(vals):
+        out[f"v{i}"] = np.bincount(
+            inv, weights=np.broadcast_to(v, mask.shape)[mask], minlength=len(first)
+        )
+    return out
+
+
+def _slice_partials(scada: pd.DataFrame, ref: pd.DataFrame, p: dict) -> pd.DataFrame:
+    """One day of the per-time-slice stage for every sim at once. With
+    ``p["slope"]`` unset, emits the POR, per-turbine, wind-direction and
+    integer-ws reanalysis sums (wake_losses.py:628-649, 1098-1149);
+    with the per-sim OLS maps set, the LT (wd, ws) bin sums of the
+    plant and of each turbine (wake_losses.py:1151-1317)."""
+    cols = ["kind", "sim", "turb", "k1", "k2", *(f"v{i}" for i in range(p["n_vals"]))]
+    ref = ref.sort_values("_t", kind="stable")
+    t = ref["_t"].to_numpy()
+    n_t, n_turb, n_sim = len(t), p["n_turb"], p["n_sim"]
+    ti = np.searchsorted(t, scada["_t"].to_numpy())
+    ni = scada["asset_id"].map(p["turb_index"]).to_numpy()
+    power = np.zeros((n_t, n_turb))
+    power[ti, ni] = scada["WTUR_W"].to_numpy()
+    speed = np.zeros((n_t, n_turb))
+    speed[ti, ni] = scada["WMET_HorWdSpd"].to_numpy()
+    der = np.zeros((n_sim, n_t, n_turb), bool)
+    if p["derate"]:
+        bits = np.frombuffer(b"".join(scada["_derate"]), np.uint8)
+        der[:, ti, ni] = np.unpackbits(
+            bits.reshape(len(scada), -1), axis=1, count=n_sim
+        ).T.astype(bool)
+
+    # freestream rows of each (sim, time): its wd bin's membership
+    # rows (a turbine twice where two resampled sectors merged),
+    # without the derated ones (wake_losses.py:628-649)
+    wd = ref["_wd_bin"].to_numpy()
+    b = np.minimum(np.searchsorted(p["wd_bins"], wd), len(p["wd_bins"]) - 1)
+    ids = p["fs_ids"][:, b]
+    mult = p["fs_mult"][:, b]
+    idc = np.maximum(ids, 0)
+    normal = (
+        (ids >= 0) & (p["wd_bins"][b] == wd)[None, :, None]
+        & ~np.take_along_axis(der, idc, axis=2)
+    )
+    w = (np.stack(ref["_w"].to_numpy()).T * normal.any(-1)).astype(float)
+    ok = w > 0
+    rows = np.arange(n_t)[None, :, None]
+
+    def freestream(x: np.ndarray, method: str) -> np.ndarray:
+        v = x[rows, idc]
+        if method == "mean":
+            m = np.where(normal, mult, 0.0)
+            out = (v * m).sum(-1) / m.sum(-1)
+        elif method == "median":  # over rows: multiplicity ignored
+            v = np.sort(np.where(normal, v, np.inf), axis=-1)
+            k = normal.sum(-1, keepdims=True)
+            lo = np.take_along_axis(v, np.maximum(k - 1, 0) // 2, -1)
+            hi = np.take_along_axis(v, np.minimum(k // 2, v.shape[-1] - 1), -1)
+            out = ((lo + hi) / 2.0)[..., 0]
+        else:
+            out = np.where(normal, v, -np.inf).max(-1)
+        return np.where(ok, out, 0.0)
+
+    # hourly weighted means (wake_losses.py:1098-1126)
+    hours, h_of_t = np.unique(ref["_hour"].to_numpy(), return_inverse=True)
+    onehot = np.zeros((n_t, len(hours)))
+    onehot[np.arange(n_t), h_of_t] = 1.0
+    hw = w @ onehot
+    present = hw > 0
+
+    def hourly(x):
+        return ((x * w) @ onehot) / hw
+
+    with np.errstate(invalid="ignore", divide="ignore"):
+        fs_power = freestream(power, p["power_method"])
+        fs_ws = freestream(speed, p["ws_method"])
+        actual = power.sum(1)
+        potential = fs_power * (~der).sum(-1) + np.where(der, power, 0.0).sum(-1)
+        turb_potential = np.where(der, power, fs_power[..., None])
+        lt_wd = ref["_wd_lt"].to_numpy()
+        fs_ws_h = hourly(fs_ws)
+        sims = np.arange(n_sim)[:, None]
+        if p.get("slope") is None:
+            ws_int = _round_half_up(fs_ws_h)
+            parts = [
+                _group_sums(_POR, {"sim": np.arange(n_sim)}, np.ones(n_sim, bool),
+                            [(actual * w).sum(1), (potential * w).sum(1)]),
+                _group_sums(_TURB, {"sim": sims, "turb": np.arange(n_turb)},
+                            np.ones((n_sim, n_turb), bool),
+                            [(x * w[..., None]).sum(1) for x in (power, turb_potential)]),
+                _group_sums(_WD, {"sim": sims, "k1": lt_wd}, ok,
+                            [actual * w, potential * w]),
+                _group_sums(_WS_INT, {"sim": sims, "k1": ws_int},
+                            present & (ws_int >= p["min_ws"]),
+                            [*(hourly(ref[c].to_numpy()) for c in p["rean_cols"]),
+                             np.ones(hw.shape)]),
+            ]
+        else:
+            slope, icpt = p["slope"][:, None], p["icpt"][:, None]
+            wsb, wdb = p["wsb"], p["wdb"]
+
+            def ws_bin(x):
+                return _round_half_up((slope * x + icpt) / wsb) * wsb
+
+            wd_h = np.fmod(_round_half_up(hourly(ref["wind_direction_ref"].to_numpy()) / wdb)
+                           * wdb, 360.0)
+            # each turbine's hour takes its bins from the hour's first
+            # kept 10-min stamp
+            first = np.where(
+                ok[:, :, None] & (h_of_t[None, :, None] == np.arange(len(hours))),
+                np.arange(n_t)[None, :, None], n_t - 1,
+            ).min(1)
+            t_hourly = np.stack([
+                np.einsum("stn,th->snh", x * w[..., None], onehot) / hw[:, None, :]
+                for x in (np.broadcast_to(power, der.shape), turb_potential)
+            ])
+            parts = [
+                _group_sums(_GRID, {"sim": sims, "k1": wd_h, "k2": ws_bin(fs_ws_h)},
+                            present,
+                            [hourly(actual) * hw, hourly(potential) * hw, hw]),
+                _group_sums(_TGRID, {
+                    "sim": sims[:, None], "turb": np.arange(n_turb)[None, :, None],
+                    "k1": lt_wd[first][:, None, :],
+                    "k2": ws_bin(np.take_along_axis(fs_ws, first, 1))[:, None, :],
+                }, np.broadcast_to(present[:, None, :], t_hourly.shape[1:]),
+                    [t_hourly[0] * hw[:, None, :], t_hourly[1] * hw[:, None, :],
+                     np.broadcast_to(hw[:, None, :], t_hourly.shape[1:])]),
+            ]
+    return pd.concat(parts, ignore_index=True).reindex(columns=cols).fillna(0.0)
 
 
 @dataclass
@@ -82,10 +284,6 @@ class WakeLosses:
     min_ws_bin_lin_reg: float = 3.0
     bin_count_thresh_lin_reg: int = 50
     seed: int = 42
-    # sims per batched Spark pass (round-7): bounds the rows × sims
-    # fan-out of the sim-keyed plan; each pass computes every result
-    # for its chunk in ~7 jobs, vs ~10 jobs per sim before
-    sim_batch: int = 25
 
     def __post_init__(self):
         if self.reanalysis_products is None:
@@ -139,14 +337,14 @@ class WakeLosses:
         self._ref = ref.cache()
         self._base = base.join(ref.select("time"), "time", "inner").cache()
 
-    def _freestream_sectors(self, sector_width: float) -> tuple[pd.DataFrame, pd.DataFrame]:
+    def _freestream_rows(self, pairs: pd.DataFrame,
+                         sector_width: float) -> tuple[np.ndarray, np.ndarray]:
         """Driver-side: freestream turbine set for each wd bin from the
-        collected bearing pairs, merged into sectors of constant set
-        (wake_losses.py:580-598). Returns (bin→sector map, sector
-        membership) as pandas frames ready to broadcast-join."""
-        pairs = self.plant.asset_direction_pairs.toPandas()
-        pairs = pairs[pairs["asset_a"].isin(self.turbine_ids)
-                      & pairs["asset_b"].isin(self.turbine_ids)]
+        bearing pairs, merged into sectors of constant set
+        (wake_losses.py:580-598); under UQ each sector's set is
+        resampled with replacement (wake_losses.py:603-607). Returns
+        the membership rows of each wd bin as (turbine index, -1 pad)
+        and multiplicity arrays, (n_wd_bins, 2 · n_turbines)."""
         half = sector_width / 2.0
         wd_bins = np.arange(0.0, 360.0, self.wd_bin_width)
         sets: dict[float, tuple[str, ...]] = {}
@@ -166,502 +364,308 @@ class WakeLosses:
                 prev = sets[wd]
             sector_of_bin[wd] = sid
         # wrap-around: first and last sector share the set → merge
-        if sid > 0 and sector_sets[0] == sector_sets[sid]:
+        # (both resamples then feed sector 0)
+        wrap = sid > 0 and sector_sets[0] == sector_sets[sid]
+        if wrap:
             for wd in wd_bins:
                 if sector_of_bin[wd] == sid:
                     sector_of_bin[wd] = 0
-        bin_map = pd.DataFrame(
-            {"wd_bin": list(sector_of_bin), "sector": list(sector_of_bin.values())}
-        )
-        member_rows = []
+        members: dict[int, list[tuple[int, float]]] = {}
         for s, ids in sector_sets.items():
-            s_eff = 0 if (s == sid and sid > 0 and sector_sets[0] == sector_sets[sid]) else s
             ids_eff = list(ids)
-            if self.UQ and ids_eff:  # resample freestream set (wake_losses.py:603-607)
+            if self.UQ and ids_eff:
                 ids_eff = list(self._rng.choice(ids_eff, size=len(ids_eff), replace=True))
-            for t in set(ids_eff):
-                member_rows.append((s_eff, t, float(ids_eff.count(t))))
-        membership = pd.DataFrame(member_rows, columns=["sector", "asset_id", "mult"])
-        return bin_map, membership
-
-    # ------------------------------------------------------------ per-sim
-
-    def _sim_tables(self, specs: list[dict]):
-        """EVERY simulation's per-time plant table and per-(time,
-        turbine) table in ONE sim-keyed plan (round-7: the MC loop
-        previously ran ~10 Spark jobs PER SIM — 1000 sequential jobs
-        at the reference's default num_sim=100).
-
-        Mechanics of the batching:
-        - the per-sim freestream sector/membership tables (driver-side
-          pandas, bin-grain) are concatenated with a ``sim`` column
-          and broadcast ONCE; joining the reference table to the
-          (sim, wd_bin)-keyed map fans each TIME row out to its sims —
-          a broadcast-join fan-out, no cartesian;
-        - per-sim derating parameters arrive as a map-side explode of
-          (sim, params) structs over the FULL base table — the
-          reference identifies derating BEFORE the bootstrap resample
-          (wake_losses.py:551-555), so the bin-filter statistics must
-          see every timestamp, not the w>0 subset; the filter runs
-          keyed by (sim, asset_id) with the MAD threshold as a per-sim
-          column — bin stats stay bin-grain × sims, still tiny;
-        - the UQ bootstrap is a deterministic per-(time, sim)
-          Poisson(1) weight (functions.stats.poisson1_weight),
-          replacing the per-sim df.sample jobs — identical whatever
-          the sim chunking;
-        - every aggregate downstream keys by sim, so one job computes
-          all sims' tables. run() chunks sims (``sim_batch``) to bound
-          the rows×sims fan-out.
-        """
-        spark = self.plant.spark
-        bin_maps, membs, seeds = [], [], []
-        for s in specs:
-            bm, mb = self._freestream_sectors(s["freestream_sector_width"])
-            bm = bm.copy()
-            bm["sim"] = s["sim"]
-            mb = mb.copy()
-            mb["sim"] = s["sim"]
-            bin_maps.append(bm)
-            membs.append(mb)
-            seeds.append({
-                "sim": s["sim"],
-                "_bseed": -1 if s.get("bseed") is None else int(s["bseed"]),
-            })
-        bmap = F.broadcast(spark.createDataFrame(pd.concat(bin_maps)))
-        memb = F.broadcast(spark.createDataFrame(pd.concat(membs)))
-        prm = F.broadcast(spark.createDataFrame(pd.DataFrame(seeds)))
-
-        ref = self._ref
-        wd_to_bin = (
-            F.round(F.col("wind_direction_ref") / self.wd_bin_width) * self.wd_bin_width
-        ) % 360.0
-        # (sim, wd_bin) map join = the sim fan-out of the time axis
-        ref_b = (
-            ref.withColumn("wd_bin", wd_to_bin)
-            .join(bmap, "wd_bin")
-            .join(prm.select("sim", "_bseed"), "sim")
-        )
-        w = F.when(
-            F.col("_bseed") < 0, F.lit(1)
-        ).otherwise(poisson1_weight("_bseed", "time"))
-        ref_b = ref_b.withColumn("w", w).where(F.col("w") > 0).drop("_bseed")
-
-        if self.correct_for_derating:
-            # per-sim derating flags (wake_losses.py:1057-1096) on the
-            # FULL base — the reference identifies derating BEFORE the
-            # bootstrap resample (wake_losses.py:551-555), so the
-            # bin-filter statistics must not see the w>0 filter (r7
-            # review fix; the yaw batcher already had this ordering).
-            # Sim fan-out here is a map-side explode of the per-sim
-            # parameter structs; the window bound and power-bin layout
-            # are then per-sim COLUMNS, and normalizing power by the
-            # per-sim bin width makes the bin domain [0, 25) for every
-            # sim, so one grouped bin filter keyed (sim, asset_id)
-            # covers the whole chunk
-            entries = F.array(*[
-                F.struct(
-                    F.lit(int(s["sim"])).alias("sim"),
-                    F.lit(float(s["derating_filter_wind_speed_start"]))
-                    .alias("_dws"),
-                    F.lit(float(s["max_power_filter"])).alias("_mpf"),
-                    F.lit(float(s["wind_bin_mad_thresh"])).alias("_mad"),
-                )
-                for s in specs
-            ])
-            asset = self.plant.asset.where(F.col("type") == "turbine").select(
-                "asset_id", "rated_power"
+            members.setdefault(0 if (wrap and s == sid) else s, []).extend(
+                (self.turbine_ids.index(t), float(ids_eff.count(t)))
+                for t in sorted(set(ids_eff))
             )
-            df = (
-                self._base.join(F.broadcast(asset), "asset_id")
-                .withColumn("_s", F.explode(entries))
-                .withColumn("sim", F.col("_s.sim"))
-                .withColumn("_dws", F.col("_s._dws"))
-                .withColumn("_mpf", F.col("_s._mpf"))
-                .withColumn("_mad", F.col("_s._mad"))
-                .drop("_s")
-            )
-            cap = F.col("rated_power")
-            df = df.withColumn(
-                "_flag_window",
-                F.col("WMET_HorWdSpd").between(F.col("_dws"), 40.0)
-                & ~F.col("WTUR_W").between(0.01 * cap, 1.2 * cap),
-            )
-            bin_width_frac = 0.04 * (F.col("_mpf") - 0.01)
-            df = df.withColumn(
-                "_p_norm", (F.col("WTUR_W") - 0.01 * cap) / (bin_width_frac * cap)
-            )
-            df = filters.bin_filter(
-                df, bin_col="_p_norm", value_col="WMET_HorWdSpd", bin_width=1.0,
-                threshold=F.col("_mad"), center_type="median",
-                threshold_type="mad", direction="above",
-                keys=["sim", "asset_id"],
-                bin_min_col=F.lit(0.0),
-                # (mpf - 0.01) / (0.04 (mpf - 0.01)) == 25 for every sim
-                bin_max_col=F.lit(25.0),
-                flag_col="_flag_bin",
-            )
-            df = df.withColumn(
-                "derate_flag", F.col("_flag_window") | F.col("_flag_bin")
-            ).drop("_p_norm", "_flag_window", "_flag_bin", "rated_power",
-                   "_dws", "_mpf", "_mad")
-            df = df.join(
-                ref_b.select("time", "sim", "sector", "w"),
-                ["time", "sim"], "inner",
-            )
-        else:
-            # no derating: the (sim, wd_bin) map join alone fans out
-            df = self._base.join(
-                ref_b.select("time", "sim", "sector", "w"), "time", "inner"
-            ).withColumn("derate_flag", F.lit(False))
+        # a merged sector holds at most two rows per turbine
+        ids = np.full((len(wd_bins), 2 * len(self.turbine_ids)), -1)
+        mult = np.zeros(ids.shape)
+        for b, wd in enumerate(wd_bins):
+            for j, (t, m) in enumerate(members[sector_of_bin[wd]]):
+                ids[b, j], mult[b, j] = t, m
+        return ids, mult
 
-        # freestream representative power/ws per (sim, time) over
-        # NORMAL freestream turbines (wake_losses.py:628-649)
-        fs = df.join(memb, ["sim", "sector", "asset_id"], "inner").where(
-            ~F.col("derate_flag")
-        )
-        if self.freestream_power_method == "mean":
-            p_agg = F.sum(F.col("WTUR_W") * F.col("mult")) / F.sum("mult")
-        elif self.freestream_power_method == "median":
-            p_agg = F.median("WTUR_W")
-        else:
-            p_agg = F.max("WTUR_W")
-        if self.freestream_wind_speed_method == "mean":
-            ws_agg = F.sum(F.col("WMET_HorWdSpd") * F.col("mult")) / F.sum("mult")
-        else:
-            ws_agg = F.median("WMET_HorWdSpd")
-        fs_per_time = fs.groupBy("sim", "time").agg(
-            p_agg.alias("fs_power"), ws_agg.alias("fs_ws")
-        )
+    # ------------------------------------------------------------ draws
 
-        per_turb = (
-            df.join(fs_per_time, ["sim", "time"], "inner")
-            .withColumn(
-                "potential_turbine_power",
-                F.when(F.col("derate_flag"), F.col("WTUR_W")).otherwise(F.col("fs_power")),
-            )
-        )
-        plant_per_time = per_turb.groupBy("sim", "time").agg(
-            F.first("w").alias("w"),
-            F.first("fs_power").alias("fs_power"),
-            F.first("fs_ws").alias("fs_ws"),
-            F.sum("WTUR_W").alias("actual_plant_power"),
-            (
-                F.first("fs_power") * F.sum((~F.col("derate_flag")).cast("long"))
-                + F.sum(F.when(F.col("derate_flag"), F.col("WTUR_W")).otherwise(0.0))
-            ).alias("potential_plant_power"),
-        )
-        wd_lt_bin = (
-            F.round(F.col("wind_direction_ref") / self.wd_bin_width_LT_corr)
-            * self.wd_bin_width_LT_corr
-        ) % 360.0
-        plant_per_time = plant_per_time.join(
-            ref.select("time", "wind_direction_ref",
-                       *[f"ws_rean_{p}" for p in self.reanalysis_products]),
-            "time",
-        ).withColumn("wd_lt_bin", wd_lt_bin)
-        return plant_per_time, per_turb
-
-    # ------------------------------------------------------------ LT corr
-
-    def _lt_correction(self, plant_per_time: DataFrame, per_turb: DataFrame,
-                       specs: list[dict]):
-        """Hourly means → ws-bin linreg bias correction → (wd, ws) bin
-        grid joined with LT reanalysis frequencies → weighted losses
-        (wake_losses.py:1098-1317), for EVERY sim in the chunk at once:
-        the hourly/bin/grid aggregates key by sim, the per-sim OLS bias
-        maps are fit driver-side from one collected sim-keyed bin table
-        and joined back as a broadcast (sim, slope, icpt) frame, and LT
-        frequencies are computed once per DISTINCT (product, num_years)
-        pair. Grids stay bin-grain × sims — tiny collects. Returns
-        {sim: (lt, t_losses, lt_wd, por_ws, lt_ws)}."""
-        wsb = self.ws_bin_width_LT_corr
-        wdb = self.wd_bin_width_LT_corr
-        spark = self.plant.spark
-        rean_cols = [f"ws_rean_{p}" for p in self.reanalysis_products]
-        hourly = (
-            plant_per_time.groupBy(
-                "sim", F.date_trunc("hour", "time").alias("hour")
-            )
-            .agg(
-                (F.sum(F.col("wind_direction_ref") * F.col("w")) / F.sum("w")).alias("wd_ref"),
-                (F.sum(F.col("fs_ws") * F.col("w")) / F.sum("w")).alias("fs_ws"),
-                (F.sum(F.col("actual_plant_power") * F.col("w")) / F.sum("w")).alias("actual"),
-                (F.sum(F.col("potential_plant_power") * F.col("w")) / F.sum("w")).alias("potential"),
-                *[
-                    (F.sum(F.col(c) * F.col("w")) / F.sum("w")).alias(c)
-                    for c in rean_cols
-                ],
-                F.sum("w").alias("w"),
-            )
-        ).cache()
-        # SCADA freestream ws → reanalysis ws linear map from integer-
-        # bin means (wake_losses.py:1127-1149), one sim-keyed aggregate
-        # collecting every product's bin means; the per-sim OLS picks
-        # its sim's product column driver-side
-        bin_stats = (
-            hourly.groupBy("sim", F.round("fs_ws").alias("ws_int"))
-            .agg(
-                *[F.avg(c).alias(c) for c in rean_cols],
-                F.count("*").alias("n"),
-            )
-            .where(F.col("ws_int") >= self.min_ws_bin_lin_reg)
-            .toPandas()
-        )
-        coefs = []
-        for s in specs:
-            bs = bin_stats[
-                (bin_stats["sim"] == s["sim"])
-                & (bin_stats["n"] >= self.bin_count_thresh_lin_reg)
-            ]
-            col = f"ws_rean_{s['reanalysis_product']}"
-            if len(bs) >= 2:
-                coef, icpt = reg.ols_fit(
-                    bs["ws_int"].to_numpy(), bs[col].to_numpy()
-                )
-                slope = float(coef[0])
-            else:  # degenerate data: identity map
-                slope, icpt = 1.0, 0.0
-            coefs.append({"sim": s["sim"], "_slope": slope, "_icpt": icpt})
-        coef_pd = pd.DataFrame(coefs)
-        coef_df = F.broadcast(spark.createDataFrame(coef_pd))
-        slope_of = {c["sim"]: (c["_slope"], c["_icpt"]) for c in coefs}
-
-        ws_corr = F.col("_slope") * F.col("fs_ws") + F.col("_icpt")
-        hourly_b = hourly.join(coef_df, "sim").withColumn(
-            "ws_bin", F.round(ws_corr / wsb) * wsb
-        ).withColumn(
-            "wd_bin", (F.round(F.col("wd_ref") / wdb) * wdb) % 360.0
-        )
-        grid_all = hourly_b.groupBy("sim", "wd_bin", "ws_bin").agg(
-            F.sum(F.col("actual") * F.col("w")).alias("sum_actual"),
-            F.sum(F.col("potential") * F.col("w")).alias("sum_potential"),
-            F.sum("w").alias("n"),
-        ).toPandas()
-
-        # LT (wd, ws) frequencies from reanalysis, once per DISTINCT
-        # (product, num_years) (wake_losses.py:1151-1175)
-        freqs_memo: dict[tuple, pd.DataFrame] = {}
-        for s in specs:
-            key = (s["reanalysis_product"], int(s["num_years_LT"]))
-            if key in freqs_memo:
-                continue
-            product, num_years = key
-            rean = self.plant.reanalysis[product]
-            end_lt = pd.Timestamp(rean.agg(F.max("time")).first()[0]).floor("h")
-            start_lt = end_lt - pd.offsets.DateOffset(years=num_years)
-            fr = (
-                rean.where((F.col("time") <= F.lit(end_lt.to_pydatetime()))
-                           & (F.col("time") > F.lit(start_lt.to_pydatetime())))
-                .withColumn("ws_bin", F.round(F.col("WMETR_HorWdSpd") / wsb) * wsb)
-                .withColumn("wd_bin",
-                            (F.round(F.col("WMETR_HorWdDir") / wdb) * wdb) % 360.0)
-                .groupBy("wd_bin", "ws_bin").agg(F.count("*").alias("cnt"))
-                .toPandas().set_index(["wd_bin", "ws_bin"]).sort_index()
-            )
-            fr["freq"] = fr["cnt"] / fr["cnt"].sum()
-            freqs_memo[key] = fr
-
-        # per-turbine bin grids, sim-keyed (wake_losses.py:1216-1317)
-        per_turb_hourly = (
-            per_turb.join(
-                plant_per_time.select("sim", "time", "wd_lt_bin"),
-                ["sim", "time"],
-            )
-            .groupBy(
-                "sim", F.date_trunc("hour", "time").alias("hour"), "asset_id"
-            )
-            .agg(
-                (F.sum(F.col("WTUR_W") * F.col("w")) / F.sum("w")).alias("p"),
-                (F.sum(F.col("potential_turbine_power") * F.col("w")) / F.sum("w")).alias("pp"),
-                F.sum("w").alias("w"),
-                F.first(F.col("fs_ws")).alias("fs_ws_any"),
-                F.first(F.col("wd_lt_bin")).alias("wd_bin_any"),
-            )
-        )
-        tgrid_all = (
-            per_turb_hourly.join(coef_df, "sim")
-            .withColumn(
-                "ws_bin",
-                F.round((F.col("_slope") * F.col("fs_ws_any") + F.col("_icpt")) / wsb) * wsb,
-            )
-            .groupBy("sim", "asset_id", F.col("wd_bin_any").alias("wd_bin"), "ws_bin")
-            .agg(F.sum(F.col("p") * F.col("w")).alias("sp"),
-                 F.sum(F.col("pp") * F.col("w")).alias("spp"),
-                 F.sum("w").alias("n"))
-            .toPandas()
-        )
-        rated_by_turbine = {
-            r["asset_id"]: float(r["rated_power"])
-            for r in self.plant.asset.select("asset_id", "rated_power").collect()
-            if r["rated_power"] is not None
-        }
-
-        ws_index = np.arange(0.0, 31.0, wsb)
-        wd_index = np.arange(0.0, 360.0, wdb)
-        out: dict[int, tuple] = {}
-        for s in specs:
-            sim = s["sim"]
-            slope, icpt = slope_of[sim]
-            no_wakes_thresh = float(
-                np.round(slope * self.no_wakes_ws_thresh_LT_corr + icpt)
-            )
-            freqs = freqs_memo[(s["reanalysis_product"], int(s["num_years_LT"]))]
-            grid = (
-                grid_all[grid_all["sim"] == sim]
-                .drop(columns=["sim"])
-                .set_index(["wd_bin", "ws_bin"]).sort_index()
-            )
-
-            # POR by-ws arrays (sum-based, wake_losses.py:1190-1214)
-            by_ws = grid.groupby(level=1).sum().reindex(ws_index)
-            wake_por_ws = (by_ws["sum_actual"] / by_ws["sum_potential"]).to_numpy()
-
-            # frequency-weighted LT losses on the joined bin grid
-            g = freqs.join(grid, how="outer")
-            g["mean_actual"] = g["sum_actual"] / g["n"]
-            g["mean_potential"] = g["sum_potential"] / g["n"]
-            if self.assume_no_wakes_high_ws_LT_corr:
-                fill = g["mean_actual"].isna() & (
-                    g.index.get_level_values(1) >= no_wakes_thresh
-                )
-                cap_kw = self.plant.metadata.capacity * 1e3
-                g.loc[fill, "mean_actual"] = cap_kw
-                g.loc[fill, "mean_potential"] = cap_kw
-            g["actual_e"] = g["freq"] * g["mean_actual"]
-            g["potential_e"] = g["freq"] * g["mean_potential"]
-            lt_loss = 1.0 - np.nansum(g["actual_e"]) / np.nansum(g["potential_e"])
-
-            by_wd_lt = g.groupby(level=0).sum(min_count=1).reindex(wd_index)
-            wake_lt_wd = (by_wd_lt["actual_e"] / by_wd_lt["potential_e"]).to_numpy()
-            by_ws_lt = g.groupby(level=1).sum(min_count=1).reindex(ws_index)
-            wake_lt_ws = (by_ws_lt["actual_e"] / by_ws_lt["potential_e"]).to_numpy()
-
-            t_losses = []
-            for t in self.turbine_ids:
-                tg = (
-                    tgrid_all[
-                        (tgrid_all["sim"] == sim) & (tgrid_all["asset_id"] == t)
-                    ]
-                    .drop(columns=["sim", "asset_id"])
-                    .set_index(["wd_bin", "ws_bin"]).sort_index()
-                )
-                tj = freqs.join(tg, how="outer")
-                tj["mp"] = tj["sp"] / tj["n"]
-                tj["mpp"] = tj["spp"] / tj["n"]
-                if self.assume_no_wakes_high_ws_LT_corr:
-                    rated = rated_by_turbine[t]
-                    fill = tj["mp"].isna() & (
-                        tj.index.get_level_values(1) >= no_wakes_thresh
-                    )
-                    tj.loc[fill, "mp"] = rated
-                    tj.loc[fill, "mpp"] = rated
-                t_losses.append(
-                    1.0 - np.nansum(tj["freq"] * tj["mp"])
-                    / np.nansum(tj["freq"] * tj["mpp"])
-                )
-            out[sim] = (
-                lt_loss, np.array(t_losses), wake_lt_wd, wake_por_ws, wake_lt_ws
-            )
-        hourly.unpersist()
-        return out
-
-    # ------------------------------------------------------------ run
-
-    def run(self, num_sim: int | None = None) -> WakeLossesResult:
-        if self._base is None:
-            self.prepare()
+    def _draw(self, n_sims: int) -> pd.DataFrame:
+        """Every sim's parameters, one row per sim, drawn in a fixed
+        order: the scalar draws sim by sim, then each sim's freestream
+        resample."""
         rng = self._rng
 
-        def draw(v, scale=1.0):
+        def draw(v, integer=False):
             if self.UQ and isinstance(v, (tuple, list)):
+                if integer:  # both ends, as MonteCarloAEP's windiness years
+                    return int(rng.integers(v[0], v[1] + 1))
                 return float(rng.uniform(v[0], v[1]))
             return float(v) if np.isscalar(v) else float(np.mean(v))
 
-        n_sims = (num_sim or self.num_sim) if self.UQ else len(self.reanalysis_products)
-        nt = len(self.turbine_ids)
-        n_wd = int(360.0 / self.wd_bin_width_LT_corr)
-        n_ws = len(np.arange(0.0, 31.0, self.ws_bin_width_LT_corr))
-        out = WakeLossesResult(
-            np.empty(n_sims), np.empty((n_sims, nt)), np.empty(n_sims),
-            np.empty((n_sims, nt)), np.empty((n_sims, n_wd)),
-            np.empty((n_sims, n_wd)), np.empty((n_sims, n_ws)),
-            np.empty((n_sims, n_ws)), self.turbine_ids,
-        )
-        # one spec per sim — drawn in a fixed order BEFORE batching so
-        # results are independent of the chunking
-        specs = []
-        for n in range(n_sims):
-            specs.append({
-                "sim": n,
+        inputs = pd.DataFrame([
+            {
                 "freestream_sector_width": draw(self.freestream_sector_width),
                 "derating_filter_wind_speed_start": draw(self.derating_filter_wind_speed_start),
                 "max_power_filter": draw(self.max_power_filter),
                 "wind_bin_mad_thresh": draw(self.wind_bin_mad_thresh),
-                "num_years_LT": int(draw(self.num_years_LT)),
+                "num_years_LT": int(draw(self.num_years_LT, integer=True)),
                 "reanalysis_product": (
                     str(rng.choice(self.reanalysis_products)) if self.UQ
                     else self.reanalysis_products[n]
                 ),
-                "bseed": int(rng.integers(2**31)) if self.UQ else None,
-            })
-        wd_index = np.arange(0.0, 360.0, self.wd_bin_width_LT_corr)
-        # chunk the sims to bound the rows × sims fan-out per pass;
-        # every pass computes all of its sims' results in ~7 jobs
-        # (vs ~10 jobs PER SIM in the per-sim loop this replaces).
-        # The configured sim_batch is a CAP: at large row counts the
-        # chunk shrinks so the fan-out fits the live heap
-        # (session.auto_sim_batch — the r8 ×16 probe OOM'd the fixed
-        # default here; results are bit-identical at any batch size)
-        from openoa_spark.session import auto_sim_batch
-
-        batch = auto_sim_batch(
-            self._base.sparkSession, self._base.count(), self.sim_batch
-        )
-        for lo in range(0, n_sims, batch):
-            chunk = specs[lo:lo + batch]
-            plant_per_time, per_turb = self._sim_tables(chunk)
-            plant_per_time = plant_per_time.cache()
-            per_turb = per_turb.cache()
-
-            sums = {
-                r["sim"]: r
-                for r in plant_per_time.groupBy("sim").agg(
-                    F.sum(F.col("actual_plant_power") * F.col("w")).alias("a"),
-                    F.sum(F.col("potential_plant_power") * F.col("w")).alias("p"),
-                ).collect()
+                # -1: no bootstrap, every timestamp weighs 1
+                "bootstrap_seed": int(rng.integers(2**31)) if self.UQ else -1,
             }
-            tsums = (
-                per_turb.groupBy("sim", "asset_id")
-                .agg(F.sum(F.col("WTUR_W") * F.col("w")).alias("a"),
-                     F.sum(F.col("potential_turbine_power") * F.col("w")).alias("p"))
-                .toPandas().set_index(["sim", "asset_id"])
-            )
-            wd_sums = (
-                plant_per_time.groupBy("sim", "wd_lt_bin")
-                .agg(F.sum(F.col("actual_plant_power") * F.col("w")).alias("a"),
-                     F.sum(F.col("potential_plant_power") * F.col("w")).alias("p"))
-                .toPandas()
-            )
-            lt_out = self._lt_correction(plant_per_time, per_turb, chunk)
+            for n in range(n_sims)
+        ])
+        pairs = self.plant.asset_direction_pairs.toPandas()
+        pairs = pairs[pairs["asset_a"].isin(self.turbine_ids)
+                      & pairs["asset_b"].isin(self.turbine_ids)]
+        rows = [self._freestream_rows(pairs, w) for w in inputs["freestream_sector_width"]]
+        inputs["freestream_ids"] = [r[0] for r in rows]
+        inputs["freestream_mult"] = [r[1] for r in rows]
+        return inputs
 
-            for s in chunk:
-                n = s["sim"]
-                out.wake_losses_por[n] = 1.0 - sums[n]["a"] / sums[n]["p"]
-                out.turbine_wake_losses_por[n] = [
-                    1.0 - tsums.loc[(n, t), "a"] / tsums.loc[(n, t), "p"]
-                    for t in self.turbine_ids
-                ]
-                wds = (
-                    wd_sums[wd_sums["sim"] == n]
-                    .set_index("wd_lt_bin").sort_index().reindex(wd_index)
-                )
-                out.wake_losses_por_wd[n] = (wds["a"] / wds["p"]).to_numpy()
-                (lt, lt_turb, lt_wd, por_ws, lt_ws) = lt_out[n]
-                out.wake_losses_lt[n] = lt
-                out.turbine_wake_losses_lt[n] = lt_turb
-                out.wake_losses_lt_wd[n] = lt_wd
-                out.wake_losses_por_ws[n] = por_ws
-                out.wake_losses_lt_ws[n] = lt_ws
-            plant_per_time.unpersist()
-            per_turb.unpersist()
+    # ------------------------------------------------------------ stages
+
+    def _flagged(self, inputs: pd.DataFrame, rated: dict[str, float]) -> DataFrame:
+        """The base rows, keyed for the time-slice stage, each with its
+        per-sim derate flags packed into bits (per-turbine stage)."""
+        df = self._base.select(
+            F.unix_micros("time").alias("_t"),
+            F.unix_micros(F.date_trunc("day", "time")).alias("_day"),
+            "asset_id", "WTUR_W", "WMET_HorWdSpd",
+        )
+        if not self.correct_for_derating:
+            return df
+        dws, mpf, mad = (
+            inputs[c].to_numpy(float) for c in
+            ("derating_filter_wind_speed_start", "max_power_filter", "wind_bin_mad_thresh")
+        )
+
+        def flag(pdf: pd.DataFrame) -> pd.DataFrame:
+            flags = _derate_flags(pdf, rated[pdf["asset_id"].iat[0]], dws, mpf, mad)
+            bits = np.ascontiguousarray(np.packbits(flags, axis=0).T)
+            return pdf.assign(_derate=[r.tobytes() for r in bits])
+
+        return df.groupBy("asset_id").applyInPandas(
+            flag, T.StructType([*df.schema, T.StructField("_derate", T.BinaryType())])
+        )
+
+    def _weighted_ref(self, inputs: pd.DataFrame) -> DataFrame:
+        """The per-time reference table keyed for the time-slice stage,
+        with its wd bins and every sim's bootstrap weight: an array of
+        ``poisson1_weight(bootstrap_seed, time)``, 1 without a seed."""
+        seeds = F.array(*[F.lit(int(s)) for s in inputs["bootstrap_seed"]])
+        weight = F.transform(
+            seeds.cast("array<bigint>"),
+            lambda s: F.when(s < 0, F.lit(1)).otherwise(poisson1_weight(s, "time")),
+        )
+
+        def wd_bin(width):
+            return (F.round(F.col("wind_direction_ref") / width) * width) % 360.0
+
+        return self._ref.select(
+            F.unix_micros("time").alias("_t"),
+            F.unix_micros(F.date_trunc("day", "time")).alias("_day"),
+            F.unix_micros(F.date_trunc("hour", "time")).alias("_hour"),
+            "wind_direction_ref",
+            wd_bin(self.wd_bin_width).alias("_wd_bin"),
+            wd_bin(self.wd_bin_width_LT_corr).alias("_wd_lt"),
+            *[f"ws_rean_{p}" for p in self.reanalysis_products],
+            weight.alias("_w"),
+        )
+
+    def _slice_sums(self, flagged: DataFrame, ref: DataFrame, inputs: pd.DataFrame,
+                    slope: np.ndarray | None = None,
+                    icpt: np.ndarray | None = None) -> pd.DataFrame:
+        """Run the time-slice stage over every day and sum its partials
+        in Spark: one row per (kind, sim, turb, k1, k2)."""
+        rean_cols = [f"ws_rean_{p}" for p in self.reanalysis_products]
+        n_vals = max(3, len(rean_cols) + 1)
+        params = {
+            "n_sim": len(inputs), "n_turb": len(self.turbine_ids),
+            "turb_index": {t: i for i, t in enumerate(self.turbine_ids)},
+            "derate": self.correct_for_derating,
+            "wd_bins": np.arange(0.0, 360.0, self.wd_bin_width),
+            "fs_ids": np.stack(inputs["freestream_ids"]),
+            "fs_mult": np.stack(inputs["freestream_mult"]),
+            "power_method": self.freestream_power_method,
+            "ws_method": self.freestream_wind_speed_method,
+            "rean_cols": rean_cols, "min_ws": self.min_ws_bin_lin_reg,
+            "slope": slope, "icpt": icpt, "n_vals": n_vals,
+            "wsb": self.ws_bin_width_LT_corr, "wdb": self.wd_bin_width_LT_corr,
+        }
+        vals = [f"v{i}" for i in range(n_vals)]
+        schema = ("kind int, sim int, turb int, k1 double, k2 double, "
+                  + ", ".join(f"{v} double" for v in vals))
+        return (
+            flagged.groupBy("_day").cogroup(ref.groupBy("_day"))
+            .applyInPandas(lambda s, r: _slice_partials(s, r, params), schema)
+            .groupBy("kind", "sim", "turb", "k1", "k2")
+            .agg(*[F.sum(v).alias(v) for v in vals])
+            .toPandas()
+        )
+
+    def _lt_frequencies(self, inputs: pd.DataFrame) -> dict[tuple, pd.DataFrame]:
+        """LT (wd, ws) reanalysis frequencies per DISTINCT (product,
+        num_years) among the sims (wake_losses.py:1151-1175): one counts
+        query per product, a column per window length."""
+        wsb, wdb = self.ws_bin_width_LT_corr, self.wd_bin_width_LT_corr
+        out = {}
+        for product, years in inputs.groupby("reanalysis_product")["num_years_LT"]:
+            years = sorted(set(int(y) for y in years))
+            rean = self.plant.reanalysis[product]
+            end_lt = pd.Timestamp(rean.agg(F.max("time")).first()[0]).floor("h")
+            counts = (
+                rean.where(F.col("time") <= F.lit(end_lt.to_pydatetime()))
+                .withColumn("ws_bin", F.round(F.col("WMETR_HorWdSpd") / wsb) * wsb)
+                .withColumn("wd_bin",
+                            (F.round(F.col("WMETR_HorWdDir") / wdb) * wdb) % 360.0)
+                .groupBy("wd_bin", "ws_bin").agg(*[
+                    F.count_if(F.col("time") > F.lit(
+                        (end_lt - pd.offsets.DateOffset(years=y)).to_pydatetime()
+                    )).alias(str(y))
+                    for y in years
+                ])
+                .toPandas().set_index(["wd_bin", "ws_bin"]).sort_index()
+            )
+            for y in years:
+                fr = counts.loc[counts[str(y)] > 0, [str(y)]].rename(columns={str(y): "cnt"})
+                fr["freq"] = fr["cnt"] / fr["cnt"].sum()
+                out[(product, y)] = fr
         return out
+
+    # ------------------------------------------------------------ run
+
+    def _simulate(self, inputs: pd.DataFrame) -> WakeLossesResult:
+        """Every sim of ``inputs`` (``_draw``'s rows) through the two
+        grouped stages, finished on the driver."""
+        if self._base is None:
+            self.prepare()
+        ship_package(self.plant.spark)
+        n_sims, nt = len(inputs), len(self.turbine_ids)
+        n_rean = len(self.reanalysis_products)
+        rated = {
+            r["asset_id"]: float(r["rated_power"])
+            for r in self.plant.asset.where(F.col("asset_id").isin(self.turbine_ids))
+            .select("asset_id", "rated_power").collect()
+            if r["rated_power"] is not None
+        }
+        flagged = self._flagged(inputs, rated).cache()
+        ref = self._weighted_ref(inputs).cache()
+        try:
+            sums = self._slice_sums(flagged, ref, inputs)
+            # SCADA freestream ws → reanalysis ws linear map from integer-
+            # bin means of the hourly table (wake_losses.py:1127-1149)
+            ws_int = sums[(sums["kind"] == _WS_INT)
+                          & (sums[f"v{n_rean}"] >= self.bin_count_thresh_lin_reg)]
+            by_sim = dict(tuple(ws_int.groupby("sim")))
+            slope, icpt = np.ones(n_sims), np.zeros(n_sims)
+            for n, product in enumerate(inputs["reanalysis_product"]):
+                bs = by_sim.get(n, ws_int.iloc[:0])
+                if len(bs) >= 2:  # else degenerate data: identity map
+                    mean = bs[f"v{self.reanalysis_products.index(product)}"] / bs[f"v{n_rean}"]
+                    coef, icpt[n] = reg.ols_fit(bs["k1"].to_numpy(), mean.to_numpy())
+                    slope[n] = float(coef[0])
+            lt_sums = self._slice_sums(flagged, ref, inputs, slope, icpt)
+        finally:
+            flagged.unpersist()
+            ref.unpersist()
+        freqs = self._lt_frequencies(inputs)
+
+        kinds = dict(tuple(pd.concat([sums, lt_sums]).groupby("kind")))
+
+        def part(kind):
+            return kinds.get(kind, sums.iloc[:0])
+
+        def scatter(rows, shape, *index, n_vals=2):
+            """(v0, v1[, v2]) of ``rows`` at (sim, *index) of arrays of
+            ``shape``, NaN where no row."""
+            out = np.full((n_vals, *shape), np.nan)
+            out[(slice(None), rows["sim"].to_numpy(), *index)] = (
+                rows[[f"v{i}" for i in range(n_vals)]].to_numpy().T
+            )
+            return out
+
+        ws_index = np.arange(0.0, 31.0, self.ws_bin_width_LT_corr)
+        wd_index = np.arange(0.0, 360.0, self.wd_bin_width_LT_corr)
+        with np.errstate(invalid="ignore", divide="ignore"):
+            # POR sums (wake_losses.py:650-690)
+            por = scatter(part(_POR), (n_sims,))
+            turb = scatter(part(_TURB), (n_sims, nt), part(_TURB)["turb"].to_numpy())
+            wd = part(_WD)
+            wd = wd[wd["k1"].isin(wd_index)]
+            wd = scatter(wd, (n_sims, len(wd_index)),
+                         np.searchsorted(wd_index, wd["k1"].to_numpy()))
+
+            # LT (wd, ws) bins that any sim's grid or frequencies name
+            grid, tgrid = part(_GRID), part(_TGRID)
+            bins = pd.MultiIndex.from_frame(
+                pd.concat([
+                    grid[["k1", "k2"]], tgrid[["k1", "k2"]],
+                    *(fr.index.to_frame(index=False).set_axis(["k1", "k2"], axis=1)
+                      for fr in freqs.values()),
+                ]).drop_duplicates()
+            )
+            ws_of_bin = bins.get_level_values(1).to_numpy()
+            n_bins = len(bins)
+            g = scatter(grid, (n_sims, n_bins), bins.get_indexer(
+                pd.MultiIndex.from_frame(grid[["k1", "k2"]])), n_vals=3)
+            t_bin = bins.get_indexer(pd.MultiIndex.from_frame(tgrid[["k1", "k2"]]))
+            freq = np.full((n_sims, n_bins), np.nan)
+            for (product, years), fr in freqs.items():
+                sims = np.flatnonzero((inputs["reanalysis_product"] == product).to_numpy()
+                                      & (inputs["num_years_LT"] == years).to_numpy())
+                freq[np.ix_(sims, bins.get_indexer(fr.index))] = fr["freq"].to_numpy()
+
+            def by(level_index, level):
+                """(bins, len(index)) 0/1 map of each bin's wd or ws."""
+                return (bins.get_level_values(level).to_numpy()[:, None]
+                        == level_index).astype(float)
+
+            def binned_sum(x, onehot):
+                """Per index value, the sum of the non-NaN ``x`` (NaN if none)."""
+                n = (~np.isnan(x)).astype(float) @ onehot
+                return np.where(n > 0, np.nan_to_num(x) @ onehot, np.nan)
+
+            to_wd, to_ws = by(wd_index, 0), by(ws_index, 1)
+            # frequency-weighted LT losses on the joined bin grid; with
+            # no SCADA in a bin at or above the no-wake speed, actual =
+            # potential = capacity (wake_losses.py:1151-1317)
+            no_wakes = np.round(slope * self.no_wakes_ws_thresh_LT_corr + icpt)
+            fill = (np.isnan(g[0]) & (ws_of_bin >= no_wakes[:, None])
+                    & self.assume_no_wakes_high_ws_LT_corr)
+            mean = np.where(fill, self.plant.metadata.capacity * 1e3, g[:2] / g[2])
+            e = freq * mean
+            # per turbine, one sim at a time: (turbines, bins) arrays
+            rated_t = np.array([rated[t] for t in self.turbine_ids])[:, None]
+            t_rows = {n: r.index for n, r in tgrid.reset_index(drop=True).groupby("sim")}
+            t_vals = tgrid[["v0", "v1", "v2"]].to_numpy()
+            t_turb = tgrid["turb"].to_numpy()
+            turbine_lt = np.empty((n_sims, nt))
+            for n in range(n_sims):
+                rows = t_rows.get(n, [])
+                tg = np.full((3, nt, n_bins), np.nan)
+                tg[:, t_turb[rows], t_bin[rows]] = t_vals[rows].T
+                t_fill = (np.isnan(tg[0]) & (ws_of_bin >= no_wakes[n])
+                          & self.assume_no_wakes_high_ws_LT_corr)
+                t_e = freq[n] * np.where(t_fill, rated_t, tg[:2] / tg[2])
+                turbine_lt[n] = 1.0 - np.nansum(t_e[0], -1) / np.nansum(t_e[1], -1)
+
+            return WakeLossesResult(
+                wake_losses_por=1.0 - por[0] / por[1],
+                turbine_wake_losses_por=1.0 - turb[0] / turb[1],
+                wake_losses_lt=1.0 - np.nansum(e[0], -1) / np.nansum(e[1], -1),
+                turbine_wake_losses_lt=turbine_lt,
+                wake_losses_por_wd=wd[0] / wd[1],
+                wake_losses_lt_wd=binned_sum(e[0], to_wd) / binned_sum(e[1], to_wd),
+                wake_losses_por_ws=binned_sum(g[0], to_ws) / binned_sum(g[1], to_ws),
+                wake_losses_lt_ws=binned_sum(e[0], to_ws) / binned_sum(e[1], to_ws),
+                turbine_ids=self.turbine_ids, inputs=inputs,
+            )
+
+    def run(self, num_sim: int | None = None) -> WakeLossesResult:
+        n_sims = (num_sim or self.num_sim) if self.UQ else len(self.reanalysis_products)
+        return self._simulate(self._draw(n_sims))
+

@@ -196,61 +196,6 @@ def ship_package(spark) -> None:
     sc._openoa_pkg_shipped = True
 
 
-def auto_sim_batch(
-    spark,
-    n_rows: int,
-    cap: int,
-    row_width_bytes: int = 400,
-    budget_fraction: float = 0.3,
-    heap_bytes: int | None = None,
-) -> int:
-    """Memory-adaptive Monte-Carlo chunk size for wake's sim-keyed
-    batched pipeline: how many simulations may share one rows×sims
-    exploded pass without blowing executor memory.
-
-    The round-8 ×16 scale probe OOM'd the default 8 GiB heap at the
-    FIXED default ``sim_batch=25`` — at constant memory, sims-per-
-    chunk must shrink as rows grow (SCALING.md, "Round-8 Monte-Carlo
-    run stages"). This computes that shrink instead of documenting it:
-
-        batch = clamp( heap × budget_fraction
-                       / (n_rows × row_width_bytes), 1, cap )
-
-    - ``heap`` is the live JVM's Runtime.maxMemory() — the actual
-      executor/driver heap whatever launcher set it, no conf parsing.
-    - ``budget_fraction`` reserves the rest for shuffle buffers, the
-      base-table cache, and concurrent task overheads (0.3 ≈ half of
-      spark.memory.fraction's 0.6 execution/storage share).
-    - ``row_width_bytes`` is the HEAP footprint one exploded sim row
-      drags through the chunk pass — not just its UnsafeRow (~160 B
-      for 10-20 numeric columns) but its share of the cached derived
-      tables (wake caches BOTH plant-grain and turbine-grain frames
-      per chunk) and the concurrent agg/sort buffers. Calibrated
-      empirically on the wake ×16 probe (640k-row base, 8 GiB heap):
-      batch 25 (the fixed r8 default) OOM'd; batch 12 completed with
-      a measured 7.31 GiB peak — an effective ~310 B/row at the 0.3
-      budget. The 400 B default sizes the same case to batch 9,
-      keeping ~15% heap headroom for host jitter.
-    - ``cap`` is the user's configured sim_batch: the auto value only
-      ever SHRINKS the chunk (keeping small-data behavior and all
-      pinned batched==per-sim identities unchanged), and the result
-      is bit-identical at any batch size by construction.
-
-    Monotonic: non-increasing in n_rows, non-decreasing in heap.
-    """
-    heap = heap_bytes
-    if heap is None:
-        try:
-            heap = int(
-                spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
-            )
-        except Exception:  # noqa: BLE001 — no JVM handle (mocks): 8 GiB
-            heap = 8 << 30
-    budget = heap * budget_fraction
-    per_sim = max(int(n_rows), 1) * row_width_bytes
-    return max(1, min(int(cap), int(budget // per_sim)))
-
-
 def spread_small_input(df, min_partitions: int | None = None):
     """Decouple compute parallelism from file layout for CPU-heavy
     expression pipelines (minhash signatures, entropy folds, shingle

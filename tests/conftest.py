@@ -57,7 +57,6 @@ SLOW_TESTS = {
     "test_datapipe.py::test_stream_cluster_assign_matches_serial",
     "test_datapipe.py::test_stream_embedding_dedup_matches_serial",
     "test_empty_inputs.py::test_every_query_survives_empty_tables",
-    "test_end_to_end_plant.py::test_end_to_end_six_pipelines",
     "test_ml_qa.py::test_hyper_optimize_linear_signal",
     "test_ml_qa.py::test_hyper_optimize_tree",
     "test_ml_qa.py::test_time_series_splits_never_leak_future",
@@ -78,8 +77,6 @@ SLOW_TESTS = {
     "test_streaming.py::test_stream_cdc_apply_maintains_table",
     "test_streaming.py::test_stream_drift_monitor_matches_batch_psi",
     "test_streaming.py::test_stream_near_dedup_across_batches",
-    "test_wake_losses.py::test_batched_sims_equal_per_sim_chunks",
-    "test_wake_losses.py::test_uq_mode",
     "test_yaw_eya.py::test_batched_equals_per_sim",
     "test_yaw_eya.py::test_recovers_injected_offsets",
     "test_yaw_eya.py::test_uq_mode",

@@ -79,22 +79,45 @@ def test_uq_mode(plant):
     assert res.wake_losses_por.std() < 0.05
 
 
-def test_batched_sims_equal_per_sim_chunks(plant):
-    """Round-7 pin: the sim-keyed batched MC produces the same results
-    whatever the chunking — one 3-sim pass vs three 1-sim passes. The
-    MC draws happen before batching and the bootstrap is a
-    deterministic per-(time, sim) Poisson weight, so only float
-    summation order can differ between layouts (plain double sums);
-    pinned at 1e-9 relative."""
-    a = WakeLosses(plant, UQ=True, num_sim=3, num_years_LT=(1, 2),
-                   sim_batch=25).run()
-    b = WakeLosses(plant, UQ=True, num_sim=3, num_years_LT=(1, 2),
-                   sim_batch=1).run()
-    for attr in ("wake_losses_por", "turbine_wake_losses_por",
-                 "wake_losses_lt", "turbine_wake_losses_lt",
-                 "wake_losses_por_wd", "wake_losses_lt_wd",
-                 "wake_losses_por_ws", "wake_losses_lt_ws"):
-        np.testing.assert_allclose(
-            getattr(a, attr), getattr(b, attr), rtol=1e-9, equal_nan=True,
-            err_msg=attr,
-        )
+ATTRS = ("wake_losses_por", "turbine_wake_losses_por", "wake_losses_lt",
+         "turbine_wake_losses_lt", "wake_losses_por_wd", "wake_losses_lt_wd",
+         "wake_losses_por_ws", "wake_losses_lt_ws")
+
+
+def test_each_sim_equals_its_one_sim_run(plant):
+    """Every UQ sim equals a one-sim run of the same stages with that
+    sim's drawn inputs (its scalar draws, bootstrap seed and resampled
+    freestream sets): the sim axis of the grouped stages cannot leak
+    one sim's numbers into another's."""
+    res = WakeLosses(plant, UQ=True, num_sim=3, num_years_LT=(1, 2), seed=7).run()
+    one = WakeLosses(plant, UQ=True, num_years_LT=(1, 2), seed=7)
+    for i in range(3):
+        r = one._simulate(res.inputs.iloc[[i]])
+        for attr in ATTRS:
+            np.testing.assert_allclose(
+                getattr(r, attr)[0], getattr(res, attr)[i], rtol=1e-12,
+                equal_nan=True, err_msg=f"sim {i} {attr}",
+            )
+
+
+def test_num_years_lt_draws_both_endpoints(plant):
+    """UQ draws num_years_LT from the inclusive integer range, as
+    MonteCarloAEP draws its windiness years."""
+    inputs = WakeLosses(plant, UQ=True, num_years_LT=(1, 2))._draw(40)
+    assert set(inputs["num_years_LT"]) == {1, 2}
+
+
+def test_jobs_do_not_grow_with_sims(spark, plant):
+    """The sims are an array axis, not Spark work per sim: 6 sims start
+    at most 2 more jobs than 2 sims (the slack covers AQE's
+    asynchronous broadcast jobs)."""
+    sc = spark.sparkContext
+    jobs = {}
+    for n in (2, 6):
+        sc.setJobGroup(f"wake_sims_{n}", f"wake_sims_{n}")
+        try:
+            WakeLosses(plant, UQ=True, num_sim=n, num_years_LT=(1, 2)).run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(f"wake_sims_{n}"))
+    assert jobs[6] <= jobs[2] + 2, jobs

@@ -109,10 +109,9 @@ TURBINES = ["T0", "T1", "T2", "T3"]
 # the daily AEP check wants every calendar day in the period of
 # record; testdata events span 30 days, stretched 13× that is 390
 POR_STRETCH = 13
-# sims per Monte-Carlo run entry: wake costs seconds per sim on 4
-# cores (at 100 sims its entry spent 25 min on sf0.01 alone); TIE's
-# rows do not fan out by sim, so only its day-grain chain grows with
-# the count
+# sims per Monte-Carlo run entry: no run copies sims onto rows (wake
+# and yaw carry them as an array axis or in cells, TIE's day-grain
+# chain keys by sim), so 10 shows the same plan shape as 100
 RUN_SIMS = 10
 
 
