@@ -41,7 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from openoa_spark.functions import met, regression as reg
-from openoa_spark.functions.stats import poisson1_weight
+from openoa_spark.functions.stats import group_median, poisson1_weight, round_half_up
 from openoa_spark.plant import PlantData
 from openoa_spark.session import ship_package
 
@@ -71,27 +71,6 @@ class WakeLossesResult:
         return float(np.nanmean(self.wake_losses_lt))
 
 
-def _round_half_up(x: np.ndarray) -> np.ndarray:
-    """Spark's ``round`` of a double to an integer: halves away from 0."""
-    a = np.abs(x)
-    f = np.floor(a)
-    return np.copysign(f + (a - f >= 0.5), x) + 0.0
-
-
-def _group_median(g: np.ndarray, v: np.ndarray) -> np.ndarray:
-    """Per row, the median of ``v`` over the rows sharing its small-int
-    ``g`` (even counts: mean of the two middle values, as ``F.median``)."""
-    order = np.argsort(v)
-    order = order[np.argsort(g[order], kind="stable")]  # radix sort
-    gs, vs = g[order], v[order]
-    starts = np.flatnonzero(np.r_[True, gs[1:] != gs[:-1]])
-    counts = np.diff(np.r_[starts, len(gs)])
-    med = (vs[starts + (counts - 1) // 2] + vs[starts + counts // 2]) / 2.0
-    out = np.empty(len(v))
-    out[order] = np.repeat(med, counts)
-    return out
-
-
 def _derate_flags(pdf: pd.DataFrame, cap: float, dws: np.ndarray,
                   mpf: np.ndarray, mad: np.ndarray) -> np.ndarray:
     """(sims, rows) derate flags of one turbine's record
@@ -110,8 +89,8 @@ def _derate_flags(pdf: pd.DataFrame, cap: float, dws: np.ndarray,
     in_bin = (p_norm >= 0.0) & (p_norm < 25.0)
     bins = np.where(in_bin, np.floor(p_norm), -1).astype(np.int16)
     for s in range(len(dws)):
-        center = _group_median(bins[s], ws)
-        dev = _group_median(bins[s], np.abs(ws - center))
+        center = group_median(bins[s], ws)
+        dev = group_median(bins[s], np.abs(ws - center))
         flags[s] |= in_bin[s] & (ws - center > mad[s] * dev)
     return flags
 
@@ -210,7 +189,7 @@ def _slice_partials(scada: pd.DataFrame, ref: pd.DataFrame, p: dict) -> pd.DataF
         fs_ws_h = hourly(fs_ws)
         sims = np.arange(n_sim)[:, None]
         if p.get("slope") is None:
-            ws_int = _round_half_up(fs_ws_h)
+            ws_int = round_half_up(fs_ws_h)
             parts = [
                 _group_sums(_POR, {"sim": np.arange(n_sim)}, np.ones(n_sim, bool),
                             [(actual * w).sum(1), (potential * w).sum(1)]),
@@ -229,9 +208,9 @@ def _slice_partials(scada: pd.DataFrame, ref: pd.DataFrame, p: dict) -> pd.DataF
             wsb, wdb = p["wsb"], p["wdb"]
 
             def ws_bin(x):
-                return _round_half_up((slope * x + icpt) / wsb) * wsb
+                return round_half_up((slope * x + icpt) / wsb) * wsb
 
-            wd_h = np.fmod(_round_half_up(hourly(ref["wind_direction_ref"].to_numpy()) / wdb)
+            wd_h = np.fmod(round_half_up(hourly(ref["wind_direction_ref"].to_numpy()) / wdb)
                            * wdb, 360.0)
             # each turbine's hour takes its bins from the hour's first
             # kept 10-min stamp

@@ -6,33 +6,25 @@ Parity target (behavior only): openoa/analysis/yaw_misalignment.py:
 74-743.
 
 Spark-first inversion: the reference loops turbine × ws-bin in pandas
-AND Monte-Carlo sims in an outer python loop; here every simulation
-runs through TWO Spark aggregations over one sim-keyed plan:
+AND Monte-Carlo sims in an outer python loop. Here the sims are an
+array axis inside ONE grouped stage, never extra Spark rows: each
+turbine's rows go to one ``applyInPandas`` call (``_turbine_cells``)
+that, in NumPy over the turbine's time-sorted rows, computes each
+distinct max_power_filter's power-bin median and MAD of wind speed,
+every sim's MAD filter and Poisson(1) bootstrap weight (Spark hashes
+each row's keys once; the sim's seed finishes the hash in NumPy), the
+wind-speed and vane bins, and every sim's cell sums with
+``np.bincount``. A sim's cells depend only on its own draws, so the
+batched stage equals a per-sim loop bit for bit.
 
-1. Power-bin filter statistics. Per (max_power_filter draw,
-   turbine, power bin), ONE ``sort_array(collect_list(ws))`` yields
-   both the median wind speed and its MAD (median of |ws − median|,
-   read off the same group after a second in-memory sort), with the
-   even-n mean of the two middle values — bit-identical to
-   ``F.median``. Only the distinct max_power_filter draws fan the rows
-   out here (the MC draws come from small integer grids).
-2. Cells. The statistics are broadcast-joined back, a literal
-   max_power_filter → [(sim, mad, bseed)] map fans each row out to the
-   sims of its draw (map-side, no job of its own), each row is flagged
-   against its sim's MAD threshold as a COLUMN, and one
-   groupBy(sim, turbine, ws_bin, vane_bin) produces every cell of
-   every sim. The bootstrap is a deterministic per-(row, sim)
-   Poisson(1) weight.
-
-Only the bin-grain table (sims × turbines × ws_bins × vane bins) is
+Only the cell-grain table (sims × turbines × ws_bins × vane bins) is
 collected for the tiny driver-side curve fits (pure-NumPy
 Levenberg-Marquardt replaces scipy.optimize.curve_fit).
 
-Memory: a statistics group holds one turbine's wind speeds in one power
-bin, so its buffer is bounded by one asset's record (thousands of rows
-per year of 10-min SCADA), not by the size of the plant or the number of
-sims. ``filters.bin_filter``'s bounded-memory bracket median stays the
-tool for groups that can grow with the plant (TIE, wake losses)."""
+Memory: one turbine's record × sims in one Python worker (52k rows a
+year of 10-min SCADA; the sim axis covers only the rows inside a
+wind-speed bin). Cost on the one-year test plant is in SCALING.md
+("Yaw")."""
 
 from __future__ import annotations
 
@@ -41,12 +33,17 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from openoa_spark.functions.regression import cos_curve_fit
-from openoa_spark.functions.stats import poisson1_weight
+from openoa_spark.functions.stats import group_median, poisson1_weights, round_half_up
 from openoa_spark.plant import PlantData
-from openoa_spark.session import spread_small_input
+from openoa_spark.session import ship_package
+
+_CELLS_SCHEMA = (
+    "sim int, asset_id string, ws_bin double, vane_bin double, "
+    "pow_ratio double, n long, vane_sum double"
+)
 
 
 @dataclass
@@ -67,13 +64,85 @@ class YawMisalignmentResult:
         return np.std(self.yaw_misalignment, axis=0)
 
 
-def _sorted_median(arr: Column) -> Column:
-    """Median of a non-empty ascending array: the even-n mean of the two
-    middle values, the formula of ``F.median``."""
-    n = F.size(arr)
-    lo = F.element_at(arr, F.floor((n + 1) / 2).cast("int"))
-    hi = F.element_at(arr, (F.floor(n / 2) + 1).cast("int"))
-    return (lo + hi) / F.lit(2.0)
+def _power_bins(pw: np.ndarray, cap: float, p: dict) -> np.ndarray:
+    """(distinct max_power_filters, rows) power bin of each row: floor of
+    power normalized to ``n_pbins`` bins between min_power_filter and
+    the filter's share of rated power ``cap``; -1 outside [0, n_pbins)."""
+    p_norm = (pw - p["min_pf"] * cap) / (p["bwf"][:, None] * cap)
+    in_bin = (p_norm >= 0.0) & (p_norm < p["n_pbins"])
+    return np.where(in_bin, np.floor(p_norm), -1).astype(np.int32)
+
+
+def _mad_keep(ws: np.ndarray, pw: np.ndarray, cap: float, p: dict) -> np.ndarray:
+    """(sims, rows) keep mask of the power-bin MAD filter
+    (yaw_misalignment.py:506-528) over one turbine's rows. Once per
+    distinct max_power_filter, each power bin's median and MAD (median
+    of |ws − median|) of wind speed, even counts taking the mean of the
+    two middle values, as ``F.median``; each sim then drops a row when
+    |ws − median| > mad · MAD in its power bin. Rows with no power bin
+    stay."""
+    bins = _power_bins(pw, cap, p)
+    dev, mad = np.empty(bins.shape), np.empty(bins.shape)
+    for m in range(len(bins)):
+        dev[m] = np.abs(ws - group_median(bins[m], ws))
+        mad[m] = group_median(bins[m], dev[m])
+    mi = p["mpf_ix"]
+    return ~((bins[mi] >= 0) & (dev[mi] > p["mad"][:, None] * mad[mi]))
+
+
+def _turbine_cells(pdf: pd.DataFrame, p: dict) -> pd.DataFrame:
+    """One turbine's (sim, ws_bin, vane_bin) cell sums for every sim of
+    ``p`` (``StaticYawMisalignment._params``), in NumPy over the
+    turbine's time-sorted rows.
+
+    - Each sim's power-bin MAD filter (``_mad_keep``).
+    - The wind-speed bin is the first of ``ws_bins`` whose
+      [b − half, b + half) holds the row; the vane bin rounds
+      vane / width half away from zero, as Spark's ``round``.
+    - Each sim weights its rows by its Poisson(1) bootstrap count
+      (1 without a seed) and ``np.bincount`` sums the cells in row
+      order.
+    Memory: the turbine's rows × sims."""
+    # time order (ties by value) fixes the fold order of the cell sums
+    pdf = pdf.iloc[np.lexsort([
+        pdf[c].to_numpy() for c in ("WMET_HorWdDirRel", "WMET_HorWdSpd", "WTUR_W", "_t")
+    ])]
+    ws = pdf["WMET_HorWdSpd"].to_numpy(float)
+    pw = pdf["WTUR_W"].to_numpy(float)
+    keep = _mad_keep(ws, pw, float(pdf["rated_power"].iat[0]), p)
+
+    ws_ix = np.full(len(ws), -1)
+    for k, b in enumerate(p["ws_bins"]):
+        ws_ix[(ws_ix < 0) & (ws >= b - p["half"]) & (ws < b + p["half"])] = k
+    sel = np.flatnonzero(ws_ix >= 0)
+    w = np.ones((len(keep), len(sel)), np.int64)
+    boot = p["bseed"] >= 0
+    if boot.any():
+        w[boot] = poisson1_weights(pdf["_h"].to_numpy()[sel], p["bseed"][boot])
+    w *= keep[:, sel]
+
+    vane = pdf["WMET_HorWdDirRel"].to_numpy(float)[sel]
+    ratio = pw[sel] / (ws[sel] ** 3.0 if p["pow_coeff"] else 1.0)
+    vane_bins, v_ix = np.unique(round_half_up(vane / p["vane_w"]) * p["vane_w"],
+                                return_inverse=True)
+    n_cells = len(p["ws_bins"]) * len(vane_bins)
+    code = (np.arange(len(w))[:, None] * n_cells + ws_ix[sel] * len(vane_bins) + v_ix).ravel()
+
+    def cell_sum(x):
+        return np.bincount(code, weights=(w * x).ravel(), minlength=len(w) * n_cells)
+
+    n, pow_sum, vane_sum = cell_sum(1), cell_sum(ratio), cell_sum(vane)
+    cell = np.flatnonzero(n > 0)
+    rest = cell % n_cells
+    return pd.DataFrame({
+        "sim": p["sim"][cell // n_cells],
+        "asset_id": pdf["asset_id"].iat[0],
+        "ws_bin": p["ws_bins"][rest // len(vane_bins)],
+        "vane_bin": vane_bins[rest % len(vane_bins)],
+        "pow_ratio": pow_sum[cell] / n[cell],
+        "n": n[cell].astype(np.int64),
+        "vane_sum": vane_sum[cell],
+    })
 
 
 @dataclass
@@ -111,176 +180,75 @@ class StaticYawMisalignment:
 
     # ------------------------------------------------------------ stages
 
-    def _base(self, spread: bool) -> DataFrame:
-        """Rows every simulation starts from: the pitch-angle limit and
-        complete readings (yaw_misalignment.py:495-505), each turbine's
-        rated power, and the wind-speed bin (NULL outside every bin —
-        such rows still count toward the power-bin statistics)."""
+    def _rows(self) -> DataFrame:
+        """The rows every sim starts from: the pitch-limited complete
+        readings (yaw_misalignment.py:495-505) with each turbine's rated
+        power, the time as ``_t`` and Spark's ``xxhash64(time,
+        asset_id)`` as ``_h``."""
         asset = self.plant.asset.where(F.col("type") == "turbine").select(
             "asset_id", "rated_power"
         )
-        df = (
+        return (
             self.plant.scada
             .where(F.col("asset_id").isin(self.turbine_ids))
             .where(F.col("WROT_BlPthAngVal") <= self.pitch_thresh)
             .dropna(subset=["WMET_HorWdSpd", "WTUR_W", "WMET_HorWdDirRel"])
-            .select("time", "asset_id", "WTUR_W", "WMET_HorWdSpd", "WMET_HorWdDirRel")
-        )
-        if spread:
-            # a small SCADA file scans as fewer partitions than cores,
-            # and every sim's fan-out would run on them
-            df = spread_small_input(df)
-        ws_bins_arr = F.array(*[F.lit(float(b)) for b in self.ws_bins])
-        half = self.ws_bin_width / 2.0
-        return df.join(F.broadcast(asset), "asset_id").withColumn(
-            "ws_bin",
-            # F.get, not [0]: a wind speed outside EVERY bin filters to
-            # an empty array, and ANSI mode turns [0] on an empty array
-            # into a runtime error; get() yields NULL
-            F.get(
-                F.filter(
-                    ws_bins_arr,
-                    lambda b: (F.col("WMET_HorWdSpd") >= b - half)
-                    & (F.col("WMET_HorWdSpd") < b + half),
-                ),
-                0,
-            ),
-        )
-
-    def _power_binned(self, base: DataFrame, mpfs: list[float]) -> DataFrame:
-        """``base`` once per distinct max_power_filter draw ``_mpf``,
-        with the row's power bin ``_pbin``: floor of power normalized to
-        ``num_power_bins`` bins between min_power_filter and _mpf of
-        rated power, NULL outside [0, num_power_bins)."""
-        draws = F.array(*[
-            F.struct(
-                F.lit(float(m)).alias("_mpf"),
-                # power-bin width as a fraction of rated power
-                F.lit((float(m) - self.min_power_filter) / self.num_power_bins)
-                .alias("_bwf"),
-            )
-            for m in mpfs
-        ])
-        cap = F.col("rated_power")
-        p_norm = (F.col("WTUR_W") - F.lit(self.min_power_filter) * cap) / (
-            F.col("_d._bwf") * cap
-        )
-        in_domain = (p_norm >= F.lit(0.0)) & (p_norm < F.lit(float(self.num_power_bins)))
-        return (
-            base.withColumn("_d", F.explode(draws))
-            .withColumn("_mpf", F.col("_d._mpf"))
-            .withColumn("_pbin", F.when(in_domain, F.floor(p_norm)))
-            .drop("_d")
-        )
-
-    @staticmethod
-    def _power_bin_stats(binned: DataFrame) -> DataFrame:
-        """(_mpf, asset_id, _pbin) → median ``_center`` and MAD ``_dev``
-        of wind speed, both from ONE sorted collect per group."""
-        ws = F.sort_array(F.collect_list("WMET_HorWdSpd"))
-        keys = ["_mpf", "asset_id", "_pbin"]
-        return (
-            binned.where(F.col("_pbin").isNotNull())
-            .groupBy(*keys)
-            .agg(ws.alias("_ws"))
-            .withColumn("_center", _sorted_median(F.col("_ws")))
+            .join(F.broadcast(asset), "asset_id")
             .select(
-                *keys,
-                "_center",
-                _sorted_median(
-                    F.sort_array(
-                        F.transform("_ws", lambda x: F.abs(x - F.col("_center")))
-                    )
-                ).alias("_dev"),
+                "asset_id",
+                F.unix_micros("time").alias("_t"),
+                F.xxhash64("time", "asset_id").alias("_h"),
+                "WTUR_W", "WMET_HorWdSpd", "WMET_HorWdDirRel", "rated_power",
             )
         )
 
-    def _kept(self, specs: list[dict]) -> DataFrame:
-        """Every simulation's rows that survive the per-turbine MAD
-        power-bin filter (yaw_misalignment.py:506-528), keyed by
-        ``sim`` and carrying the sim's bootstrap seed ``bseed`` (-1 for
-        none). A row is dropped when |ws − median| > mad · MAD in its
-        (draw, turbine, power bin); rows outside the power-bin domain
-        are kept.
+    def _params(self, specs: list[dict]) -> dict:
+        """The sims of ``specs`` as arrays, plus the bin settings, for
+        ``_turbine_cells``. ``specs`` holds one dict per sim: ``sim``,
+        ``mpf`` (max_power_filter), ``mad`` (power_bin_mad_thresh) and
+        ``bseed`` (an int32 bootstrap seed, None for no bootstrap)."""
+        mpfs = sorted({float(s["mpf"]) for s in specs})
+        return {
+            "sim": np.array([s["sim"] for s in specs], np.int32),
+            "mpf_ix": np.array([mpfs.index(float(s["mpf"])) for s in specs], np.int64),
+            "mad": np.array([float(s["mad"]) for s in specs]),
+            "bseed": np.array(
+                [-1 if s["bseed"] is None else int(s["bseed"]) for s in specs], np.int64
+            ),
+            # power-bin width as a fraction of rated power, per distinct
+            # max_power_filter
+            "bwf": (np.array(mpfs) - self.min_power_filter) / self.num_power_bins,
+            "min_pf": float(self.min_power_filter),
+            "n_pbins": int(self.num_power_bins),
+            "ws_bins": np.array(self.ws_bins, float),
+            "half": self.ws_bin_width / 2.0,
+            "vane_w": float(self.vane_bin_width),
+            "pow_coeff": bool(self.use_power_coeff),
+        }
 
-        The sim table rides in the plan as a literal
-        max_power_filter → [(sim, mad, bseed)] map, exploded map-side
-        after the statistics join: a broadcast table would cost a Spark
-        job of its own."""
-        binned = self._power_binned(
-            self._base(spread=len(specs) > 1), sorted({float(s["mpf"]) for s in specs})
-        )
-        stats = self._power_bin_stats(binned)
-        by_mpf: dict[float, list[Column]] = {}
-        for s in specs:
-            by_mpf.setdefault(float(s["mpf"]), []).append(F.struct(
-                F.lit(int(s["sim"])).alias("sim"),
-                F.lit(float(s["mad"])).alias("_mad"),
-                # an int literal: xxhash64 hashes an int differently
-                # from a bigint, and the bootstrap weights hash bseed
-                F.lit(-1 if s["bseed"] is None else int(s["bseed"])).alias("bseed"),
-            ))
-        sims = F.create_map(*[
-            c for m, ss in by_mpf.items() for c in (F.lit(m), F.array(*ss))
-        ])
-        dev = F.abs(F.col("WMET_HorWdSpd") - F.col("_center"))
-        flag = F.coalesce(dev > F.col("_s._mad") * F.col("_dev"), F.lit(False))
-        return (
-            binned.join(F.broadcast(stats), ["_mpf", "asset_id", "_pbin"], "left")
-            .withColumn("_s", F.explode(sims[F.col("_mpf")]))
-            .where(~flag)
-            .withColumn("sim", F.col("_s.sim"))
-            .withColumn("bseed", F.col("_s.bseed"))
-            .drop("_s", "_mpf", "_pbin", "_center", "_dev")
-        )
+    def _cells(self, specs: list[dict]) -> pd.DataFrame:
+        """EVERY simulation's (turbine, ws_bin, vane_bin) cell table
+        (``specs`` as in ``_params``) from one grouped stage: each
+        turbine's ``_rows`` go to one ``applyInPandas`` call
+        (``_turbine_cells``), which carries the sims as an array axis.
 
-    def _binned_tables_batch(self, specs: list[dict]) -> pd.DataFrame:
-        """EVERY simulation's (turbine, ws_bin, vane_bin) cell table from
-        one sim-keyed plan: the filter statistics aggregation feeds a
-        broadcast join, and one groupBy produces all cells.
-
-        The bootstrap is a DETERMINISTIC per-(row, sim) Poisson(1)
-        weight (inverse CDF over an xxhash64-derived uniform) —
-        statistically the with-replacement resample of
-        yaw_misalignment.py:380-381, but replayable and identical
-        whatever the batching. Cell means use order-independent decimal
-        sums, so one batched job and a per-sim loop produce
-        BIT-IDENTICAL tables (pinned by
-        tests/test_yaw_eya.py::test_batched_equals_per_sim).
+        The stage finishes each row's ``_h`` into each sim's
+        ``poisson1_weight(bseed, time, asset_id)``: a deterministic
+        Poisson(1) bootstrap weight, statistically the with-replacement
+        resample of yaw_misalignment.py:380-381, but replayable. A sim's
+        cells depend only on its own spec and the turbine's time-sorted
+        rows, so one batched run and a per-sim loop give BIT-IDENTICAL
+        tables (pinned by tests/test_yaw_eya.py::test_batched_equals_per_sim).
 
         Returns the cell grain (sim, asset_id, ws_bin, vane_bin,
         pow_ratio, n, vane_sum): the (sim, turbine, ws_bin) mean vane
-        angles are recovered exactly from vane_sum/n driver-side, so a
-        second aggregation pass is unnecessary.
+        angles are recovered exactly from vane_sum/n driver-side.
         """
-        alldf = self._kept(specs).where(F.col("ws_bin").isNotNull())
-        # Poisson(1) bootstrap count (functions.stats.poisson1_weight);
-        # bseed < 0 marks a no-bootstrap sim (weight 1)
-        w = poisson1_weight("bseed", "time", "asset_id")
-        alldf = alldf.withColumn(
-            "_w", F.when(F.col("bseed") < 0, F.lit(1)).otherwise(w)
-        ).where(F.col("_w") > 0)
-        pow_ref = (
-            F.pow(F.col("WMET_HorWdSpd"), 3.0) if self.use_power_coeff else F.lit(1.0)
-        )
-        alldf = alldf.withColumn("pow_ratio", F.col("WTUR_W") / pow_ref).withColumn(
-            "vane_bin",
-            F.round(F.col("WMET_HorWdDirRel") / self.vane_bin_width) * self.vane_bin_width,
-        )
-        return (
-            alldf.groupBy("sim", "asset_id", "ws_bin", "vane_bin")
-            .agg(
-                (
-                    F.sum((F.col("_w") * F.col("pow_ratio")).cast("decimal(32,9)"))
-                    / F.sum("_w")
-                ).cast("double").alias("pow_ratio"),
-                F.sum("_w").alias("n"),
-                F.sum(
-                    (F.col("_w") * F.col("WMET_HorWdDirRel")).cast("decimal(32,9)")
-                ).cast("double").alias("vane_sum"),
-            )
-            .toPandas()
-        )
+        p = self._params(specs)
+        ship_package(self.plant.spark)
+        return self._rows().groupBy("asset_id").applyInPandas(
+            lambda pdf: _turbine_cells(pdf, p), _CELLS_SCHEMA
+        ).toPandas()
 
     # ------------------------------------------------------------ run
 
@@ -313,7 +281,7 @@ class StaticYawMisalignment:
                     self.max_power_filter) else float(np.mean(self.max_power_filter))
                 boot_seed = None
             specs.append({"sim": n, "mpf": mpf, "mad": mad, "bseed": boot_seed})
-        cells_all = self._binned_tables_batch(specs)
+        cells_all = self._cells(specs)
         # exact (sim, turbine, ws_bin) mean vane angles from the cell
         # sums, in a deterministic (sorted) fold order
         cells_all = cells_all.sort_values(

@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 
+import numpy as np
+
 from pyspark.sql import Column, functions as F
 
 # Exactness mode. True (default) = decimal-exact aggregation, the mode
@@ -811,3 +813,51 @@ def poisson1_weight(seed_col: Column | str, *key_cols: Column | str) -> Column:
     for k in reversed(range(len(POISSON1_CDF))):
         w = F.when(u < F.lit(POISSON1_CDF[k]), F.lit(k)).otherwise(w)
     return w
+
+
+# xxHash64 primes (Spark's XXH64)
+_XXH_P1, _XXH_P2, _XXH_P3, _XXH_P5 = (
+    0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9, 0x27D4EB2F165667C5,
+)
+
+
+def poisson1_weights(key_hash: np.ndarray, seeds: np.ndarray) -> np.ndarray:
+    """(seeds, rows) NumPy twin of ``poisson1_weight(seed, *keys)`` for
+    INT seeds: ``key_hash`` is each row's Spark ``xxhash64(*keys)``.
+    Spark's xxhash64 chains every column's hash into the next as its
+    seed, so the key hash is computed once per row and only each sim's
+    last round, XXH64's ``hashInt(seed, key_hash)``, runs here. Every
+    weight equals the column's (pinned in tests/test_yaw_eya.py)."""
+    u64 = np.uint64
+    h = np.asarray(key_hash, np.int64).view(u64)[None, :]
+    s = (np.asarray(seeds, np.int64) & 0xFFFFFFFF).astype(u64)[:, None]
+    x = (h + u64((_XXH_P5 + 4) & 0xFFFFFFFFFFFFFFFF)) ^ (s * u64(_XXH_P1))
+    x = ((x << u64(23)) | (x >> u64(41))) * u64(_XXH_P2) + u64(_XXH_P3)
+    x ^= x >> u64(33)
+    x *= u64(_XXH_P2)
+    x ^= x >> u64(29)
+    x *= u64(_XXH_P3)
+    x ^= x >> u64(32)
+    u = np.mod(x.view(np.int64), 1_000_000) / 1_000_000.0
+    return np.searchsorted(POISSON1_CDF, u, side="right")
+
+
+def round_half_up(x: np.ndarray) -> np.ndarray:
+    """Spark's ``round`` of a double to an integer: halves away from 0."""
+    a = np.abs(x)
+    f = np.floor(a)
+    return np.copysign(f + (a - f >= 0.5), x) + 0.0
+
+
+def group_median(g: np.ndarray, v: np.ndarray) -> np.ndarray:
+    """Per row, the median of ``v`` over the rows sharing its small-int
+    ``g`` (even counts: mean of the two middle values, as ``F.median``)."""
+    order = np.argsort(v)
+    order = order[np.argsort(g[order], kind="stable")]  # radix sort
+    gs, vs = g[order], v[order]
+    starts = np.flatnonzero(np.r_[True, gs[1:] != gs[:-1]])
+    counts = np.diff(np.r_[starts, len(gs)])
+    med = (vs[starts + (counts - 1) // 2] + vs[starts + counts // 2]) / 2.0
+    out = np.empty(len(v))
+    out[order] = np.repeat(med, counts)
+    return out

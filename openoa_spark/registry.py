@@ -1822,15 +1822,16 @@ def wake_plant_reference_conditions(spark, sf_dir):
     """,
 )
 def yaw_vane_bin_cells(spark, sf_dir):
-    """StaticYawMisalignment's binned-cells prep
-    (analysis/yaw.py _binned_tables_batch; reference
-    yaw_misalignment.py:352-420) on testdata shape: power-coefficient
-    ratio (power / ws^3) cell means per (turbine, wind-speed bin,
-    vane bin) — the exact table the cosine fits consume. Same
-    idioms as the pipeline: F.get over a filtered bin array (NULL,
-    not ANSI error, outside every bin), F.round-to-width vane
-    binning (half-away in both engines on the x.5 lattice), one hash
-    aggregate to cell grain."""
+    """StaticYawMisalignment's cell table (analysis/yaw.py
+    ``_turbine_cells``; reference yaw_misalignment.py:352-420) on
+    testdata shape: power-coefficient ratio (power / ws^3) cell means
+    per (turbine, wind-speed bin, vane bin) — the table the cosine
+    fits consume. The pipeline bins in NumPy; this query states the
+    same bin rules in Spark: the first bin whose [b − 0.5, b + 0.5)
+    holds the wind speed, via F.get over a filtered bin array (NULL,
+    not an ANSI error, outside every bin), and F.round-to-width vane
+    binning (half away from zero in both engines on the x.5 lattice),
+    then one hash aggregate to cell grain."""
     ev = _t(spark, sf_dir, "events").where(F.col("value").isNotNull())
     ws = F.col("value") % 15
     s = ev.select(

@@ -77,9 +77,6 @@ SLOW_TESTS = {
     "test_streaming.py::test_stream_cdc_apply_maintains_table",
     "test_streaming.py::test_stream_drift_monitor_matches_batch_psi",
     "test_streaming.py::test_stream_near_dedup_across_batches",
-    "test_yaw_eya.py::test_batched_equals_per_sim",
-    "test_yaw_eya.py::test_recovers_injected_offsets",
-    "test_yaw_eya.py::test_uq_mode",
 }
 
 

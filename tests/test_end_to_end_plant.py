@@ -31,7 +31,7 @@ from openoa_spark.analysis.electrical_losses import electrical_losses
 from openoa_spark.analysis.eya import EYAEstimate, EYAGapAnalysis, OAResults
 from openoa_spark.analysis.tie import TurbineLongTermGrossEnergy
 from openoa_spark.analysis.wake_losses import WakeLosses
-from openoa_spark.analysis.yaw import StaticYawMisalignment
+from openoa_spark.analysis.yaw import StaticYawMisalignment, _mad_keep, _power_bins
 from openoa_spark.operators import filters
 from openoa_spark.plant import PlantData
 from tests.windfixtures import make_end_to_end_plant
@@ -158,25 +158,32 @@ def test_end_to_end_six_pipelines(spark, plant, tables):
 
 
 def test_yaw_power_bin_filter_matches_bin_filter(plant):
-    """The yaw filter's one-pass sorted median/MAD keeps exactly the rows
-    that the general bounded-memory ``filters.bin_filter`` keeps, on
-    groups larger than the bracket median's whole-group cap (5000
-    rows), for two (max_power_filter, mad) draws batched as two sims."""
+    """The yaw filter's NumPy median/MAD keeps exactly the rows that the
+    general bounded-memory ``filters.bin_filter`` keeps, on groups
+    larger than the bracket median's whole-group cap (5000 rows), for
+    two (max_power_filter, mad) draws batched as two sims."""
     yaw = StaticYawMisalignment(plant)
     pairs = [(0.95, 7.0), (0.92, 4.0)]
-    base = yaw._base(spread=False)
-    biggest = (
-        yaw._power_binned(base, [m for m, _ in pairs])
-        .where(F.col("_pbin").isNotNull())
-        .groupBy("_mpf", "asset_id", "_pbin").count()
-        .agg(F.max("count")).first()[0]
-    )
-    assert biggest > 5000
-    kept = yaw._kept([
+    p = yaw._params([
         {"sim": i, "mpf": m, "mad": d, "bseed": None}
         for i, (m, d) in enumerate(pairs)
     ])
-    n_base = base.count()
+    base = yaw._rows()
+    rows = base.toPandas()
+    biggest, kept = 0, []
+    for _, g in rows.groupby("asset_id"):
+        ws, pw = g["WMET_HorWdSpd"].to_numpy(), g["WTUR_W"].to_numpy()
+        cap = float(g["rated_power"].iat[0])
+        for bins in _power_bins(pw, cap, p):
+            biggest = max(biggest, np.bincount(bins[bins >= 0]).max())
+        keep = _mad_keep(ws, pw, cap, p)
+        kept.append(pd.DataFrame({
+            "sim": np.repeat(p["sim"], len(g)),
+            "asset_id": np.tile(g["asset_id"].to_numpy(), len(p["sim"])),
+            "_t": np.tile(g["_t"].to_numpy(), len(p["sim"])),
+        })[keep.ravel()])
+    kept = pd.concat(kept)
+    assert biggest > 5000
     cap = F.col("rated_power")
     for i, (mpf, mad) in enumerate(pairs):
         bin_width_frac = (mpf - yaw.min_power_filter) / yaw.num_power_bins
@@ -191,10 +198,10 @@ def test_yaw_power_bin_filter_matches_bin_filter(plant):
             direction="all", keys=["asset_id"],
             bin_min_col=F.lit(0.0), bin_max_col=F.lit(float(yaw.num_power_bins)),
             flag_col="_flag",
-        ).where(~F.col("_flag")).select("asset_id", "time").toPandas()
-        new = kept.where(F.col("sim") == i).select("asset_id", "time").toPandas()
-        assert 0 < len(old) < n_base, (mpf, mad)
-        key = ["asset_id", "time"]
+        ).where(~F.col("_flag")).select("asset_id", "_t").toPandas()
+        new = kept[kept["sim"] == i][["asset_id", "_t"]]
+        assert 0 < len(old) < len(rows), (mpf, mad)
+        key = ["asset_id", "_t"]
         pd.testing.assert_frame_equal(
             new.sort_values(key, ignore_index=True),
             old.sort_values(key, ignore_index=True),
